@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — driver runs this per round at sf0.1 (BASELINE.md).
   *
   * Each registered query is fully materialized through the `noop` sink:
@@ -39,10 +37,6 @@ object Bench {
     if (v >= 9.95) "%.0f".formatLocal(java.util.Locale.ROOT, v)
     else "%.1f".formatLocal(java.util.Locale.ROOT, v)
 
-  /** Render the one-line JSON metric — factored out so InvariantsSpec can
-    * assert the exact line main prints PARSES as JSON, sums correctly, and
-    * fits the driver's tail window. `extra` lands before the closing brace
-    * (the file form appends reps + per-query spread). */
   /** JSON string escape (backslash, quote, control chars) — the `sf`
     * value comes from an env var, and an unescaped quote/backslash in it
     * would make the whole line (and bench_out.json) unparseable, silently
@@ -157,109 +151,6 @@ object Bench {
     }
   }
 
-  /** Per-task metric accumulator (r15 verdict #1): shuffle read/write
-    * bytes and memory+disk spill, summed across every task the sweep
-    * runs. Listener events post asynchronously on the listener bus, so a
-    * query's last task-end rows can land a beat after its clock stops —
-    * adjacent-query bleed of one task's bytes is accepted measurement
-    * noise (the sweep is serial and the signal sought is a 10× premium,
-    * not a kilobyte). */
-  private class TaskTelemetryListener extends org.apache.spark.scheduler.SparkListener {
-    import java.util.concurrent.atomic.AtomicLong
-    val shuffleRead = new AtomicLong
-    val shuffleWrite = new AtomicLong
-    val spill = new AtomicLong
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-      }
-    }
-    def snapshot: (Long, Long, Long) =
-      (shuffleRead.get, shuffleWrite.get, spill.get)
-  }
-
-  /** Bytes on disk under THIS JVM's Spark scratch roots (the block
-    * manager's own local dirs: shuffle files + localCheckpoint disk
-    * blocks) — the direct measure of the r15 verdict #2 "is scratch ever
-    * pruned mid-sweep" question. Roots come from the live SparkEnv via
-    * [[org.apache.spark.graftshim.SparkEnvShim]], never a tmpdir glob: a
-    * pattern scan over java.io.tmpdir would fold every CONCURRENT Spark
-    * process's churn into this sweep's per-query ledger (review r16).
-    * Walk failures (a file the cleaner deletes mid-walk) are skipped,
-    * never thrown. */
-  def localDirBytes(): Long = {
-    import java.nio.file._
-    var total = 0L
-    org.apache.spark.graftshim.SparkEnvShim.localDirs.foreach { root =>
-      try Files.walkFileTree(root.toPath, new SimpleFileVisitor[Path] {
-        override def visitFile(f: Path, a: attribute.BasicFileAttributes): FileVisitResult = {
-          total += a.size(); FileVisitResult.CONTINUE
-        }
-        override def visitFileFailed(f: Path, e: java.io.IOException): FileVisitResult =
-          FileVisitResult.CONTINUE
-      }) catch { case _: Exception => }
-    }
-    total
-  }
-
-  /** The in-sweep attribution trigger (r15 verdict #1): a query re-runs
-    * its stage probes AT ITS OWN SWEEP SLOT iff its min is a HARD band
-    * crossing and a probe decomposition is registered for it. Factored
-    * out of main so the trigger is machine-checked (InvariantsSpec) —
-    * the path fires only on anomalous sweeps, which a healthy session
-    * never produces. Fires regardless of the canary: even on a saturated
-    * host the at-slot stage split is exactly the evidence wanted, and
-    * the violation tiers downstream still classify the sweep. */
-  def shouldProbeInSweep(name: String, minSec: Double,
-                         hasProbe: String => Boolean): Boolean =
-    minSec > HardViolationFactor * bandHi(name) && hasProbe(name)
-
-  /** The one probe the post-sweep reference pass runs by default — the
-    * query whose driver-host premium is under adjudication (r14→r16). */
-  val DefaultStageRef = "qe62_cert_embed"
-
-  /** Post-sweep stage-probe selection (r16 verdict #6): with the r16
-    * in-sweep instrument in place (probes re-run AT a violating query's
-    * own slot), running EVERY registered probe post-sweep every sweep
-    * double-counts — the artifact carried two full stage maps for qe62
-    * on violating sweeps and burned probe time on healthy ones. The
-    * post-sweep pass now runs ONE scheduled reference probe (the
-    * adjudicated query, keeping a healthy-baseline stage split on every
-    * sweep's record); SPARK_GRAFT_BENCH_STAGE_REF widens it (comma
-    * prefixes, or "all" for the pre-r17 every-probe pass). */
-  def stageRefs(registered: Seq[String], refEnv: Option[String]): Seq[String] = {
-    val sorted = registered.sorted
-    refEnv match {
-      case Some("all") => sorted
-      case Some(s) =>
-        val ps = s.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-        sorted.filter(n => ps.exists(n.startsWith))
-      case None =>
-        if (sorted.contains(DefaultStageRef)) Seq(DefaultStageRef)
-        else sorted.take(1)
-    }
-  }
-
-  /** Sweep-order permutation (r16 verdict #1b): the qe62 driver-host GC
-    * premium appears at ~slot 144 of the sorted sweep — whether it
-    * follows the SLOT (sweep-accumulated allocation: codegen cache,
-    * broadcast cleanup) or the QUERY (the family's own allocation burst)
-    * is exactly one permutation run apart. SPARK_GRAFT_BENCH_HOIST moves
-    * every query matching a comma-separated prefix list to the FRONT of
-    * the sorted order (stable within each part); the artifact records
-    * the flag so a hoisted sweep can never be mistaken for a baseline
-    * read. */
-  def orderNames(sorted: Seq[String], hoist: Option[Seq[String]]): Seq[String] =
-    hoist match {
-      case None => sorted
-      case Some(ps) =>
-        val (first, rest) = sorted.partition(n => ps.exists(n.startsWith))
-        first ++ rest
-    }
-
   /** True median: even-length inputs average the two middle values —
     * `sorted(n/2)` alone is the UPPER middle, which at reps=2 reports the
     * WORST run as "the median" (a bimodal 1s/28s GC spike would record a
@@ -270,6 +161,10 @@ object Bench {
     else (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2.0
   }
 
+  /** Render the one-line JSON metric — factored out so InvariantsSpec can
+    * assert the exact line main prints PARSES as JSON, sums correctly, and
+    * fits the driver's tail window. `extra` lands before the closing brace
+    * (the file form appends reps + per-query spread). */
   def renderLine(results: Seq[(String, Double)], sfDir: String,
                  fmt: Double => String, key: String => String,
                  extra: String = "",
@@ -406,132 +301,15 @@ object Bench {
     // fast single-query iteration; unset = the driver's full sweep
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-    // SPARK_GRAFT_BENCH_HOIST=qe62 front-loads a family for the
-    // slot-vs-query attribution experiment (r16 verdict #1) — see
-    // orderNames; recorded in the artifact as "hoist"
-    val hoist = sys.env.get("SPARK_GRAFT_BENCH_HOIST")
-      .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-    val names = orderNames(
-      SparkEntry.queries.keys.toSeq.sorted
-        .filter(n => only.forall(_.exists(n.startsWith))), hoist)
-    // stage-probe runner shared by the post-sweep attribution pass and
-    // the r16 IN-SWEEP pass: construction of the probe's shared inputs
-    // runs guarded (a probe that cannot construct records a -1 row,
-    // never crashes main), each stage under the same clearCache+gc
-    // discipline as execOnce so stages don't serve each other's cache
-    def timeStages(n: String,
-                   mk: (SparkSession, String) => Seq[(String, () => org.apache.spark.sql.DataFrame)])
-        : Seq[(String, Double)] = {
-      val built =
-        try mk(spark, sfDir)
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] stage probe $n failed to construct: ${e.getMessage}")
-          Seq("__construct" -> (() => throw e))
-        }
-      built.map { case (label, thunk) =>
-        // SAME reset as execOnce — clearCache alone leaves localCheckpoint
-        // blocks (persistent RDDs outside the SQL cache) on disk, and a
-        // probe stage that checkpoints would land its retained scratch in
-        // the NEXT query's disk_delta baseline, perturbing the very
-        // accumulation telemetry the in-sweep probes exist to read
-        // (ADVICE r16)
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        System.gc()
-        val t0 = System.nanoTime()
-        try {
-          thunk().write.format("noop").mode("overwrite").save()
-          label -> (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] stage $n/$label failed: ${e.getMessage}")
-          label -> -1.0
-        }
-      }
-    }
-
-    // JVM telemetry hooks (r15 verdict #1): GC-time, task shuffle/spill
-    // bytes, scratch-dir footprint — sampled at every query's boundaries
-    // so a premium that the wall clock alone cannot localize is
-    // attributable from the artifact without a re-run
-    val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-    def gcMillis: Long = {
-      var t = 0L
-      gcBeans.forEach(b => t += math.max(0L, b.getCollectionTime))
-      t
-    }
-    // per-collector split (r16 verdict #1a): "16 s of GC on a 258 MB
-    // live heap" is unresolvable from the aggregate — collector + count
-    // tells minor-churn (many young collections: allocation-rate
-    // pressure) apart from full-heap events (old/concurrent collections:
-    // heap-sizing pressure). Classification is by bean NAME ("Young"/
-    // "Scavenge"/"Copy" → young; everything else — G1 Old/Concurrent,
-    // MarkSweep — old), and the artifact records the live bean names so
-    // the split is self-describing on any collector.
-    def gcByKind: (Long, Long, Long, Long) = {
-      var yms = 0L; var yn = 0L; var oms = 0L; var on = 0L
-      gcBeans.forEach { b =>
-        val t = math.max(0L, b.getCollectionTime)
-        val n = math.max(0L, b.getCollectionCount)
-        val name = b.getName
-        if (name.contains("Young") || name.contains("Scavenge") ||
-          name.contains("Copy")) { yms += t; yn += n }
-        else { oms += t; on += n }
-      }
-      (yms, yn, oms, on)
-    }
-    val gcNames = {
-      val ns = collection.mutable.ArrayBuffer.empty[String]
-      gcBeans.forEach(b => ns += b.getName)
-      ns.toSeq
-    }
-    val taskTel = new TaskTelemetryListener
-    spark.sparkContext.addSparkListener(taskTel)
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => only.forall(_.exists(n.startsWith)))
 
     // per-query 1-min load sample taken just BEFORE each query's reps:
     // the start/end pair bounds the sweep, but attributing a single hot
-    // query (the r13 qe62 driver-vs-builder question) needs the ambient
-    // reading at that query's own slot in the sweep
-    val insweepStages = collection.mutable.ArrayBuffer
-      .empty[(String, Seq[(String, Double)])]
-    val sweep = names.map { n =>
-      val ld = loadAvg
-      val gc0 = gcMillis
-      val (y0ms, y0n, o0ms, o0n) = gcByKind
-      val (r0, w0, sp0) = taskTel.snapshot
-      val d0 = localDirBytes()
-      val t = exec(n)
-      // post-query settle BEFORE the closing samples: drop this query's
-      // references and collect, so `disk` reads RETAINED growth (what the
-      // query left behind after a full reset — the accumulation signal)
-      // and `heap` reads live driver heap, not collectable garbage
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-      val gc1 = gcMillis
-      val (y1ms, y1n, o1ms, o1n) = gcByKind
-      val (r1, w1, sp1) = taskTel.snapshot
-      val d1 = localDirBytes()
-      val rt = Runtime.getRuntime
-      // columns 7-11 (r17): the per-collector split + committed heap —
-      // appended, so existing readers' indices stay valid
-      val tel = Seq(gc1 - gc0, r1 - r0, w1 - w0, sp1 - sp0, d1 - d0,
-        rt.totalMemory - rt.freeMemory,
-        y1ms - y0ms, y1n - y0n, o1ms - o0ms, o1n - o0n, rt.totalMemory)
-      // IN-SWEEP attribution (r15 verdict #1): the post-sweep probes
-      // exonerated qe62's plan while the in-sweep min read 10× — the
-      // missing measurement was the same stages AT the query's own sweep
-      // slot. On a hard band violation, re-run this query's stage probes
-      // IMMEDIATELY, before the next query perturbs the context. Probe
-      // cost lands outside every query's reps, so medians/mins stay pure.
-      if (shouldProbeInSweep(n, t._3, SparkEntry.stageProbes.contains))
-        insweepStages += n -> timeStages(n, SparkEntry.stageProbes(n))
-      (n, t, ld, tel)
-    }
-    val loadsPerQ = sweep.map { case (n, _, ld, _) => n -> ld }
-    val telPerQ = sweep.map { case (n, _, _, tel) => n -> tel }
-    val timed4 = sweep.map { case (n, t, _, _) => n -> t }
+    // query needs the ambient reading at that query's own slot
+    val sweep = names.map(n => (n, loadAvg, exec(n)))
+    val loadsPerQ = sweep.map { case (n, ld, _) => n -> ld }
+    val timed4 = sweep.map { case (n, _, t) => n -> t }
     val results = timed4.map { case (n, (med, _, _, _)) => n -> med }
     val spreads = timed4.map { case (n, (_, sp, _, _)) => n -> sp }
     val mins = timed4.map { case (n, (_, _, mn, _)) => n -> mn }
@@ -541,27 +319,21 @@ object Bench {
     // an oversized line loses its HEAD — the {"metric":"total",... part —
     // and the round's bench silently parses to null. stdout therefore
     // keys each query by its unique id prefix with the constant leading
-    // 'q' stripped ("01", "e13b" — see shortKey) at decisecond precision
-    // (109 queries fit with headroom; centiseconds no longer did);
+    // 'q' stripped ("01", "e13b" — see shortKey) at decisecond precision;
     // bench_out.json below keeps full names and full precision and is
     // the authoritative record.
     val keyed = if (results.map(r => shortKey(r._1)).distinct.size == results.size)
       shortKey else identity[String] _ // collision → full names, never ambiguity
-    // fit|apply split in the DRIVER-PARSED line (r13 verdict #1): total
-    // seconds the sweep spent executing artifact fits — 0.0 on a warm
-    // store; a cold store shows exactly the one-time anchor cost that
-    // would otherwise masquerade as ambient. Bare seconds (~11 chars):
-    // the per-query fit map and count live in bench_out.json, and the
-    // tail-window budget (InvariantsSpec) is too tight for more at 164
-    // queries. stdout also keys sf by BASENAME for the same budget;
-    // bench_out.json keeps the full directory.
+    // fit|apply split in the stdout line: total seconds the sweep
+    // spent executing artifact fits — 0.0 on a warm store; a cold store
+    // shows exactly the one-time anchor cost that would otherwise
+    // masquerade as ambient. The per-query fit map lives in
+    // bench_out.json; stdout keys sf by BASENAME for the tail-window
+    // budget, bench_out.json keeps the full directory.
     val fitTotal = fits.map(_._2).sum
-    // band violations (r14 verdict #2): per-query MIN against the family
-    // band — the machine-readable form of "this one query is anomalous".
-    // Judged on the min because medians inflate under ambient load; a
-    // query whose CHEAPEST of 3 warm reps exceeds its family band is a
-    // real regression or a host pathology — the canary gate below tells
-    // those apart.
+    // band violations: per-query MIN against the family band, judged on
+    // the min because medians inflate under ambient load; the canary gate
+    // tells a real regression from a host pathology.
     val (canaryMin, violations, marginal, suppressed) = violationGate(mins)
     val sfShort = java.nio.file.Paths.get(sfDir).getFileName.toString
     // "omit":N appears only when the tail window forced dropping entries
@@ -570,23 +342,6 @@ object Bench {
       s""","fit":${deci(fitTotal)},"viol":${violations.size}""" +
         (if (omitted > 0) s""","omit":$omitted""" else "")
     println(stdoutLine(results, sfShort, keyed, fitExtraFor))
-    // stage-attribution pass (r14 verdict #1, narrowed r17 per r16
-    // verdict #6): materialize each apply-path stage separately and
-    // record its wall clock — the instrument that names WHERE a per-rep
-    // premium lives when the per-query total alone cannot. Runs after
-    // the sweep so probe cost never pollutes the measured medians; same
-    // reset discipline as execOnce so stages don't serve each other's
-    // cache. Since r17 only the scheduled REFERENCE probe runs here
-    // (see stageRefs) — the in-sweep pass above is the attribution
-    // instrument for anomalies.
-    // a BLANK env value (an unset template variable) reads as unset, not
-    // as "run no reference probe" — the per-sweep healthy baseline must
-    // survive harness quirks (review r17)
-    val refNames = stageRefs(
-      SparkEntry.stageProbes.keys.toSeq.filter(names.contains),
-      sys.env.get("SPARK_GRAFT_BENCH_STAGE_REF").map(_.trim).filter(_.nonEmpty))
-    val stages = refNames
-      .map(n => n -> timeStages(n, SparkEntry.stageProbes(n)))
     // the full-precision line lands in a clean file — the authoritative
     // record for regression tracking; it also carries the rep count and the
     // per-query (max-min) spread across reps so environment noise is
@@ -613,8 +368,7 @@ object Bench {
     val loadEnd = loadAvg
     val loads = s"${fmtLoad(loadStart)},${fmtLoad(loadEnd)}"
     // machine-readable band record: every query's band_hi plus the
-    // violations list (query, offending min, band) — BENCH_r{N} diffs
-    // instead of spreadsheets. The stage map carries the attribution pass.
+    // violations list (query, offending min, band)
     val bandJson = names.map(n => "\"" + n + "\":" + bandHi(n).toString)
       .mkString("{", ",", "}")
     def violList(vs: Seq[(String, Double)]): String = vs
@@ -628,33 +382,9 @@ object Bench {
     // mins stay available for the judge
     val canaryExtra =
       s""","canary_min":$canaryMin,"violations_marginal":${violList(marginal)},"violations_suppressed":${violList(suppressed)}"""
-    def stagesJsonOf(ss: Seq[(String, Seq[(String, Double)])]): String =
-      ss.map { case (n, st) =>
-        "\"" + n + "\":" + st.map { case (l, v) => "\"" + l + "\":" + v.toString }
-          .mkString("{", ",", "}")
-      }.mkString("{", ",", "}")
-    val stagesJson = stagesJsonOf(stages)
-    // the r16 in-sweep probe results: same shape as "stages" but timed AT
-    // the violating query's own sweep slot — empty on a violation-free
-    // sweep. telemetry: per-query [gc_ms, shuffle_read_bytes,
-    // shuffle_write_bytes, spill_bytes, retained_disk_delta_bytes,
-    // live_heap_bytes] (legend in telemetry_cols), the r15 verdict #1
-    // attribution record.
-    val stagesInsweepJson = stagesJsonOf(insweepStages.toSeq)
-    val telJson = telPerQ.map { case (n, t) =>
-      "\"" + n + "\":" + t.mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val telCols =
-      """["gc_ms","sh_read","sh_write","spill","disk_delta","heap","gc_young_ms","gc_young_n","gc_old_ms","gc_old_n","heap_committed"]"""
-    // the live collector names + the hoist flag (when set) make the
-    // per-collector split and a permuted sweep self-describing
-    val gcNamesJson = gcNames.map(n => "\"" + jsonEscape(n) + "\"")
-      .mkString("[", ",", "]")
-    val hoistExtra = hoist.map(ps => ps.map(p => "\"" + jsonEscape(p) + "\"")
-      .mkString(""","hoist":[""", ",", "]")).getOrElse("")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
       renderLine(results, sfDir, _.toString, identity,
-        extra = s""","reps":$reps,"load_avg":[$loads],"spread":$spreadJson,"min":$minJson,"fit":$fitJson,"load":$loadJson,"band_hi":$bandJson,"violations":$violJson$canaryExtra,"stages":$stagesJson,"stages_insweep":$stagesInsweepJson,"telemetry_cols":$telCols,"gc_collectors":$gcNamesJson,"telemetry":$telJson$hoistExtra""") + "\n")
+        extra = s""","reps":$reps,"load_avg":[$loads],"spread":$spreadJson,"min":$minJson,"fit":$fitJson,"load":$loadJson,"band_hi":$bandJson,"violations":$violJson$canaryExtra""") + "\n")
     spark.stop()
   }
 }

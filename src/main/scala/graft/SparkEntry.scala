@@ -35,12 +35,6 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     registry.collect { case (n, _, Some(sql)) => n -> sql }.toMap
 
-  /** Stage-level decompositions of the widest certificate queries for the
-    * bench attribution pass — see [[graft.queries.Extensions.stageProbes]].
-    * Keys must be registered query names (guarded in InvariantsSpec). */
-  def stageProbes: Map[String, (SparkSession, String) => Seq[(String, () => DataFrame)]] =
-    Extensions.stageProbes
-
   /** Exact-anchor → registered scale-twin pairings. The left side of each
     * pair is an EXACT form that is deliberately quadratic (all-pairs or
     * hot-key self-join) and exists as driver-checkable ground truth; the

@@ -59,8 +59,11 @@ object ScalarOps {
   /** T5 — render a timestamp in the reference's ISO-8601 Z wire format. */
   def isoFormat(ts: Column): Column = date_format(ts, IsoFmt)
 
-  /** T6 — parse the reference's ISO-8601 Z wire format. */
-  def isoParse(s: Column): Column = to_timestamp(s, IsoFmt)
+  /** T6 — parse the reference's ISO-8601 Z wire format. An unparseable
+    * string yields NULL, never an error, under ANSI mode too: the
+    * consumers flag such a row `parsed = false` rather than stopping
+    * their streaming query. */
+  def isoParse(s: Column): Column = try_to_timestamp(s, lit(IsoFmt))
 
   /** T8 — JSON pointer extract with sentinel default
     * (ref `src/modules/dd/consumer.cpp:124-131`, default 888.8). */

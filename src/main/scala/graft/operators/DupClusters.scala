@@ -135,6 +135,10 @@ object DupClusters {
     * Returns (cluster, keep_id, n_members, best_q). */
   def survivorsByQuality(members: DataFrame, quality: DataFrame,
                          qualityCol: String): DataFrame = {
+    val qType = quality.schema(qualityCol).dataType
+    require(qType.isInstanceOf[org.apache.spark.sql.types.NumericType],
+      s"survivorsByQuality: quality column '$qualityCol' must be numeric " +
+        s"(a count or score; the highest value survives), got ${qType.simpleString}")
     // r18: ONE join + ONE aggregation. The r17 shape still join-backed on
     // (cluster, best_q) to break argmax ties and so had to checkpoint the
     // keyed frame for its two consumers; the tie-break now rides the SAME
@@ -143,7 +147,7 @@ object DupClusters {
     // Quality is NEGATED, never the doc id, so ids stay TYPE-AGNOSTIC
     // (string ids order lexically, exactly like the min_id fallback; the
     // old -doc_id trick threw under ANSI for string ids). Quality columns
-    // are numeric scores by contract (every caller passes a count/score);
+    // are numeric scores by contract (required above);
     // rows with NULL quality are excluded from the argmax by the when()
     // guard — same as max()'s null skipping — and ride the min_id
     // fallback below. Guide §2.4: two operations keyed the same way share
@@ -160,7 +164,7 @@ object DupClusters {
     // identities on every ordinary value.
     val isIntegral = {
       import org.apache.spark.sql.types._
-      quality.schema(qualityCol).dataType match {
+      qType match {
         case ByteType | ShortType | IntegerType | LongType => true
         case _ => false
       }

@@ -2170,55 +2170,4 @@ object Extensions {
         .orderBy("doc_id")
     }, Some("""WITH d AS (SELECT doc_id, doc_id // 4 AS g FROM documents WHERE (doc_id // 4) % 5 = 3 OR doc_id % 20 = 5 OR doc_id % 20 = 9) SELECT doc_id, CASE CAST(g % 3 AS INTEGER) WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind, doc_id % 20 IN (5, 9) AS seen, CAST(CASE WHEN doc_id % 20 IN (5, 9) THEN 0 WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END AS INTEGER) AS is_kept FROM d ORDER BY doc_id"""))
   )
-
-  /** Stage-level decompositions for the bench attribution pass (r14
-    * verdict #1: BENCH_r14 recorded qe62 at min 28.2 s/rep with `fit: 0.0`
-    * on the driver host vs ~3.5 s builder-warm on identical code — a
-    * RECURRING apply-path premium the per-query wall clock cannot
-    * localize). Each entry splits a registered query into its apply-path
-    * stages; `graft.Bench` materializes every stage separately through the
-    * noop sink right after the query's own reps and lands the per-stage
-    * seconds in bench_out.json (`"stages"`), so the next driver sweep
-    * names the stage that carries any premium — persisted-anchor parquet
-    * read vs live SRP-blocked join vs claim join vs frozen-equality scan —
-    * instead of re-litigating it from totals. Thunks, not DataFrames:
-    * each STAGE's construction does eager work (getOrFit ready-checks,
-    * dim inference, checkpoints) that belongs inside that stage's clock —
-    * only the probe's shared inputs (table handles, footer row counts)
-    * are resolved up front at probe-construction time, outside every
-    * clock and guarded by Bench against a construction failure. */
-  val stageProbes: Map[String, (SparkSession, String) => Seq[(String, () => DataFrame)]] = Map(
-    "qe62_cert_embed" -> ((s: SparkSession, d: String) => {
-      val emb = Engine.Tables(s, d).embeddings
-      val nH = Engine.parquetRowCount(s, s"$d/embeddings.parquet")
-      def exactPairs = Dedup.persistedEmbeddingNearDups(
-        emb, s"$d/embeddings.parquet", "vec_id", "embedding", EmbThr)
-        .select("da", "db")
-      Seq(
-        // the persisted exact-cosine pair anchor, parquet read-back only
-        "anchor_pairs_scan" -> (() => exactPairs),
-        // the LIVE SRP-blocked candidate+verify path (the claim under test)
-        "blocked_live" -> (() => Dedup.embeddingNearDupsBlocked(
-          emb, "vec_id", "embedding", EmbThr, nHint = nH).select("da", "db")),
-        // persisted inline-fit semdedup classification, read-back only
-        "semdedup_apply" -> (() => Dedup.persistedSemanticDedup(
-          emb, s"$d/embeddings.parquet", "vec_id", "embedding", EmbThr,
-          nlist = 8, nHint = nH)),
-        // persisted exact-CC drop set, read-back only
-        "cc_drops_scan" -> (() => graft.Artifacts.getOrFit(s, "cosine_cc_drops",
-          graft.Artifacts.fitKey(s, Seq(s"$d/embeddings.parquet"), s"t$EmbThr"),
-          DupClusters.clusters(exactPairs)
-            .filter(col("doc_id") =!= col("cluster")).select(col("doc_id").as("id")))),
-        // live frozen apply at persisted centroids + full-join equality
-        "frozen_equality" -> (() => semdedupFrozenEquality(s, d)))
-    }),
-    "qe58c_containment_agreement" -> ((s: SparkSession, d: String) => {
-      val docs = Engine.Tables(s, d).documents
-      def anchor = Dedup.persistedContainmentPairs(docs, s"$d/documents.parquet", 3, 0.5)
-      Seq(
-        "anchor_pairs_scan" -> (() => anchor),
-        // bounded-k sketch probe + per-pair agreement join (the live path)
-        "sketch_agreement" -> (() => Dedup.containmentAgreementFrom(
-          anchor, docs, 3, 64, 0.5)))
-    }))
 }

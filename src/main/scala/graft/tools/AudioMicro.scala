@@ -3,9 +3,9 @@ package graft.tools
 import graft.Engine
 
 /** Dev-only: single-thread microbenchmark of the audio decode+hash kernel
-  * off the Spark execution path (r18 optimization round) — separates
-  * per-clip decode cost from Spark framework cost, which the stage-level
-  * AudioProbe cannot. `runMain graft.tools.AudioMicro [sfDir]` */
+  * off the Spark execution path — separates per-clip decode cost from
+  * Spark framework cost, which a per-query wall clock cannot.
+  * `runMain graft.tools.AudioMicro [sfDir]` */
 object AudioMicro {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")

@@ -288,77 +288,35 @@ class InvariantsSpec extends SparkTestBase {
   }
 
   test("stage probes name registered queries and land parseable in the file form") {
+    // the per-query band record is what remains of the stage probes: every
+    // entry the violation gate writes names a registered query, and a HARD
+    // crossing fires exactly on the r14 anomaly shape (qe62 min 28.2 vs
+    // band 12, hard at 15) — its healthy read (4.4) and a crossing inside
+    // the 1.25x hard factor (14.0) must not
     val qs = SparkEntry.queries.keySet
-    assert(SparkEntry.stageProbes.nonEmpty)
-    SparkEntry.stageProbes.keys.foreach { n =>
-      assert(qs.contains(n), s"stage probe $n is not a registered query")
+    val (_, hard, marginal, _) = Bench.violationGate(Seq(
+      "q01_project" -> 0.5, "qe62_cert_embed" -> 28.16))
+    assert(hard.map(_._1) == Seq("qe62_cert_embed") && marginal.isEmpty)
+    (hard ++ marginal).foreach { case (n, _) =>
+      assert(qs.contains(n), s"violation $n is not a registered query")
     }
-    // the in-sweep trigger (r16): fires exactly on a HARD crossing of a
-    // probe-registered query — the r14 anomaly shape (qe62 min 28.2 vs
-    // band 12, hard at 15) must fire; its healthy r16 reads (4.4) and a
-    // hard crossing WITHOUT a registered probe (qe40) must not
-    val probes = SparkEntry.stageProbes.contains _
-    assert(Bench.shouldProbeInSweep("qe62_cert_embed", 28.16, probes))
-    assert(!Bench.shouldProbeInSweep("qe62_cert_embed", 4.38, probes))
-    assert(!Bench.shouldProbeInSweep("qe62_cert_embed", 14.0, probes),
-      "inside the 1.25x hard factor must not fire")
-    assert(!Bench.shouldProbeInSweep("qe40_pipeline_gated", 3.88, probes),
-      "a hard crossing without a registered probe has nothing to run")
-    // the stages/band/violations extras must keep bench_out.json valid
+    val (_, hardOk, margOk, _) = Bench.violationGate(Seq(
+      "q01_project" -> 0.5, "qe62_cert_embed" -> 4.38))
+    assert(hardOk.isEmpty && margOk.isEmpty)
+    val (_, hardEdge, margEdge, _) = Bench.violationGate(Seq(
+      "q01_project" -> 0.5, "qe62_cert_embed" -> 14.0))
+    assert(hardEdge.isEmpty, "inside the 1.25x hard factor must not fire")
+    assert(margEdge.map(_._1) == Seq("qe62_cert_embed"))
+    // the band/violations extras must keep bench_out.json valid
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val fileLine = Bench.renderLine(Seq("q01_project" -> 1.0), "/x", _.toString, identity,
-      extra = ""","band_hi":{"q01_project":2.5},"violations":[{"q":"qe62_cert_embed","min":28.16,"band_hi":10.0}],"canary_min":0.56,"violations_marginal":[],"violations_suppressed":[],"stages":{"qe62_cert_embed":{"anchor_pairs_scan":1.2,"blocked_live":0.8}},"stages_insweep":{"qe62_cert_embed":{"blocked_live":41.2}},"telemetry_cols":["gc_ms","sh_read","sh_write","spill","disk_delta","heap","gc_young_ms","gc_young_n","gc_old_ms","gc_old_n","heap_committed"],"gc_collectors":["G1 Young Generation","G1 Old Generation"],"telemetry":{"q01_project":[12,1024,2048,0,-300,900000,10,4,2,0,1073741824]},"hoist":["qe62"]""")
+      extra = ""","band_hi":{"q01_project":2.5},"violations":[{"q":"qe62_cert_embed","min":28.16,"band_hi":10.0}],"canary_min":0.56,"violations_marginal":[],"violations_suppressed":[]""")
     val node = om.readTree(fileLine)
     assert(node.get("band_hi").get("q01_project").asDouble == 2.5)
     assert(node.get("violations").get(0).get("q").asText == "qe62_cert_embed")
     assert(node.get("canary_min").asDouble == 0.56)
     assert(node.get("violations_suppressed").size == 0)
     assert(node.get("violations_marginal").size == 0)
-    assert(node.get("stages").get("qe62_cert_embed").get("blocked_live").asDouble == 0.8)
-    // r16: the in-sweep attribution map and the per-query JVM telemetry
-    // rows (negative disk deltas — the cleaner reclaiming a predecessor's
-    // scratch — must stay representable)
-    assert(node.get("stages_insweep").get("qe62_cert_embed").get("blocked_live").asDouble == 41.2)
-    assert(node.get("telemetry").get("q01_project").get(4).asLong == -300L)
-    // r17: the per-collector split + committed heap append as columns
-    // 7-11 (existing readers' indices stay valid), the collector names
-    // and the order-permutation flag ride as top-level fields
-    assert(node.get("telemetry_cols").size == 11)
-    assert(node.get("telemetry").get("q01_project").get(10).asLong == 1073741824L)
-    assert(node.get("gc_collectors").get(0).asText == "G1 Young Generation")
-    assert(node.get("hoist").get(0).asText == "qe62")
-  }
-
-  test("post-sweep stage pass runs ONE scheduled reference probe; env widens (r17)") {
-    // r16 verdict #6: the in-sweep pass is the attribution instrument;
-    // the post-sweep pass keeps a single healthy-baseline reference so
-    // artifact readers never double-count a violating query's stages
-    val regs = Seq("qe58c_containment_agreement", "qe62_cert_embed")
-    assert(Bench.stageRefs(regs, None) == Seq("qe62_cert_embed"))
-    assert(Bench.stageRefs(regs, Some("all")) == regs.sorted)
-    assert(Bench.stageRefs(regs, Some("qe58c")) ==
-      Seq("qe58c_containment_agreement"))
-    // the default reference must fall back, not vanish, if qe62's probe
-    // is ever retired
-    assert(Bench.stageRefs(Seq("qe58c_containment_agreement"), None) ==
-      Seq("qe58c_containment_agreement"))
-    assert(Bench.stageRefs(regs, Some("zzz")).isEmpty)
-    // the adjudicated default is a registered probe TODAY — retiring it
-    // should be a conscious edit here, not silent drift
-    assert(SparkEntry.stageProbes.contains(Bench.DefaultStageRef))
-  }
-
-  test("hoist permutation front-loads matching prefixes, stable order, identity when unset (r17)") {
-    val sorted = Seq("q01_project", "qe13_dup_clusters", "qe62_cert_embed",
-      "qe62b_cert_embed_frozen", "qe63_cert_hll")
-    assert(Bench.orderNames(sorted, None) == sorted)
-    assert(Bench.orderNames(sorted, Some(Seq("qe62"))) ==
-      Seq("qe62_cert_embed", "qe62b_cert_embed_frozen",
-        "q01_project", "qe13_dup_clusters", "qe63_cert_hll"))
-    // multiple prefixes union; an unmatched prefix changes nothing
-    assert(Bench.orderNames(sorted, Some(Seq("qe63", "zzz"))) ==
-      Seq("qe63_cert_hll", "q01_project", "qe13_dup_clusters",
-        "qe62_cert_embed", "qe62b_cert_embed_frozen"))
   }
 
   test("bench median is a true median (even reps average the middles); hostile sfDir escapes") {
@@ -371,5 +329,32 @@ class InvariantsSpec extends SparkTestBase {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = om.readTree(line)
     assert(node.get("sf").asText() == """C:\data\"sf"""")
+  }
+
+  test("no top-level object/class FQN is defined in both src/main and src/test") {
+    // a test-tree definition with a main-tree FQN shadows the main one on
+    // the test classpath: `Test/runMain` and `runMain` then run different
+    // code under the same name
+    val pkgRe = """^package\s+(?!object\b)([\w.]+)""".r
+    val defRe = """^(?:(?:final|sealed|abstract|case|private|protected|implicit)(?:\[\w+\])?\s+)*(?:object|class|trait)\s+(\w+)""".r
+    def fqns(root: String): Map[String, String] = {
+      import scala.jdk.CollectionConverters._
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try files.iterator.asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+        var pkg = Seq.empty[String]
+        java.nio.file.Files.readAllLines(f).asScala.flatMap { line =>
+          pkgRe.findFirstMatchIn(line).foreach(m => pkg = pkg :+ m.group(1))
+          defRe.findFirstMatchIn(line).map(m =>
+            (pkg :+ m.group(1)).mkString(".") -> f.toString)
+        }
+      }.toMap finally files.close()
+    }
+    val main = fqns("src/main/scala")
+    val test = fqns("src/test/scala")
+    assert(main.contains("graft.Bench") && test.contains("graft.InvariantsSpec"),
+      "the scan must see both trees")
+    val both = main.keySet.intersect(test.keySet)
+    assert(both.isEmpty, both.toSeq.sorted.map(n => s"$n: ${main(n)} / ${test(n)}")
+      .mkString("defined in both trees: ", "; ", ""))
   }
 }

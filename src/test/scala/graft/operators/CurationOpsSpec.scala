@@ -1281,6 +1281,21 @@ class CurationOpsSpec extends SparkTestBase {
       s"expected best-q tie to break to the smallest id, got ${got.toSeq}")
   }
 
+  test("survivorsByQuality refuses a non-numeric quality column at the call site") {
+    import spark.implicits._
+    // the argmax negates the quality, which under ANSI fails deep in
+    // analysis for a string column — the contract check must fire first,
+    // before any plan is built, and name the column and its type
+    val members = Seq((1L, 1L), (2L, 1L)).toDF("doc_id", "cluster")
+    val quality = Seq((1L, "high"), (2L, "low")).toDF("doc_id", "q")
+    val e = intercept[IllegalArgumentException](
+      graft.operators.DupClusters.survivorsByQuality(members, quality, "q"))
+    assert(e.getMessage.contains("'q' must be numeric") &&
+      e.getMessage.contains("string"), e.getMessage)
+    intercept[IllegalArgumentException](graft.operators.DupClusters
+      .keepBestCopy(members.select("doc_id"), members, quality, "q"))
+  }
+
   test("bandBuckets refuses a bands count that does not divide k") {
     import spark.implicits._
     val docs = Seq((1L, "a b c d")).toDF("doc_id", "text")

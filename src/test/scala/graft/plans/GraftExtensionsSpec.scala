@@ -129,4 +129,46 @@ class GraftExtensionsSpec extends SparkTestBase {
         s"int-array cosine must stay numerically correct, got $got want $want")
     } finally spark.experimental.extraOptimizations = Nil
   }
+
+  test("production wiring: spark.sql.extensions = graft.plans.GraftExtensions " +
+    "resolves the SQL functions and injects the rewrite in a fresh session") {
+    import org.apache.spark.sql.SparkSession
+    // Spark reads spark.sql.extensions from the running context's conf
+    // when it builds a session; SparkEnv.conf is that same object. Set the
+    // key, build a fresh session exactly the way a deployment would, then
+    // restore the key and the shared session for the suites that follow.
+    val shared = spark // forces the shared context up before reading its conf
+    val key = "spark.sql.extensions"
+    val conf = org.apache.spark.SparkEnv.get.conf
+    val before = conf.getOption(key)
+    conf.set(key, "graft.plans.GraftExtensions")
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val wired = try SparkSession.builder().getOrCreate() finally {
+      before.fold(conf.remove(key))(conf.set(key, _))
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
+    assert(wired ne shared)
+    Engine.Tables(wired, Sf0001).embeddings.limit(10)
+      .createOrReplaceTempView("emb_wired")
+    val c = wired.sql("SELECT cosine_sim(a.embedding, b.embedding) FROM emb_wired a, " +
+      "emb_wired b WHERE a.vec_id = 0 AND b.vec_id = 1").head().getDouble(0)
+    assert(c >= -1 && c <= 1)
+    val others = wired.sql(
+      """SELECT dot_product(embedding, embedding) AS d,
+        |       srp_buckets(embedding, 2, 4, 64, 42)[0] AS b,
+        |       token_entropy(array('a','a','b')).entropy AS e,
+        |       repetition_stats(array('a','a','b')).dup_word_frac AS r
+        |FROM emb_wired WHERE vec_id = 0""".stripMargin).head()
+    assert(others.getDouble(0) > 0 && !others.isNullAt(1) &&
+      others.getDouble(2) > 0 && others.getDouble(3) > 0, others.toString)
+    // the optimizer rule rides the same wiring
+    val hof = wired.table("emb_wired").limit(3)
+      .select(VectorOps.cosine(col("embedding"), col("embedding")).as("c"))
+    val fused = hof.queryExecution.optimizedPlan.collect { case n =>
+      n.expressions.flatMap(_.collect { case e: CosineSim => e }) }.flatten
+    assert(fused.nonEmpty,
+      s"rule not injected:\n${hof.queryExecution.optimizedPlan.treeString.take(1500)}")
+  }
 }

@@ -33,6 +33,23 @@ class MqttLikeSpec extends SparkTestBase {
       assert(rows.map(_.getAs[Long]("msg_seq")).toSeq == (0L until 5L))
       assert(rows.forall(_.getAs[String]("topic") == "sensors/dd"))
     } finally q.stop()
+
+    // a backlog past one planner split (1,000 seqs per partition) reads
+    // as several partitions and still yields every msg_seq exactly once
+    val bulk = java.nio.file.Files.createTempDirectory("mqtt_bulk").toString
+    val n = 2500
+    (0 until n).foreach(i => MqttLike.publish(bulk, "sensors/bulk", s"""{"i": $i}"""))
+    val bq = spark.readStream.format("graft-mqtt")
+      .option("spoolDir", bulk).option("topic", "sensors/bulk").load()
+      .withColumn("pid", spark_partition_id())
+      .writeStream.format("memory").queryName("mq_bulk")
+      .outputMode(OutputMode.Append()).start()
+    try bq.processAllAvailable() finally bq.stop()
+    val bulkRows = spark.table("mq_bulk").collect()
+    assert(bulkRows.map(_.getAs[Long]("msg_seq")).sorted.toSeq == (0L until n.toLong),
+      "backlog must read contiguous, no loss, no duplication")
+    assert(bulkRows.map(_.getAs[Int]("pid")).distinct.length == 3,
+      "a 2,500-message backlog plans as 3 partitions")
   }
 
   test("concurrent publishers: no message lost or overwritten, seqs stay dense") {

@@ -72,10 +72,13 @@ class PipelinesSpec extends SparkTestBase {
       // valid JSON but NO timestamp: chParse's contract (ts required) —
       // publishing it would emit an enriched payload with no ts field
       """{"temp_outdoor_celsius": 25.0}""",
-      """not a json""").toDF("payload")
+      """not a json""",
+      // well-formed JSON whose timestamp does not parse: flagged, never
+      // an error (under ANSI an error would stop the module's query)
+      """{"timestamp_utc": "not-a-time", "temp_outdoor_celsius": 25.0}""").toDF("payload")
     val parsed = Pipelines.ddConsumer(payloads)
     val (good, dead) = Pipelines.deadLetterSplit(parsed, col("parsed"))
-    assert(good.count() == 2 && dead.count() == 2)
+    assert(good.count() == 2 && dead.count() == 3)
     val row2 = good.filter(col("temp_indoor_celsius") === 22.9).head()
     assert(row2.getAs[Double]("temp_outdoor_celsius") == 888.8)
     assert(row2.getAs[Double]("rh_outdoor") == 888.8)
@@ -90,10 +93,11 @@ class ChParseSpec extends SparkTestBase {
       """{"timestamp": "2024-12-23T16:00:00Z", "temp_celsius": 21.9}""",
       "garbage",                                    // no JSON at all
       """{"temp_celsius": 21.9}""",                 // timestamp missing
-      """{"timestamp": "2024-12-23T16:00:01Z"}"""   // temp missing
+      """{"timestamp": "2024-12-23T16:00:01Z"}""",  // temp missing
+      """{"timestamp": "not-a-time", "temp_celsius": 21.9}""" // bad ts
     ).toDF("payload")).collect()
     assert(rows.map(_.getAs[Boolean]("parsed")).toSeq ==
-      Seq(true, false, false, false))
+      Seq(true, false, false, false, false))
     // round-not-truncate preserved through the shared parse
     assert(rows(0).getAs[Int]("raw_tenths") == 219)
     // module shape: the filter(parsed) side renders a full payload

@@ -3,8 +3,8 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 /** Measures the approximate family's actual recall/error at a given SF so
-  * the registered certificate floors (qe60–qe64) are set from evidence,
-  * not hope. Run:
+  * the registered certificate floors (qe60–qe64, qe66) are set from
+  * evidence, not hope. Run:
   *   sbt -batch "Test/runMain graft.tools.CertProbe /root/testdata/sf0.01"
   */
 object CertProbe {
@@ -54,6 +54,19 @@ object CertProbe {
     val a = sem.select("id", "cell", "keep_id", "is_kept").collect().map(_.toString).toSet
     val b = froz.select("id", "cell", "keep_id", "is_kept").collect().map(_.toString).toSet
     println(s"[cert $d] frozen disagree = ${(a diff b).size + (b diff a).size}")
+
+    // in-sample blocked-pair recall (qe66's floor): exact pairs among the
+    // 1-in-4 md5-mod sample vs the full blocked run restricted to it
+    val thr = graft.queries.Extensions.EmbThr
+    def inSample(c: org.apache.spark.sql.Column) = Sampling.modSample(c, 4)
+    val exSamp = Dedup.embeddingNearDups(emb.filter(inSample(col("vec_id"))),
+        "vec_id", "embedding", thr)
+      .select("da", "db").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val blSamp = Dedup.embeddingNearDupsBlocked(emb, "vec_id", "embedding", thr, nHint = nH)
+      .filter(inSample(col("da")) && inSample(col("db")))
+      .select("da", "db").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    println(s"[cert $d] sampled pairs=${exSamp.size} blocked recall = " +
+      s"${if (exSamp.isEmpty) 1.0 else (exSamp & blSamp).size.toDouble / exSamp.size}")
 
     // LSH jaccard pair recall
     val exJ = Dedup.jaccardPairs(docs, 3, 0.5).select("da", "db")
