@@ -39,12 +39,11 @@ object Artifacts {
   val fitNanos = new java.util.concurrent.atomic.AtomicLong(0)
   val fitCount = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Artifact root. Resolution order: session conf `spark.graft.artifacts.dir`,
-    * env `SPARK_GRAFT_ARTIFACTS_DIR`, then `spark-warehouse/graft_artifacts`
-    * (CWD-relative, beside Spark's own default warehouse; gitignored). */
+  /** Artifact root: session conf `spark.graft.artifacts.dir`, else
+    * `spark-warehouse/graft_artifacts` (CWD-relative, beside Spark's own
+    * default warehouse; gitignored). */
   def root(spark: SparkSession): String =
     spark.conf.getOption("spark.graft.artifacts.dir")
-      .orElse(sys.env.get("SPARK_GRAFT_ARTIFACTS_DIR"))
       .getOrElse("spark-warehouse/graft_artifacts")
 
   /** Fingerprint of the files backing a fit: md5 over the sorted

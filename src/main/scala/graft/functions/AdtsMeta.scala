@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -42,12 +39,25 @@ import org.apache.spark.unsafe.types.UTF8String
   * shape every pre-ID3v2 tagger wrote), tolerated and excluded from the
   * frame walk. Any other violation yields NULL, never a guess.
   * One codegen'd call per row; bytes read in place. */
-object AdtsHeader {
+object AdtsHeader extends MetaParser {
 
   /** sampling_frequency_index table — ISO 13818-7 table 35. */
   private val Rates = Array(96000, 88200, 64000, 48000, 44100, 32000,
     24000, 22050, 16000, 12000, 11025, 8000, 7350)
   private val Profiles = Array("Main", "LC", "SSR", "LTP")
+
+  val name = "adts_meta"
+
+  /** `adts_meta(payload)` → struct<mime string, profile string,
+    * sample_rate int, channels int, n_frames int, duration_ms bigint>,
+    * null for unrecognized payloads. */
+  val schema: StructType = StructType(Seq(
+    StructField("mime", StringType, nullable = false),
+    StructField("profile", StringType, nullable = false),
+    StructField("sample_rate", IntegerType, nullable = false),
+    StructField("channels", IntegerType, nullable = false),
+    StructField("n_frames", IntegerType, nullable = false),
+    StructField("duration_ms", LongType, nullable = false)))
 
   def compute(b: Array[Byte]): InternalRow = {
     val r = parse(b)
@@ -100,35 +110,4 @@ object AdtsHeader {
     (Profiles(profile), Rates(sfIdx), if (chCfg == 7) 8 else chCfg,
       frames, samples * 1000L / Rates(sfIdx))
   }
-}
-
-/** `adts_meta(payload)` → struct<mime string, profile string,
-  * sample_rate int, channels int, n_frames int, duration_ms bigint>,
-  * null for unrecognized payloads — see [[AdtsHeader]]. */
-case class AdtsMetaExpr(child: Expression) extends BinaryMetaExpr {
-  override def dataType: DataType = StructType(Seq(
-    StructField("mime", StringType, nullable = false),
-    StructField("profile", StringType, nullable = false),
-    StructField("sample_rate", IntegerType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("n_frames", IntegerType, nullable = false),
-    StructField("duration_ms", LongType, nullable = false)))
-  override def fnName: String = "adts_meta"
-  override def computeClassName: String = "graft.functions.AdtsHeader"
-  override protected def compute(b: Array[Byte]): InternalRow =
-    AdtsHeader.compute(b)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object AdtsMetaExpr {
-  /** Column-level entry point. */
-  def adts_meta(payload: Column): Column =
-    ColumnShim.column(AdtsMetaExpr(ColumnShim.expression(payload)))
-
-  /** SQL registration on an existing session (production wiring goes
-    * through [[graft.plans.GraftExtensions]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    BinaryMetaExpr.register(spark, "adts_meta", AdtsMetaExpr(_))
 }

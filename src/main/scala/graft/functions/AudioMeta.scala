@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -32,9 +29,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * non-PCM WAV format tags other than IEEE float, unnormalized/overflowing
   * extended floats) yields NULL, never a guess. One codegen'd call per row;
   * bytes are read in place. */
-object AudioHeader {
+object AudioHeader extends MetaParser {
 
   import ByteReads.{be16, be32, fourcc, le16, le32}
+
+  val name = "audio_meta"
+
+  /** `audio_meta(payload)` → struct<mime string, channels int, sample_rate
+    * int, bits int, n_frames bigint>, null for unrecognized payloads. */
+  val schema: StructType = StructType(Seq(
+    StructField("mime", StringType, nullable = false),
+    StructField("channels", IntegerType, nullable = false),
+    StructField("sample_rate", IntegerType, nullable = false),
+    StructField("bits", IntegerType, nullable = false),
+    StructField("n_frames", LongType, nullable = false)))
 
   /** Parse (mime, channels, sample_rate, bits, n_frames) from container
     * header bytes; null if not a recognized, intact audio header. */
@@ -108,15 +116,16 @@ object AudioHeader {
   }
 
   private def parseWav(b: Array[Byte]): (String, Int, Int, Int, Long) = {
-    var off = 12
+    val c = new ByteReads.Chunks(b, 12, b.length, bigEndian = false)
     var channels = -1; var rate = -1; var bits = -1; var blockAlign = -1
     var dataSize = -1L; var spbAdpcm = -1
     // header-only scan: the "data" chunk's declared size is the stream
     // length (a streaming reader never needs the sample bytes in hand),
     // but every chunk header and the whole fmt payload must be present
-    while (off + 8 <= b.length && (dataSize < 0 || channels < 0)) {
-      val size = le32(b, off + 4) & 0xFFFFFFFFL
-      if (fourcc(b, off, "fmt ")) {
+    while ((dataSize < 0 || channels < 0) && c.next()) {
+      val off = c.off
+      val size = c.size
+      if (c.is("fmt ")) {
         if (size < 16 || off + 8 + 16 > b.length) return null
         val tag = le16(b, off + 8)
         // PCM (1), MS ADPCM (2), IEEE float (3), G.711 A-law (6) /
@@ -180,13 +189,9 @@ object AudioHeader {
             return null
           spbAdpcm = f.samplesPerBlock
         }
-      } else if (fourcc(b, off, "data")) {
+      } else if (c.is("data")) {
         dataSize = size
       }
-      // advance in Long space: a near-u32-max declared size must end the
-      // walk, not wrap Int into a negative index
-      val next = off.toLong + 8L + size + (size & 1L)
-      off = if (next > b.length) b.length else next.toInt
     }
     if (channels <= 0 || rate <= 0 || bits <= 0 || blockAlign <= 0 || dataSize < 0)
       return null
@@ -199,12 +204,12 @@ object AudioHeader {
   }
 
   private def parseAiff(b: Array[Byte], aifc: Boolean): (String, Int, Int, Int, Long) = {
-    var off = 12
-    while (off + 8 <= b.length) {
-      val size = be32(b, off + 4) & 0xFFFFFFFFL
-      if (fourcc(b, off, "COMM")) {
-        if (size < 18 || off + 8 + 18 > b.length) return null
-        val p = off + 8
+    val c = new ByteReads.Chunks(b, 12, b.length, bigEndian = true)
+    while (c.next()) {
+      val size = c.size
+      if (c.is("COMM")) {
+        val p = c.body
+        if (size < 18 || p + 18 > b.length) return null
         // AIFC appends a compressionType fourcc to COMM: "NONE"
         // (uncompressed PCM) and "ima4" (Apple IMA ADPCM, decoded for
         // real by [[Ima4]] — its COMM fields KEEP their standard
@@ -233,8 +238,6 @@ object AudioHeader {
           return null
         return ("audio/aiff", channels, rate, bits, frames)
       }
-      val next = off.toLong + 8L + size + (size & 1L)
-      off = if (next > b.length) b.length else next.toInt
     }
     null
   }
@@ -260,34 +263,4 @@ object AudioHeader {
     if (v <= 0 || v > Int.MaxValue) -1 else v.toInt
   }
 
-}
-
-/** `audio_meta(payload)` → struct<mime string, channels int, sample_rate
-  * int, bits int, n_frames bigint>, null for unrecognized payloads — see
-  * [[AudioHeader]]. */
-case class AudioMetaExpr(child: Expression) extends BinaryMetaExpr {
-  override def dataType: DataType = StructType(Seq(
-    StructField("mime", StringType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("sample_rate", IntegerType, nullable = false),
-    StructField("bits", IntegerType, nullable = false),
-    StructField("n_frames", LongType, nullable = false)))
-  override def fnName: String = "audio_meta"
-  override def computeClassName: String = "graft.functions.AudioHeader"
-  override protected def compute(b: Array[Byte]): InternalRow =
-    AudioHeader.compute(b)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object AudioMetaExpr {
-  /** Column-level entry point. */
-  def audio_meta(payload: Column): Column =
-    ColumnShim.column(AudioMetaExpr(ColumnShim.expression(payload)))
-
-  /** SQL registration on an existing session (production wiring goes
-    * through [[graft.plans.GraftExtensions]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    BinaryMetaExpr.register(spark, "audio_meta", AudioMetaExpr(_))
 }

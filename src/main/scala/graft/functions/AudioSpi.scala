@@ -11,11 +11,11 @@ import javax.sound.sampled.spi.{AudioFileReader, FormatConversionProvider}
   * the JDK re-enters on EVERY call — measured on the audio-dedup decode
   * stage as a lock convoy: 5000 tiny clips decoded in 0.64 s on ONE core
   * but 1.21 s wall on 32 (negative scaling; OPTIMIZATION_r18.md). The
-  * providers themselves are stateless parser singletons (AudioSystem
-  * hands the same cached instances to every thread), so resolving them
-  * ONCE per JVM via the public `ServiceLoader` SPI and iterating directly
-  * is behavior-identical — same reader objects, same decode, same
-  * refusal semantics — without the global lock per clip.
+  * providers themselves are stateless parsers, so resolving them ONCE
+  * per JVM via the public `ServiceLoader` SPI and iterating directly
+  * gives the same provider classes, the same decode and the same
+  * refusals — without the global lock per clip. (ServiceLoader makes its
+  * own instances; AudioSystem keeps a separate cache.)
   *
   * Reader order is irrelevant for correctness here: the JDK's WAV/AIFF/AU
   * readers accept disjoint magic bytes, and each refusal leaves the
@@ -23,19 +23,20 @@ import javax.sound.sampled.spi.{AudioFileReader, FormatConversionProvider}
   * ByteArrayInputStream (stricter than AudioSystem's shared mark/reset). */
 object AudioSpi {
 
-  private lazy val readers: Array[AudioFileReader] = {
-    val it = java.util.ServiceLoader.load(classOf[AudioFileReader]).iterator()
-    val buf = scala.collection.mutable.ArrayBuffer.empty[AudioFileReader]
+  /** Every provider of `cls` visible to the class loader that defined
+    * this object — an explicit loader, so the snapshot does not depend on
+    * the context class loader of whichever thread touches it first. */
+  private def load[S](cls: Class[S]): Array[S] = {
+    val it = java.util.ServiceLoader.load(cls, getClass.getClassLoader).iterator()
+    val buf = scala.collection.mutable.ArrayBuffer.empty[S]
     while (it.hasNext) buf += it.next()
-    buf.toArray
+    buf.toArray(scala.reflect.ClassTag[S](cls))
   }
 
-  private lazy val converters: Array[FormatConversionProvider] = {
-    val it = java.util.ServiceLoader.load(classOf[FormatConversionProvider]).iterator()
-    val buf = scala.collection.mutable.ArrayBuffer.empty[FormatConversionProvider]
-    while (it.hasNext) buf += it.next()
-    buf.toArray
-  }
+  private lazy val readers: Array[AudioFileReader] = load(classOf[AudioFileReader])
+
+  private lazy val converters: Array[FormatConversionProvider] =
+    load(classOf[FormatConversionProvider])
 
   /** First reader that accepts the bytes, as an open stream — the
     * `AudioSystem.getAudioInputStream(InputStream)` contract minus the
@@ -55,19 +56,17 @@ object AudioSpi {
 
   /** `AudioSystem.getAudioInputStream(targetEncoding, ais)` minus the
     * synchronized provider walk: the source stream when it already
-    * carries the encoding, the first supporting converter's stream
-    * otherwise, null when no converter supports it (the caller's refuse
-    * branch). */
+    * carries the encoding, else the stream of the FIRST converter that
+    * supports the conversion. Null when none supports it, and null (with
+    * `ais` closed) when that converter throws: it may have consumed part
+    * of the stream, so no other converter is tried on what is left. */
   def convert(target: AudioFormat.Encoding, ais: AudioInputStream): AudioInputStream = {
     if (ais.getFormat.getEncoding == target) return ais
     var i = 0
-    while (i < converters.length) {
-      val c = converters(i)
-      if (c.isConversionSupported(target, ais.getFormat))
-        try return c.getAudioInputStream(target, ais)
-        catch { case _: Exception => () }
+    while (i < converters.length && !converters(i).isConversionSupported(target, ais.getFormat))
       i += 1
-    }
-    null
+    if (i == converters.length) return null
+    try converters(i).getAudioInputStream(target, ais)
+    catch { case _: Exception => ais.close(); null }
   }
 }

@@ -34,7 +34,7 @@ import org.apache.spark.sql.types._
   * matrices. Anything else — wrong NAL type, reserved values, a bitstream
   * exhausted mid-field — yields NULL, never a guess. The payload decode
   * itself stays behind [[graft.operators.Multimodal.FakeCodec]]. */
-object AvcSpsHeader {
+object AvcSpsHeader extends MetaParser {
 
   /** Profiles whose SPS carries the chroma_format_idc block. */
   private val HighFamily = Set(100, 110, 122, 244, 44, 83, 86, 118, 128, 138, 139, 134, 135)
@@ -89,6 +89,16 @@ object AvcSpsHeader {
     }
     out.toByteArray
   }
+
+  val name = "avc_sps_dims"
+
+  /** `avc_sps_dims(payload)` → struct<profile_idc int, level_idc int,
+    * width int, height int>, null for non-SPS payloads. */
+  val schema: StructType = StructType(Seq(
+    StructField("profile_idc", IntegerType, nullable = false),
+    StructField("level_idc", IntegerType, nullable = false),
+    StructField("width", IntegerType, nullable = false),
+    StructField("height", IntegerType, nullable = false)))
 
   def compute(b: Array[Byte]): InternalRow = {
     val r = parse(b)
@@ -234,40 +244,12 @@ object AvcSpsHeader {
   }
 }
 
-/** `avc_sps_dims(payload)` → struct<profile_idc int, level_idc int,
-  * width int, height int>, null for non-SPS payloads — see
-  * [[AvcSpsHeader]]. */
-case class AvcSpsDimsExpr(child: Expression) extends BinaryMetaExpr {
-  override def dataType: DataType = StructType(Seq(
-    StructField("profile_idc", IntegerType, nullable = false),
-    StructField("level_idc", IntegerType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false)))
-  override def fnName: String = "avc_sps_dims"
-  override def computeClassName: String = "graft.functions.AvcSpsHeader"
-  override protected def compute(b: Array[Byte]): InternalRow =
-    AvcSpsHeader.compute(b)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object AvcSpsDimsExpr {
-  /** Column-level entry point. */
-  def avc_sps_dims(payload: Column): Column =
-    ColumnShim.column(AvcSpsDimsExpr(ColumnShim.expression(payload)))
-
-  /** SQL registration on an existing session (production wiring goes
-    * through [[graft.plans.GraftExtensions]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    BinaryMetaExpr.register(spark, "avc_sps_dims", AvcSpsDimsExpr(_))
-}
 
 /** `avc_sps_fixture(profile, level, width, height)` → binary SPS NAL —
   * the deterministic planted-corpus builder ([[AvcSpsHeader.buildSps]])
   * as a codegen expression, so the qe5j corpus is a shuffle-free
   * projection like every other synthetic media corpus. Fixture-tier: the
-  * certified artifact is the PARSER ([[AvcSpsDimsExpr]]). */
+  * certified artifact is the PARSER ([[AvcSpsHeader]]). */
 case class AvcSpsFixtureExpr(p: Expression, l: Expression, w: Expression, h: Expression)
     extends QuaternaryExpression {
   override def first: Expression = p

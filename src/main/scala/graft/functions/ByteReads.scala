@@ -1,10 +1,10 @@
 package graft.functions
 
-/** Shared endian byte readers for the container-header parsers
-  * (AudioMeta / ImageDims / VideoMeta — and the MJPEG-AVI walker in
-  * operators). ONE definition each: a masking or bounds fix cannot
-  * silently drift between parsers (three verbatim private copies did
-  * exist, and a bug fixed in one would have missed the others).
+/** Shared endian byte readers and the RIFF/IFF chunk walker for the
+  * container parsers and decoders (AudioMeta / ImageDims / VideoMeta / the
+  * ADPCM and extensible-WAV decoders — and the MJPEG-AVI walker in
+  * operators). ONE definition each: a masking, bounds or advance fix
+  * cannot silently drift between parsers.
   *
   * The numeric readers do NOT bounds-check — every parser validates a
   * chunk's declared length against the array before trusting any field
@@ -40,6 +40,50 @@ private[graft] object ByteReads {
   def fourcc(b: Array[Byte], off: Int, t: String): Boolean =
     off + 4 <= b.length && b(off) == t.charAt(0) && b(off + 1) == t.charAt(1) &&
       b(off + 2) == t.charAt(2) && b(off + 3) == t.charAt(3)
+
+  /** Cursor over a chunk sequence in `b[from, until)`: RIFF chunks
+    * (little-endian, `bigEndian = false`) or EA IFF 85 / AIFF chunks
+    * (big-endian). Each chunk is a 4-byte id, a u32 payload size, the
+    * payload, and one pad byte after an odd-sized payload. This is the ONE
+    * definition of that framing; every walk over untrusted RIFF/IFF bytes
+    * goes through it.
+    *
+    * [[next]] steps onto the next chunk whose 8-byte header fits before
+    * `until`, and returns false when none does. The advance runs in Long
+    * space and clamps to `until`, so a declared size past the window (or
+    * near u32 max) ends the walk instead of wrapping Int into a negative
+    * index. The payload is NOT bounds-checked: a caller validates
+    * `body + n` against the buffer before reading n payload bytes. */
+  final class Chunks(b: Array[Byte], from: Int, val until: Int, bigEndian: Boolean) {
+    private[this] var pos: Long = from
+    private[this] var at: Int = -1
+    private[this] var len: Long = -1L
+
+    /** Offset of the current chunk's 8-byte header. */
+    def off: Int = at
+    /** Offset of the current chunk's payload. */
+    def body: Int = at + 8
+    /** The current chunk's declared payload size (u32). */
+    def size: Long = len
+
+    def next(): Boolean = {
+      if (pos + 8 > until) return false
+      at = pos.toInt
+      len = (if (bigEndian) be32(b, at + 4) else le32(b, at + 4)) & 0xFFFFFFFFL
+      pos = math.min(at.toLong + 8L + len + (len & 1L), until.toLong)
+      true
+    }
+
+    /** True iff the current chunk's id is `id`. */
+    def is(id: String): Boolean = fourcc(b, at, id)
+
+    /** Cursor over the sub-chunks of the current chunk when it is
+      * LIST(`kind`), clamped to this walk's window; else null. */
+    def list(kind: String): Chunks =
+      if (is("LIST") && fourcc(b, at + 8, kind))
+        new Chunks(b, at + 12, math.min(until.toLong, at + 8L + len).toInt, bigEndian)
+      else null
+  }
 
   /** ID3 SYNCSAFE u28 at `i` (7 bits per byte, top bit of each MUST be
     * zero — a plain u32 read would overshoot 8x), or -1 when a top bit

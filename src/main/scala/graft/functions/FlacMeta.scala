@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -30,7 +27,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * formats carry the sample count in the header, no bitrate estimate
   * involved. Torn magic, a first block that is not STREAMINFO/34 bytes,
   * a truncated body, or a zero sample rate / sample count yield NULL. */
-object FlacHeader {
+object FlacHeader extends MetaParser {
+  val name = "flac_meta"
+
+  /** `flac_meta(payload)` → struct<mime string, sample_rate int,
+    * channels int, bits_per_sample int, total_samples bigint,
+    * duration_ms bigint>, null for unrecognized payloads. */
+  val schema: StructType = StructType(Seq(
+    StructField("mime", StringType, nullable = false),
+    StructField("sample_rate", IntegerType, nullable = false),
+    StructField("channels", IntegerType, nullable = false),
+    StructField("bits_per_sample", IntegerType, nullable = false),
+    StructField("total_samples", LongType, nullable = false),
+    StructField("duration_ms", LongType, nullable = false)))
 
   def compute(b: Array[Byte]): InternalRow = {
     val r = parse(b)
@@ -58,36 +67,4 @@ object FlacHeader {
     if (rate == 0 || total == 0L) return null // invalid / unknown length
     (rate, channels, bps, total, total * 1000L / rate)
   }
-}
-
-/** `flac_meta(payload)` → struct<mime string, sample_rate int,
-  * channels int, bits_per_sample int, total_samples bigint,
-  * duration_ms bigint>, null for unrecognized payloads — see
-  * [[FlacHeader]]. */
-case class FlacMetaExpr(child: Expression) extends BinaryMetaExpr {
-  override def dataType: DataType = StructType(Seq(
-    StructField("mime", StringType, nullable = false),
-    StructField("sample_rate", IntegerType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("bits_per_sample", IntegerType, nullable = false),
-    StructField("total_samples", LongType, nullable = false),
-    StructField("duration_ms", LongType, nullable = false)))
-  override def fnName: String = "flac_meta"
-  override def computeClassName: String = "graft.functions.FlacHeader"
-  override protected def compute(b: Array[Byte]): InternalRow =
-    FlacHeader.compute(b)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object FlacMetaExpr {
-  /** Column-level entry point. */
-  def flac_meta(payload: Column): Column =
-    ColumnShim.column(FlacMetaExpr(ColumnShim.expression(payload)))
-
-  /** SQL registration on an existing session (production wiring goes
-    * through [[graft.plans.GraftExtensions]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    BinaryMetaExpr.register(spark, "flac_meta", FlacMetaExpr(_))
 }

@@ -2,11 +2,8 @@ package graft.functions
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -42,7 +39,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * that is not [A-Z0-9]{4} ends the walk (corrupt region), keeping what
   * was already read. No BOM under encoding 1 decodes as the spec
   * default big-endian. */
-object Id3v2Tags {
+object Id3v2Tags extends MetaParser {
+  val name = "id3v2_tags"
+
+  /** `id3v2_tags(payload)` → struct<version string, n_frames int,
+    * title string, artist string, album string>, null when no intact
+    * ID3v2.3/2.4 tag leads the payload. Text fields are null when the
+    * corresponding frame is absent. */
+  val schema: StructType = StructType(Seq(
+    StructField("version", StringType, nullable = false),
+    StructField("n_frames", IntegerType, nullable = false),
+    StructField("title", StringType, nullable = true),
+    StructField("artist", StringType, nullable = true),
+    StructField("album", StringType, nullable = true)))
 
   def compute(b: Array[Byte]): InternalRow = {
     val r = parse(b)
@@ -129,35 +138,4 @@ object Id3v2Tags {
     val nul = s.indexOf('\u0000')
     if (nul >= 0) s.substring(0, nul) else s
   }
-}
-
-/** `id3v2_tags(payload)` → struct<version string, n_frames int,
-  * title string, artist string, album string>, null when no intact
-  * ID3v2.3/2.4 tag leads the payload — see [[Id3v2Tags]]. Text fields
-  * are null when the corresponding frame is absent. */
-case class Id3v2TagsExpr(child: Expression) extends BinaryMetaExpr {
-  override def dataType: DataType = StructType(Seq(
-    StructField("version", StringType, nullable = false),
-    StructField("n_frames", IntegerType, nullable = false),
-    StructField("title", StringType, nullable = true),
-    StructField("artist", StringType, nullable = true),
-    StructField("album", StringType, nullable = true)))
-  override def fnName: String = "id3v2_tags"
-  override def computeClassName: String = "graft.functions.Id3v2Tags"
-  override protected def compute(b: Array[Byte]): InternalRow =
-    Id3v2Tags.compute(b)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object Id3v2TagsExpr {
-  /** Column-level entry point. */
-  def id3v2_tags(payload: Column): Column =
-    ColumnShim.column(Id3v2TagsExpr(ColumnShim.expression(payload)))
-
-  /** SQL registration on an existing session (production wiring goes
-    * through [[graft.plans.GraftExtensions]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    BinaryMetaExpr.register(spark, "id3v2_tags", Id3v2TagsExpr(_))
 }

@@ -65,31 +65,29 @@ object Ima4 {
   def decode(b: Array[Byte]): Decoded = {
     if (b == null || b.length < 12 || !fourcc(b, 0, "FORM") ||
       !fourcc(b, 8, "AIFC")) return null
-    var off = 12
+    val c = new ByteReads.Chunks(b, 12, b.length, bigEndian = true)
     var ch = -1; var rate = -1; var frames = -1L
     var dataOff = -1; var dataLen = -1L
-    while (off + 8 <= b.length && (dataOff < 0 || ch < 0)) {
-      val size = be32(b, off + 4) & 0xFFFFFFFFL
-      if (fourcc(b, off, "COMM")) {
+    while ((dataOff < 0 || ch < 0) && c.next()) {
+      val size = c.size
+      val p = c.body
+      if (c.is("COMM")) {
         // PCM fields + the AIFC compressionType fourcc: 22 bytes minimum
-        if (size < 22 || off + 8 + 22 > b.length) return null
-        val p = off + 8
+        if (size < 22 || p + 22 > b.length) return null
         if (!fourcc(b, p + 18, "ima4")) return null
         ch = be16(b, p)
         frames = be32(b, p + 2) & 0xFFFFFFFFL
         if (be16(b, p + 6) != 16) return null // ima4 is declared 16-bit
         rate = AudioHeader.extended80(b, p + 8)
-      } else if (fourcc(b, off, "SSND")) {
-        if (size < 8 || off + 8 + 8 > b.length) return null
-        val skip = be32(b, off + 8) & 0xFFFFFFFFL // offset field
-        dataOff = off + 16
+      } else if (c.is("SSND")) {
+        if (size < 8 || p + 8 > b.length) return null
+        val skip = be32(b, p) & 0xFFFFFFFFL // offset field
+        dataOff = p + 8
         dataLen = size - 8 - skip
         if (dataLen <= 0 || dataOff + skip + dataLen > b.length)
           return null
         dataOff = (dataOff + skip).toInt
       }
-      val next = off.toLong + 8L + size + (size & 1L)
-      off = if (next > b.length) b.length else next.toInt
     }
     if (ch <= 0 || rate <= 0 || frames <= 0 || dataOff < 0) return null
     if (!validGeometry(ch, dataLen, frames)) return null

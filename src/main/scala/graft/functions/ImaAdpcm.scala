@@ -87,12 +87,13 @@ object ImaAdpcm {
   def decode(b: Array[Byte]): Decoded = {
     if (b == null || b.length < 12 || !fourcc(b, 0, "RIFF") ||
       !fourcc(b, 8, "WAVE")) return null
-    var off = 12
+    val c = new ByteReads.Chunks(b, 12, b.length, bigEndian = false)
     var ch = -1; var rate = -1; var blockAlign = -1; var spb = -1
     var dataOff = -1; var dataLen = -1
-    while (off + 8 <= b.length && (dataOff < 0 || ch < 0)) {
-      val size = le32u(b, off + 4)
-      if (fourcc(b, off, "fmt ")) {
+    while ((dataOff < 0 || ch < 0) && c.next()) {
+      val off = c.off
+      val size = c.size
+      if (c.is("fmt ")) {
         // tag-17 fmt must carry cbSize >= 2 with samplesPerBlock: 20 bytes
         if (size < 20 || off + 8 + 20 > b.length) return null
         if (le16(b, off + 8) != 17) return null
@@ -103,13 +104,11 @@ object ImaAdpcm {
         val cb = le16(b, off + 24)
         if (bits != 4 || cb < 2) return null
         spb = le16(b, off + 26)
-      } else if (fourcc(b, off, "data")) {
-        dataOff = off + 8
+      } else if (c.is("data")) {
+        dataOff = c.body
         if (size > Int.MaxValue || dataOff + size > b.length) return null
         dataLen = size.toInt
       }
-      val next = off.toLong + 8L + size + (size & 1L)
-      off = if (next > b.length) b.length else next.toInt
     }
     if (ch <= 0 || rate <= 0 || blockAlign <= 0 || spb <= 0 || dataOff < 0)
       return null

@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -34,9 +31,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * guess — the honest behavior for a curation gate deciding whether a
   * payload is a usable image. One codegen'd call per row, zero allocation
   * beyond the 3-field result row; the payload bytes are read in place. */
-object ImageHeader {
+object ImageHeader extends MetaParser {
 
   import ByteReads.{be16, be32, le16, le32}
+
+  val name = "image_dims"
+
+  /** `image_dims(payload)` → struct<mime string, width int, height int>,
+    * null for unrecognized payloads. */
+  val schema: StructType = StructType(Seq(
+    StructField("mime", StringType, nullable = false),
+    StructField("width", IntegerType, nullable = false),
+    StructField("height", IntegerType, nullable = false)))
 
   /** Parse (mime, width, height) from container header bytes; null if the
     * payload is not a recognized, intact image header. */
@@ -159,31 +165,4 @@ object ImageHeader {
   private def isSof(m: Int): Boolean =
     m >= 0xC0 && m <= 0xCF && m != 0xC4 && m != 0xC8 && m != 0xCC
 
-}
-
-/** `image_dims(payload)` → struct<mime string, width int, height int>,
-  * null for unrecognized payloads — see [[ImageHeader]]. */
-case class ImageDimsExpr(child: Expression) extends BinaryMetaExpr {
-  override def dataType: DataType = StructType(Seq(
-    StructField("mime", StringType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false)))
-  override def fnName: String = "image_dims"
-  override def computeClassName: String = "graft.functions.ImageHeader"
-  override protected def compute(b: Array[Byte]): InternalRow =
-    ImageHeader.compute(b)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object ImageDimsExpr {
-  /** Column-level entry point. */
-  def image_dims(payload: Column): Column =
-    ColumnShim.column(ImageDimsExpr(ColumnShim.expression(payload)))
-
-  /** SQL registration on an existing session (production wiring goes
-    * through [[graft.plans.GraftExtensions]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    BinaryMetaExpr.register(spark, "image_dims", ImageDimsExpr(_))
 }

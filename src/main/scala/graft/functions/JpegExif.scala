@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -36,8 +34,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * SOI-led JPEG at all is NULL, never a guess. A malformed TIFF body
   * (wrong magic, truncated IFD, non-SHORT orientation) contributes
   * nothing — orientation stays null rather than reading garbage. */
-object JpegExif {
+object JpegExif extends MetaParser {
   import ByteReads.be16
+
+  val name = "jpeg_exif"
+
+  /** `jpeg_exif(payload)` → struct<orientation int, byte_order string,
+    * icc_chunks int, icc_bytes bigint>, null when the payload is not
+    * SOI-led JPEG. `orientation`/`byte_order` are null when no intact
+    * Exif APP1 (or no Orientation tag) is present. */
+  val schema: StructType = StructType(Seq(
+    StructField("orientation", IntegerType, nullable = true),
+    StructField("byte_order", StringType, nullable = true),
+    StructField("icc_chunks", IntegerType, nullable = false),
+    StructField("icc_bytes", LongType, nullable = false)))
 
   def compute(b: Array[Byte]): InternalRow = {
     val r = parse(b)
@@ -138,34 +148,4 @@ object JpegExif {
     }
     (order, orient)
   }
-}
-
-/** `jpeg_exif(payload)` → struct<orientation int, byte_order string,
-  * icc_chunks int, icc_bytes bigint>, null when the payload is not
-  * SOI-led JPEG — see [[JpegExif]]. `orientation`/`byte_order` are null
-  * when no intact Exif APP1 (or no Orientation tag) is present. */
-case class JpegExifExpr(child: Expression) extends BinaryMetaExpr {
-  override def dataType: DataType = StructType(Seq(
-    StructField("orientation", IntegerType, nullable = true),
-    StructField("byte_order", StringType, nullable = true),
-    StructField("icc_chunks", IntegerType, nullable = false),
-    StructField("icc_bytes", LongType, nullable = false)))
-  override def fnName: String = "jpeg_exif"
-  override def computeClassName: String = "graft.functions.JpegExif"
-  override protected def compute(b: Array[Byte]): InternalRow =
-    JpegExif.compute(b)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object JpegExifExpr {
-  /** Column-level entry point. */
-  def jpeg_exif(payload: Column): Column =
-    ColumnShim.column(JpegExifExpr(ColumnShim.expression(payload)))
-
-  /** SQL registration on an existing session (production wiring goes
-    * through [[graft.plans.GraftExtensions]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    BinaryMetaExpr.register(spark, "jpeg_exif", JpegExifExpr(_))
 }

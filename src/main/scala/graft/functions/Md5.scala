@@ -5,28 +5,37 @@ package graft.functions
   *
   *  - `MessageDigest.getInstance` walks the JCA provider list per call;
   *    digests are cheap to RESET but not to look up, so each task thread
-  *    reuses one instance (digest() leaves it reset — the JCA contract).
+  *    reuses one instance, lent out by [[withDigest]].
   *  - `"%02x".format(b)` builds a java.util.Formatter and parses the
   *    format string PER BYTE (16 allocations per 128-bit hash); the
   *    table-driven encoder below emits the identical lowercase hex.
   */
 object Md5 {
 
-  private val tl = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
+  /** One MD5 instance per thread, plus whether it is lent out. */
+  private final class Slot {
+    val md: java.security.MessageDigest = java.security.MessageDigest.getInstance("MD5")
+    var busy = false
   }
 
-  /** A reset, thread-owned MD5 instance (never share across threads).
-    * reset() makes the contract hold even when a PREVIOUS caller threw
-    * between update() and digest() and left partial state behind —
-    * without it one swallowed decode exception would silently poison
-    * every later hash on that executor thread (review r18); it is a
-    * no-op on an already-reset digest. */
-  def digest(): java.security.MessageDigest = {
-    val md = tl.get()
-    md.reset()
-    md
+  private val tl = new ThreadLocal[Slot] {
+    override def initialValue(): Slot = new Slot
+  }
+
+  /** Run `f` with this thread's MD5 instance, reset on entry, so a
+    * previous borrower that threw between update() and digest() cannot
+    * leave partial state behind. A nested borrow on the same thread
+    * throws IllegalStateException: two hashes sharing one instance would
+    * both come out silently wrong. `f` must not keep the instance. */
+  def withDigest[A](f: java.security.MessageDigest => A): A = {
+    val s = tl.get()
+    if (s.busy) throw new IllegalStateException(
+      "Md5.withDigest: nested borrow of this thread's digest would corrupt both hashes")
+    s.busy = true
+    try {
+      s.md.reset()
+      f(s.md)
+    } finally s.busy = false
   }
 
   private val hexChars = "0123456789abcdef".toCharArray

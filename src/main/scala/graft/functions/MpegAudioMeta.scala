@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -37,7 +34,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * "Free" bitrate (index 0), invalid indexes (15 / sample-rate 3),
   * reserved version/layer bits, a truncated tag, or a missing sync yield
   * NULL, never a guess. One codegen'd call per row; bytes read in place. */
-object MpegAudioHeader {
+object MpegAudioHeader extends MetaParser {
 
   /** bitrate tables, kbps — ISO 11172-3 table B.2 / 13818-3. Row key:
     * (version, layer); index 0 ("free") and 15 are refused. */
@@ -51,6 +48,21 @@ object MpegAudioHeader {
   private val SrV1 = Array(44100, 48000, 32000)
   private val SrV2 = Array(22050, 24000, 16000)
   private val SrV25 = Array(11025, 12000, 8000)
+
+  val name = "mpeg_audio_meta"
+
+  /** `mpeg_audio_meta(payload)` → struct<mime string, layer int,
+    * bitrate_kbps int, sample_rate int, channels int, duration_ms bigint,
+    * frame_map string, n_frames bigint>, null for unrecognized payloads. */
+  val schema: StructType = StructType(Seq(
+    StructField("mime", StringType, nullable = false),
+    StructField("layer", IntegerType, nullable = false),
+    StructField("bitrate_kbps", IntegerType, nullable = false),
+    StructField("sample_rate", IntegerType, nullable = false),
+    StructField("channels", IntegerType, nullable = false),
+    StructField("duration_ms", LongType, nullable = false),
+    StructField("frame_map", StringType, nullable = false),
+    StructField("n_frames", LongType, nullable = false)))
 
   def compute(b: Array[Byte]): InternalRow = {
     val r = parse(b)
@@ -153,38 +165,4 @@ object MpegAudioHeader {
       else streamBytes * 8L / kbps
     ("audio/mpeg", layer, kbps, rate, channels, durationMs, frameMap, nFrames)
   }
-}
-
-/** `mpeg_audio_meta(payload)` → struct<mime string, layer int,
-  * bitrate_kbps int, sample_rate int, channels int, duration_ms bigint,
-  * frame_map string, n_frames bigint>, null for unrecognized payloads —
-  * see [[MpegAudioHeader]]. */
-case class MpegAudioMetaExpr(child: Expression) extends BinaryMetaExpr {
-  override def dataType: DataType = StructType(Seq(
-    StructField("mime", StringType, nullable = false),
-    StructField("layer", IntegerType, nullable = false),
-    StructField("bitrate_kbps", IntegerType, nullable = false),
-    StructField("sample_rate", IntegerType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("duration_ms", LongType, nullable = false),
-    StructField("frame_map", StringType, nullable = false),
-    StructField("n_frames", LongType, nullable = false)))
-  override def fnName: String = "mpeg_audio_meta"
-  override def computeClassName: String = "graft.functions.MpegAudioHeader"
-  override protected def compute(b: Array[Byte]): InternalRow =
-    MpegAudioHeader.compute(b)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object MpegAudioMetaExpr {
-  /** Column-level entry point. */
-  def mpeg_audio_meta(payload: Column): Column =
-    ColumnShim.column(MpegAudioMetaExpr(ColumnShim.expression(payload)))
-
-  /** SQL registration on an existing session (production wiring goes
-    * through [[graft.plans.GraftExtensions]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    BinaryMetaExpr.register(spark, "mpeg_audio_meta", MpegAudioMetaExpr(_))
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -39,7 +36,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * streams into one guessed answer), or an EOS granule whose sign bit is
   * set / whose ·1000 would overflow, all yield NULL, never a guess. One
   * codegen'd call per row; bytes read in place. */
-object OggOpusHeader {
+object OggOpusHeader extends MetaParser {
+  val name = "ogg_opus_meta"
+
+  /** `ogg_opus_meta(payload)` → struct<mime string, channels int,
+    * pre_skip int, input_sample_rate bigint, mapping_family int,
+    * n_pages int, duration_ms bigint>, null for unrecognized payloads. */
+  val schema: StructType = StructType(Seq(
+    StructField("mime", StringType, nullable = false),
+    StructField("channels", IntegerType, nullable = false),
+    StructField("pre_skip", IntegerType, nullable = false),
+    StructField("input_sample_rate", LongType, nullable = false),
+    StructField("mapping_family", IntegerType, nullable = false),
+    StructField("n_pages", IntegerType, nullable = false),
+    StructField("duration_ms", LongType, nullable = false)))
 
   def compute(b: Array[Byte]): InternalRow = {
     val r = parse(b)
@@ -123,37 +133,4 @@ object OggOpusHeader {
     (channels, preSkip, rate, family, pages,
       (lastGranule - preSkip) * 1000L / 48000L)
   }
-}
-
-/** `ogg_opus_meta(payload)` → struct<mime string, channels int,
-  * pre_skip int, input_sample_rate bigint, mapping_family int,
-  * n_pages int, duration_ms bigint>, null for unrecognized payloads —
-  * see [[OggOpusHeader]]. */
-case class OggOpusMetaExpr(child: Expression) extends BinaryMetaExpr {
-  override def dataType: DataType = StructType(Seq(
-    StructField("mime", StringType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("pre_skip", IntegerType, nullable = false),
-    StructField("input_sample_rate", LongType, nullable = false),
-    StructField("mapping_family", IntegerType, nullable = false),
-    StructField("n_pages", IntegerType, nullable = false),
-    StructField("duration_ms", LongType, nullable = false)))
-  override def fnName: String = "ogg_opus_meta"
-  override def computeClassName: String = "graft.functions.OggOpusHeader"
-  override protected def compute(b: Array[Byte]): InternalRow =
-    OggOpusHeader.compute(b)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object OggOpusMetaExpr {
-  /** Column-level entry point. */
-  def ogg_opus_meta(payload: Column): Column =
-    ColumnShim.column(OggOpusMetaExpr(ColumnShim.expression(payload)))
-
-  /** SQL registration on an existing session (production wiring goes
-    * through [[graft.plans.GraftExtensions]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    BinaryMetaExpr.register(spark, "ogg_opus_meta", OggOpusMetaExpr(_))
 }

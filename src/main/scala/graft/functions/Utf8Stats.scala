@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 
 /** Byte-level UTF-8 validity scan (RFC 3629) — the encoding-triage gate a
@@ -28,7 +25,17 @@ import org.apache.spark.sql.types._
   * maximal-subpart replacement counting, and the one a byte-level
   * cleanliness metric wants). One codegen'd call per row, zero allocation
   * beyond the 5-field result; never throws on any input. */
-object Utf8Stats {
+object Utf8Stats extends MetaParser {
+  val name = "utf8_stats"
+
+  /** `utf8_stats(payload)` → struct<valid boolean, n_bytes int, n_chars int,
+    * n_invalid int, n_ascii int>. */
+  val schema: StructType = StructType(Seq(
+    StructField("valid", BooleanType, nullable = false),
+    StructField("n_bytes", IntegerType, nullable = false),
+    StructField("n_chars", IntegerType, nullable = false),
+    StructField("n_invalid", IntegerType, nullable = false),
+    StructField("n_ascii", IntegerType, nullable = false)))
 
   /** (valid, n_bytes, n_chars, n_invalid, n_ascii): n_chars counts decoded
     * codepoints, n_ascii the subset < U+0080, n_invalid the bytes rejected
@@ -69,33 +76,4 @@ object Utf8Stats {
   private def inRange(b: Array[Byte], i: Int, lo: Int, hi: Int): Boolean = {
     val v = b(i) & 0xFF; v >= lo && v <= hi
   }
-}
-
-/** `utf8_stats(payload)` → struct<valid boolean, n_bytes int, n_chars int,
-  * n_invalid int, n_ascii int> — see [[Utf8Stats]]. */
-case class Utf8StatsExpr(child: Expression) extends BinaryMetaExpr {
-  override def dataType: DataType = StructType(Seq(
-    StructField("valid", BooleanType, nullable = false),
-    StructField("n_bytes", IntegerType, nullable = false),
-    StructField("n_chars", IntegerType, nullable = false),
-    StructField("n_invalid", IntegerType, nullable = false),
-    StructField("n_ascii", IntegerType, nullable = false)))
-  override def fnName: String = "utf8_stats"
-  override def computeClassName: String = "graft.functions.Utf8Stats"
-  override protected def compute(b: Array[Byte]): InternalRow =
-    Utf8Stats.compute(b)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object Utf8StatsExpr {
-  /** Column-level entry point. */
-  def utf8_stats(payload: Column): Column =
-    ColumnShim.column(Utf8StatsExpr(ColumnShim.expression(payload)))
-
-  /** SQL registration on an existing session (production wiring goes
-    * through [[graft.plans.GraftExtensions]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    BinaryMetaExpr.register(spark, "utf8_stats", Utf8StatsExpr(_))
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -31,9 +28,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * Anything unrecognized, truncated mid-box, or torn (a child box
   * overrunning its parent's extent) yields NULL, never a guess. One
   * codegen'd call per row; bytes are read in place. */
-object VideoHeader {
+object VideoHeader extends MetaParser {
 
-  import ByteReads.{be32, be64, fourcc}
+  import ByteReads.{be32, be64, fourcc, le32u}
+
+  val name = "video_meta"
+
+  /** `video_meta(payload)` → struct<mime string, timescale int, duration
+    * bigint, duration_ms bigint, n_tracks int>, null for unrecognized
+    * payloads. */
+  val schema: StructType = StructType(Seq(
+    StructField("mime", StringType, nullable = false),
+    StructField("timescale", IntegerType, nullable = false),
+    StructField("duration", LongType, nullable = false),
+    StructField("duration_ms", LongType, nullable = false),
+    StructField("n_tracks", IntegerType, nullable = false)))
 
   /** Parse (mime, timescale, duration, duration_ms, n_tracks) from MP4
     * header bytes; null if not a recognized, intact movie header. */
@@ -121,39 +130,30 @@ object VideoHeader {
     * refusal (both fields are u32 — the product can pass 2^63). A
     * missing or torn hdrl/avih yields null, never a guess. */
   private def parseAvi(b: Array[Byte]): (String, Int, Long, Long, Int) = {
-    import ByteReads.le32
-    def u32(i: Int): Long = le32(b, i) & 0xFFFFFFFFL
-    var off = 12
-    while (off + 8 <= b.length) {
-      val size = u32(off + 4)
-      if (fourcc(b, off, "LIST") && off + 12 <= b.length &&
-        fourcc(b, off + 8, "hdrl")) {
-        val end = math.min(b.length.toLong, off + 8L + size)
-        var p = off + 12
-        while (p + 8 <= end) {
-          val cs = u32(p + 4)
-          if (fourcc(b, p, "avih")) {
+    val top = new ByteReads.Chunks(b, 12, b.length, bigEndian = false)
+    while (top.next()) {
+      val hdrl = top.list("hdrl")
+      if (hdrl != null) {
+        while (hdrl.next()) {
+          if (hdrl.is("avih")) {
             // the header's 14 declared u32 fields must fit the chunk AND
-            // the buffer — a truncated avih reads garbage otherwise
-            if (cs < 56 || p + 8 + 56 > end) return null
-            val usPerFrame = u32(p + 8)
-            val totalFrames = u32(p + 8 + 16)
-            val streams = u32(p + 8 + 24)
+            // the LIST extent — a truncated avih reads garbage otherwise
+            val p = hdrl.body
+            if (hdrl.size < 56 || p + 56 > hdrl.until) return null
+            val usPerFrame = le32u(b, p)
+            val totalFrames = le32u(b, p + 16)
+            val streams = le32u(b, p + 24)
             if (streams > Int.MaxValue) return null
             if (usPerFrame != 0 && totalFrames > Long.MaxValue / usPerFrame)
               return null // u32·u32 can pass 2^63
             val durMs = usPerFrame * totalFrames / 1000L
             return ("video/x-msvideo", 1000, durMs, durMs, streams.toInt)
           }
-          val nxt = p.toLong + 8L + cs + (cs & 1L)
-          p = if (nxt > end) end.toInt else nxt.toInt
         }
         return null // hdrl without an avih: not a movie header we can read
       }
-      val next = off.toLong + 8L + size + (size & 1L)
-      if (next > b.length) return null
-      off = next.toInt
     }
+    // an overrunning chunk ends the clamped walk: only an hdrl LIST answers
     null
   }
 
@@ -173,34 +173,4 @@ object VideoHeader {
   private def headerLen(b: Array[Byte], off: Int): Int =
     if ((be32(b, off) & 0xFFFFFFFFL) == 1L) 16 else 8
 
-}
-
-/** `video_meta(payload)` → struct<mime string, timescale int, duration
-  * bigint, duration_ms bigint, n_tracks int>, null for unrecognized
-  * payloads — see [[VideoHeader]]. */
-case class VideoMetaExpr(child: Expression) extends BinaryMetaExpr {
-  override def dataType: DataType = StructType(Seq(
-    StructField("mime", StringType, nullable = false),
-    StructField("timescale", IntegerType, nullable = false),
-    StructField("duration", LongType, nullable = false),
-    StructField("duration_ms", LongType, nullable = false),
-    StructField("n_tracks", IntegerType, nullable = false)))
-  override def fnName: String = "video_meta"
-  override def computeClassName: String = "graft.functions.VideoHeader"
-  override protected def compute(b: Array[Byte]): InternalRow =
-    VideoHeader.compute(b)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object VideoMetaExpr {
-  /** Column-level entry point. */
-  def video_meta(payload: Column): Column =
-    ColumnShim.column(VideoMetaExpr(ColumnShim.expression(payload)))
-
-  /** SQL registration on an existing session (production wiring goes
-    * through [[graft.plans.GraftExtensions]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    BinaryMetaExpr.register(spark, "video_meta", VideoMetaExpr(_))
 }

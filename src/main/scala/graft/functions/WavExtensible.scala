@@ -82,19 +82,16 @@ object WavExtensible {
   def decode(b: Array[Byte]): Decoded = {
     if (b == null || b.length < 12) return null
     if (!fourcc(b, 0, "RIFF") || !fourcc(b, 8, "WAVE")) return null
-    var off = 12
+    val c = new ByteReads.Chunks(b, 12, b.length, bigEndian = false)
     var fmt: FmtX = null
     var dataOff = -1; var dataLen = -1L
-    while (off + 8 <= b.length && (fmt == null || dataOff < 0)) {
-      val size = le32(b, off + 4) & 0xFFFFFFFFL
-      if (fourcc(b, off, "fmt ")) {
-        fmt = parseFmtX(b, off, size)
+    while ((fmt == null || dataOff < 0) && c.next()) {
+      if (c.is("fmt ")) {
+        fmt = parseFmtX(b, c.off, c.size)
         if (fmt == null) return null // an fmt that is not extensible-valid
-      } else if (fourcc(b, off, "data")) {
-        dataOff = off + 8; dataLen = size
+      } else if (c.is("data")) {
+        dataOff = c.body; dataLen = c.size
       }
-      val next = off.toLong + 8L + size + (size & 1L)
-      off = if (next > b.length) b.length else next.toInt
     }
     if (fmt == null || dataOff < 0) return null
     if (fmt.innerTag != 1) return null // PCM only in this hash domain

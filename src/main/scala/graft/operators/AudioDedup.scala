@@ -209,25 +209,26 @@ object AudioDedup {
     // whole-clip buffer would overflow Int.MaxValue past 2^29 samples
     // (silently refusing giant-but-valid clips) and cost up to 4x the
     // raw PCM per concurrent task (review r18).
-    val md = graft.functions.Md5.digest()
     // exact-size for ordinary clips (a few hundred bytes — no 64 KiB of
     // garbage per tiny clip), capped chunk size for giant ones
     val need = 8L + p.nFrames.toLong * p.channels * 4L
     val buf = java.nio.ByteBuffer.allocate(math.min(need, 64L * 1024L).toInt)
     buf.putInt(p.channels).putInt(p.rate)
-    var i = 0
-    while (i < p.nFrames) {
-      var c = 0
-      while (c < p.channels) {
-        if (buf.remaining() < 4) { md.update(buf.array(), 0, buf.position()); buf.clear() }
-        buf.putInt(p.sample(i, c))
-        c += 1
+    val hash = graft.functions.Md5.withDigest { md =>
+      var i = 0
+      while (i < p.nFrames) {
+        var c = 0
+        while (c < p.channels) {
+          if (buf.remaining() < 4) { md.update(buf.array(), 0, buf.position()); buf.clear() }
+          buf.putInt(p.sample(i, c))
+          c += 1
+        }
+        i += 1
       }
-      i += 1
+      md.update(buf.array(), 0, buf.position())
+      graft.functions.Md5.hex(md.digest())
     }
-    md.update(buf.array(), 0, buf.position())
-    AudioSig(-1L, p.channels, p.rate, p.nFrames,
-      graft.functions.Md5.hex(md.digest()))
+    AudioSig(-1L, p.channels, p.rate, p.nFrames, hash)
   } catch {
     // decodePcm's frameSize guard makes Pcm.sample total for every shape
     // the JDK readers are KNOWN to emit; this catch is the contract's

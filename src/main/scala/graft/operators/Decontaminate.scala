@@ -21,7 +21,10 @@ object Decontaminate {
 
   /** Per-corpus-doc contamination evidence: (doc_id, n_hits) where n_hits
     * counts DISTINCT word n-grams the doc shares with any benchmark doc.
-    * Docs with no overlap are absent (inner probe). */
+    * Docs with no overlap are absent (inner probe). Runs unchanged on a
+    * streaming `corpus` (Update mode): shingling is stateless, the
+    * benchmark probe is a stream-static join, and only the per-doc count
+    * holds state. */
   def contamination(corpus: DataFrame, benchmark: DataFrame, n: Int): DataFrame = {
     val c = Dedup.shingles(corpus, n)
     val b = Dedup.shingles(benchmark, n).select("s").distinct()
@@ -133,16 +136,4 @@ object Decontaminate {
         graft.functions.ScalarOps.r4(
           col("n_leaked").cast("double") / col("n_sh")).as("leak_frac"))
   }
-
-  /** Streaming form of [[contamination]]: documents are checked in-flight.
-    * The probe is a STATELESS stream-static broadcast join (the benchmark
-    * is a static relation, so no join state accumulates), and the only
-    * streaming state is the per-contaminated-doc hit count — bounded by
-    * contamination volume, not stream length. Run in Update mode: each
-    * micro-batch upserts refined counts (a doc's count only grows).
-    * Replay equivalence with the batch form is asserted in StreamingSpec. */
-  def contaminationStream(docs: DataFrame, benchmark: DataFrame, n: Int): DataFrame =
-    contamination(docs, benchmark, n) // the identical declarative pipeline
-    // runs unchanged on a streaming frame: shingling is stateless, the
-    // benchmark probe is a stream-static join, only the count holds state
 }

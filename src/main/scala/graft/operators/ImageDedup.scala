@@ -41,23 +41,24 @@ object ImageDedup {
     // thread-owned digest + table hex (r18): the JCA provider lookup and
     // the per-byte "%02x" Formatter were per-IMAGE overhead on the decode
     // hot path (guide §1.2 per-task work; same fix as AudioDedup)
-    val md = graft.functions.Md5.digest()
-    val w = img.getWidth; val h = img.getHeight
-    val buf = new Array[Byte](w * 3)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val rgb = img.getRGB(x, y)
-        buf(x * 3) = ((rgb >> 16) & 0xFF).toByte
-        buf(x * 3 + 1) = ((rgb >> 8) & 0xFF).toByte
-        buf(x * 3 + 2) = (rgb & 0xFF).toByte
-        x += 1
+    graft.functions.Md5.withDigest { md =>
+      val w = img.getWidth; val h = img.getHeight
+      val buf = new Array[Byte](w * 3)
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          val rgb = img.getRGB(x, y)
+          buf(x * 3) = ((rgb >> 16) & 0xFF).toByte
+          buf(x * 3 + 1) = ((rgb >> 8) & 0xFF).toByte
+          buf(x * 3 + 2) = (rgb & 0xFF).toByte
+          x += 1
+        }
+        md.update(buf)
+        y += 1
       }
-      md.update(buf)
-      y += 1
+      graft.functions.Md5.hex(md.digest())
     }
-    graft.functions.Md5.hex(md.digest())
   }
 
   /** Difference hash on a 9×8 luminance grid. Cell averages use exact

@@ -184,34 +184,7 @@ object IvfIndex {
           lit(s"$fn: invalid vector (null, null element, or dim != $d): size="),
           coalesce(size(col(vecCol)).cast("string"), lit("null"))))))
 
-  /** Fit-ONCE-per-process frozen centroid table: the first call per
-    * (cacheKey, vecCol, nlist, seed) runs [[build]]'s seeded k-means and
-    * collects its nlist-row centroid frame to the driver; every later call
-    * replays the cached rows as a LocalRelation. This is the sandbox stand-in
-    * for a persisted centroid artifact table: the registered frozen-IVF query
-    * (qe3d) and a real deployment both read centroids as plain data, with NO
-    * k-means fit anywhere in the executed plan. */
-  def frozenCentroids(vectors: DataFrame, cacheKey: String, idCol: String,
-                      vecCol: String, nlist: Int, seed: Long = 42L,
-                      nHint: Long = 0L): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    // EVERY fit-affecting param rides the key (the cosine_pairs idCol
-    // lesson): idCol and nHint steer the maxTrain hash-mod training
-    // sample, so two calls differing only there fit DIFFERENT centroids
-    val rows = centroidCache.computeIfAbsent(
-      s"$cacheKey|$idCol|$vecCol|$nlist|$seed|h$nHint", _ => {
-      val (_, cents) = build(vectors, idCol, vecCol, nlist, seed, nHint = nHint)
-      cents.collect().map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq
-    })
-    rows.toDF("cell", "centroid")
-  }
-
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Seq[Double])]]()
-
-  /** PERSISTED frozen centroid table — the production form of
-    * [[frozenCentroids]]: the first call per (input fingerprint, vecCol,
+  /** PERSISTED frozen centroid table: the first call per (input fingerprint, vecCol,
     * nlist, seed) fits the seeded k-means and writes the (cell, centroid)
     * frame as a parquet artifact ([[graft.Artifacts]]); every later call —
     * in THIS process or a fresh one — reads the artifact back, so the
@@ -230,8 +203,8 @@ object IvfIndex {
       build(vectors, idCol, vecCol, nlist, seed, nHint = nHint)._2)
   }
 
-  /** Top-k by cosine from a FROZEN centroid table ([[frozenCentroids]] or
-    * any persisted (cell, centroid) frame): [[assignInline]] buckets the
+  /** Top-k by cosine from a FROZEN centroid table ([[persistedCentroids]]
+    * or any other (cell, centroid) frame): [[assignInline]] buckets the
     * corpus map-only, then the shared probe/score/top-k stage runs — the
     * plan a 1000-executor cluster would ship, with the quantizer fit
     * amortized across every corpus and query batch that reuses the

@@ -911,30 +911,19 @@ object Multimodal {
 
     /** Extract the movi frame payloads ('00dc'/'00db' chunks) from an
       * MJPEG AVI via the RIFF walk; null if not an AVI, empty if no movi
-      * list. Walks in Long space like [[graft.functions.AudioHeader]]. */
+      * list. Walks with [[graft.functions.ByteReads.Chunks]]. */
     def framePayloads(b: Array[Byte]): Seq[Array[Byte]] = {
-      // thin closures over the shared readers (ByteReads) — unsigned
-      // widening here because RIFF sizes are u32
-      def le32(i: Int): Long = graft.functions.ByteReads.le32(b, i) & 0xFFFFFFFFL
-      def cc(i: Int, t: String): Boolean = graft.functions.ByteReads.fourcc(b, i, t)
-      if (b == null || b.length < 12 || !cc(0, "RIFF") || !cc(8, "AVI ")) return null
+      import graft.functions.ByteReads.{fourcc, Chunks}
+      if (b == null || b.length < 12 || !fourcc(b, 0, "RIFF") || !fourcc(b, 8, "AVI "))
+        return null
       val frames = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-      var off = 12
-      while (off + 8 <= b.length) {
-        val size = le32(off + 4)
-        if (cc(off, "LIST") && off + 12 <= b.length && cc(off + 8, "movi")) {
-          val end = math.min(b.length.toLong, off + 8L + size)
-          var p = off + 12
-          while (p + 8 <= end) {
-            val fs = le32(p + 4)
-            if ((cc(p, "00dc") || cc(p, "00db")) && p + 8 + fs <= end)
-              frames += java.util.Arrays.copyOfRange(b, p + 8, p + 8 + fs.toInt)
-            val nxt = p.toLong + 8L + fs + (fs & 1L)
-            p = if (nxt > end) end.toInt else nxt.toInt
-          }
+      val top = new Chunks(b, 12, b.length, bigEndian = false)
+      while (top.next()) {
+        val movi = top.list("movi")
+        if (movi != null) while (movi.next()) {
+          if ((movi.is("00dc") || movi.is("00db")) && movi.body + movi.size <= movi.until)
+            frames += java.util.Arrays.copyOfRange(b, movi.body, movi.body + movi.size.toInt)
         }
-        val next = off.toLong + 8L + size + (size & 1L)
-        off = if (next > b.length) b.length else next.toInt
       }
       frames.toSeq
     }
@@ -1080,9 +1069,9 @@ object Multimodal {
     // is an animated GIF (>= 2 frames — VideoHeader's GifFrames branch),
     // which is a video; single-frame GIFs parse as image only, and
     // AVI/MP4 never parse as images, so nothing else moves
-    when(graft.functions.VideoMetaExpr.video_meta(payload).isNotNull, "video")
-      .when(graft.functions.ImageDimsExpr.image_dims(payload).isNotNull, "image")
-      .when(graft.functions.AudioMetaExpr.audio_meta(payload).isNotNull, "audio")
+    when(graft.functions.VideoHeader(payload).isNotNull, "video")
+      .when(graft.functions.ImageHeader(payload).isNotNull, "image")
+      .when(graft.functions.AudioHeader(payload).isNotNull, "audio")
       .otherwise("unknown")
 
   /** MIXED duplicate-group corpus for the crawl-dedup capstone: each
@@ -1099,9 +1088,9 @@ object Multimodal {
   }
 
   def mediaTriage(media: DataFrame): DataFrame = {
-    val img = graft.functions.ImageDimsExpr.image_dims(col("payload"))
-    val aud = graft.functions.AudioMetaExpr.audio_meta(col("payload"))
-    val vid = graft.functions.VideoMetaExpr.video_meta(col("payload"))
+    val img = graft.functions.ImageHeader(col("payload"))
+    val aud = graft.functions.AudioHeader(col("payload"))
+    val vid = graft.functions.VideoHeader(col("payload"))
     media
       .withColumn("__img", img).withColumn("__aud", aud).withColumn("__vid", vid)
       .select(col("doc_id"),
@@ -1162,11 +1151,11 @@ object Multimodal {
     * dead-letter decision belongs to the caller (T11 pattern).
     * Stateless, shuffle-free, identical in batch and streaming. */
   def compressedTriage(media: DataFrame): DataFrame = {
-    val flac = graft.functions.FlacMetaExpr.flac_meta(col("payload"))
-    val opus = graft.functions.OggOpusMetaExpr.ogg_opus_meta(col("payload"))
-    val adts = graft.functions.AdtsMetaExpr.adts_meta(col("payload"))
-    val avc = graft.functions.AvcSpsDimsExpr.avc_sps_dims(col("payload"))
-    val mp3 = graft.functions.MpegAudioMetaExpr.mpeg_audio_meta(col("payload"))
+    val flac = graft.functions.FlacHeader(col("payload"))
+    val opus = graft.functions.OggOpusHeader(col("payload"))
+    val adts = graft.functions.AdtsHeader(col("payload"))
+    val avc = graft.functions.AvcSpsHeader(col("payload"))
+    val mp3 = graft.functions.MpegAudioHeader(col("payload"))
     media
       .withColumn("__flac", flac).withColumn("__opus", opus)
       .withColumn("__adts", adts).withColumn("__avc", avc)

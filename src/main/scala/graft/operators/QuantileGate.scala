@@ -53,7 +53,7 @@ object QuantileGate {
     * a batch history — the half of [[atOrBelow]] that must see the whole
     * distribution. Freeze it once over yesterday's corpus, then gate an
     * always-on ingest stream with [[atOrBelowFrozen]] — the adaptive-cutoff
-    * analog of [[Decontaminate.contaminationStream]]'s static benchmark. */
+    * analog of [[Decontaminate.contamination]]'s static benchmark on a stream. */
   def fitThreshold(df: DataFrame, metricCol: String, q: Double): DataFrame = {
     validateQ(q) // before the localCheckpoint materializes the history
     thresholdFrom(realMetric(df.auditedCheckpoint(), metricCol), Nil, metricCol, q)

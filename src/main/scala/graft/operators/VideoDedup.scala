@@ -72,22 +72,21 @@ object VideoDedup {
   private[graft] def hashFrames(src: Multimodal.FrameSrc): (Int, String) = {
     if (src == null) return (-1, null)
     try {
-      // NOT the Md5 ThreadLocal: pixelHash borrows (and resets) the
-      // thread's shared digest between this one's updates — re-entrant
-      // use would corrupt the outer state. One getInstance per VIDEO is
-      // off the per-frame hot path; only the hex formatting moves to the
-      // table encoder (r18).
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.update(s"n=${src.n};".getBytes("US-ASCII"))
+      // every frame hash first: pixelHash borrows the thread's digest, so
+      // the video digest cannot be open while frames are hashed
+      val frames = new Array[String](src.n)
       var i = 0
       while (i < src.n) {
         val img = src.read(i)
         if (img == null) return (src.n, null)
-        md.update(ImageDedup.pixelHash(img).getBytes("US-ASCII"))
-        md.update(';'.toByte)
+        frames(i) = ImageDedup.pixelHash(img)
         i += 1
       }
-      (src.n, graft.functions.Md5.hex(md.digest()))
+      graft.functions.Md5.withDigest { md =>
+        md.update(s"n=${src.n};".getBytes("US-ASCII"))
+        frames.foreach { h => md.update(h.getBytes("US-ASCII")); md.update(';'.toByte) }
+        (src.n, graft.functions.Md5.hex(md.digest()))
+      }
     } finally src.close()
   }
 

@@ -106,11 +106,14 @@ object ReplaceCosineHof extends Rule[LogicalPlan] {
 
 /** Production wiring: `--conf spark.sql.extensions=graft.plans.GraftExtensions`
   * registers the engine's kernel SQL functions (cosine_sim, dot_product,
-  * repetition_stats, token_entropy, srp_buckets) and the HOF-cosine rewrite
-  * on every session — the full curation-function surface is usable from
-  * plain `spark.sql` without touching the Scala API. Tests inject the rule
-  * via `spark.experimental.extraOptimizations` (runtime-settable on an
-  * existing session) and functions via each companion's `register`. */
+  * repetition_stats, token_entropy, srp_buckets), every binary parser
+  * function in [[graft.functions.MetaParser.all]] (image_dims, audio_meta,
+  * …), and the HOF-cosine rewrite on every session — the full
+  * curation-function surface is usable from plain `spark.sql` without
+  * touching the Scala API. Tests inject the rule via
+  * `spark.experimental.extraOptimizations` (runtime-settable on an existing
+  * session) and functions via each kernel's `register` or
+  * [[graft.functions.MetaParser.register]]. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private def fn(name: String, exprInfoCls: Class[_],
                  builder: Seq[Expression] => Expression) =
@@ -144,49 +147,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(fn("srp_buckets",
       classOf[graft.functions.SrpBucketsExpr],
       graft.functions.SrpBucketsExpr.fromSql))
-    ext.injectFunction(fn("image_dims",
-      classOf[graft.functions.ImageDimsExpr],
-      graft.functions.BinaryMetaExpr.unaryBuilder("image_dims",
-        graft.functions.ImageDimsExpr(_))))
-    ext.injectFunction(fn("audio_meta",
-      classOf[graft.functions.AudioMetaExpr],
-      graft.functions.BinaryMetaExpr.unaryBuilder("audio_meta",
-        graft.functions.AudioMetaExpr(_))))
-    ext.injectFunction(fn("video_meta",
-      classOf[graft.functions.VideoMetaExpr],
-      graft.functions.BinaryMetaExpr.unaryBuilder("video_meta",
-        graft.functions.VideoMetaExpr(_))))
-    ext.injectFunction(fn("utf8_stats",
-      classOf[graft.functions.Utf8StatsExpr],
-      graft.functions.BinaryMetaExpr.unaryBuilder("utf8_stats",
-        graft.functions.Utf8StatsExpr(_))))
-    ext.injectFunction(fn("mpeg_audio_meta",
-      classOf[graft.functions.MpegAudioMetaExpr],
-      graft.functions.BinaryMetaExpr.unaryBuilder("mpeg_audio_meta",
-        graft.functions.MpegAudioMetaExpr(_))))
-    ext.injectFunction(fn("avc_sps_dims",
-      classOf[graft.functions.AvcSpsDimsExpr],
-      graft.functions.BinaryMetaExpr.unaryBuilder("avc_sps_dims",
-        graft.functions.AvcSpsDimsExpr(_))))
-    ext.injectFunction(fn("adts_meta",
-      classOf[graft.functions.AdtsMetaExpr],
-      graft.functions.BinaryMetaExpr.unaryBuilder("adts_meta",
-        graft.functions.AdtsMetaExpr(_))))
-    ext.injectFunction(fn("flac_meta",
-      classOf[graft.functions.FlacMetaExpr],
-      graft.functions.BinaryMetaExpr.unaryBuilder("flac_meta",
-        graft.functions.FlacMetaExpr(_))))
-    ext.injectFunction(fn("ogg_opus_meta",
-      classOf[graft.functions.OggOpusMetaExpr],
-      graft.functions.BinaryMetaExpr.unaryBuilder("ogg_opus_meta",
-        graft.functions.OggOpusMetaExpr(_))))
-    ext.injectFunction(fn("id3v2_tags",
-      classOf[graft.functions.Id3v2TagsExpr],
-      graft.functions.BinaryMetaExpr.unaryBuilder("id3v2_tags",
-        graft.functions.Id3v2TagsExpr(_))))
-    ext.injectFunction(fn("jpeg_exif",
-      classOf[graft.functions.JpegExifExpr],
-      graft.functions.BinaryMetaExpr.unaryBuilder("jpeg_exif",
-        graft.functions.JpegExifExpr(_))))
+    graft.functions.MetaParser.all.foreach(p =>
+      ext.injectFunction(fn(p.name, classOf[graft.functions.MetaExpr], p.builder)))
   }
 }

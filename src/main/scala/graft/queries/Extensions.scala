@@ -507,7 +507,7 @@ object Extensions {
     ("qe5c_image_dims", (s: SparkSession, d: String) => {
       val media = Multimodal.syntheticImageCorpus(Engine.Tables(s, d).documents)
       media.select(col("doc_id"),
-          graft.functions.ImageDimsExpr.image_dims(col("payload")).as("dims"))
+          graft.functions.ImageHeader(col("payload")).as("dims"))
         .select(col("doc_id"), col("dims.mime").as("mime"),
           col("dims.width").as("width"), col("dims.height").as("height"))
         .orderBy("doc_id")
@@ -524,7 +524,7 @@ object Extensions {
     ("qe5d_audio_meta", (s: SparkSession, d: String) => {
       val media = Multimodal.syntheticAudioCorpus(Engine.Tables(s, d).documents)
       media.select(col("doc_id"),
-          graft.functions.AudioMetaExpr.audio_meta(col("payload")).as("m"))
+          graft.functions.AudioHeader(col("payload")).as("m"))
         .select(col("doc_id"), col("m.mime").as("mime"),
           col("m.channels").as("channels"),
           col("m.sample_rate").as("sample_rate"), col("m.bits").as("bits"),
@@ -542,7 +542,7 @@ object Extensions {
     ("qe5e_video_meta", (s: SparkSession, d: String) => {
       val media = Multimodal.syntheticVideoCorpus(Engine.Tables(s, d).documents)
       media.select(col("doc_id"),
-          graft.functions.VideoMetaExpr.video_meta(col("payload")).as("m"))
+          graft.functions.VideoHeader(col("payload")).as("m"))
         .select(col("doc_id"), col("m.mime").as("mime"),
           col("m.timescale").as("timescale"), col("m.duration").as("duration"),
           col("m.duration_ms").as("duration_ms"),
@@ -561,7 +561,7 @@ object Extensions {
     ("qe5i_mpeg_audio", (s: SparkSession, d: String) => {
       val media = Multimodal.syntheticMpegAudioCorpus(Engine.Tables(s, d).documents)
       media.select(col("doc_id"),
-          graft.functions.MpegAudioMetaExpr.mpeg_audio_meta(col("payload")).as("m"))
+          graft.functions.MpegAudioHeader(col("payload")).as("m"))
         .select(col("doc_id"), col("m.mime").as("mime"), col("m.layer").as("layer"),
           col("m.bitrate_kbps").as("bitrate_kbps"),
           col("m.sample_rate").as("sample_rate"),
@@ -579,7 +579,7 @@ object Extensions {
     ("qe5o_vbr_mpeg", (s: SparkSession, d: String) => {
       val media = Multimodal.syntheticVbrMpegCorpus(Engine.Tables(s, d).documents)
       media.select(col("doc_id"),
-          graft.functions.MpegAudioMetaExpr.mpeg_audio_meta(col("payload")).as("m"))
+          graft.functions.MpegAudioHeader(col("payload")).as("m"))
         .select(col("doc_id"), col("m.mime").as("mime"),
           col("m.frame_map").as("frame_map"), col("m.n_frames").as("n_frames"),
           col("m.sample_rate").as("sample_rate"),
@@ -597,7 +597,7 @@ object Extensions {
     ("qe5p_id3v2_tags", (s: SparkSession, d: String) => {
       val media = Multimodal.syntheticId3Corpus(Engine.Tables(s, d).documents)
       media.select(col("doc_id"),
-          graft.functions.Id3v2TagsExpr.id3v2_tags(col("payload")).as("m"))
+          graft.functions.Id3v2Tags(col("payload")).as("m"))
         .select(col("doc_id"), col("m.version").as("version"),
           col("m.n_frames").as("n_frames"), col("m.title").as("title"),
           col("m.artist").as("artist"), col("m.album").as("album"))
@@ -613,7 +613,7 @@ object Extensions {
     ("qe5q_jpeg_exif", (s: SparkSession, d: String) => {
       val media = Multimodal.syntheticJpegExifCorpus(Engine.Tables(s, d).documents)
       media.select(col("doc_id"),
-          graft.functions.JpegExifExpr.jpeg_exif(col("payload")).as("m"))
+          graft.functions.JpegExif(col("payload")).as("m"))
         .select(col("doc_id"), col("m.orientation").as("orientation"),
           col("m.byte_order").as("byte_order"),
           col("m.icc_chunks").as("icc_chunks"), col("m.icc_bytes").as("icc_bytes"))
@@ -632,7 +632,7 @@ object Extensions {
       val media = Multimodal.syntheticAnimatedGifCorpus(
         Engine.Tables(s, d).documents.select("doc_id"))
       media.select(col("doc_id"),
-          graft.functions.VideoMetaExpr.video_meta(col("payload")).as("m"))
+          graft.functions.VideoHeader(col("payload")).as("m"))
         .select(col("doc_id"), col("m.mime").as("mime"),
           col("m.timescale").as("timescale"), col("m.duration").as("duration"),
           col("m.duration_ms").as("duration_ms"), col("m.n_tracks").as("n_tracks"))
@@ -649,7 +649,7 @@ object Extensions {
     ("qe5j_avc_sps", (s: SparkSession, d: String) => {
       val media = Multimodal.syntheticAvcCorpus(Engine.Tables(s, d).documents)
       media.select(col("doc_id"),
-          graft.functions.AvcSpsDimsExpr.avc_sps_dims(col("payload")).as("m"))
+          graft.functions.AvcSpsHeader(col("payload")).as("m"))
         .select(col("doc_id"), col("m.profile_idc").as("profile_idc"),
           col("m.level_idc").as("level_idc"),
           col("m.width").as("width"), col("m.height").as("height"))
@@ -668,7 +668,7 @@ object Extensions {
     ("qe5k_aac_adts", (s: SparkSession, d: String) => {
       val media = Multimodal.syntheticAdtsCorpus(Engine.Tables(s, d).documents)
       media.select(col("doc_id"),
-          graft.functions.AdtsMetaExpr.adts_meta(col("payload")).as("m"))
+          graft.functions.AdtsHeader(col("payload")).as("m"))
         .select(col("doc_id"), col("m.mime").as("mime"),
           col("m.profile").as("profile"),
           col("m.sample_rate").as("sample_rate"),
@@ -688,7 +688,7 @@ object Extensions {
     ("qe5l_flac", (s: SparkSession, d: String) => {
       val media = Multimodal.syntheticFlacCorpus(Engine.Tables(s, d).documents)
       media.select(col("doc_id"),
-          graft.functions.FlacMetaExpr.flac_meta(col("payload")).as("m"))
+          graft.functions.FlacHeader(col("payload")).as("m"))
         .select(col("doc_id"), col("m.mime").as("mime"),
           col("m.sample_rate").as("sample_rate"),
           col("m.channels").as("channels"),
@@ -709,7 +709,7 @@ object Extensions {
     ("qe5m_ogg_opus", (s: SparkSession, d: String) => {
       val media = Multimodal.syntheticOggOpusCorpus(Engine.Tables(s, d).documents)
       media.select(col("doc_id"),
-          graft.functions.OggOpusMetaExpr.ogg_opus_meta(col("payload")).as("m"))
+          graft.functions.OggOpusHeader(col("payload")).as("m"))
         .select(col("doc_id"), col("m.mime").as("mime"),
           col("m.channels").as("channels"), col("m.pre_skip").as("pre_skip"),
           col("m.input_sample_rate").as("input_sample_rate"),
@@ -802,7 +802,7 @@ object Extensions {
         .otherwise(unhex(lit("")))
       val payload = concat(prefix, col("text").cast("binary"), suffix)
       Engine.Tables(s, d).documents
-        .select(id, graft.functions.Utf8StatsExpr.utf8_stats(payload).as("u"))
+        .select(id, graft.functions.Utf8Stats(payload).as("u"))
         .select(id, col("u.valid").as("valid"), col("u.n_bytes").as("n_bytes"),
           col("u.n_chars").as("n_chars"), col("u.n_invalid").as("n_invalid"),
           col("u.n_ascii").as("n_ascii"))

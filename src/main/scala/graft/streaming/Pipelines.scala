@@ -142,15 +142,10 @@ object Pipelines {
         col("temp_celsius"))
 
   /** HKO publish payload column (ref `hko.cpp:123-125`, K2) — the ONE
-    * definition of the hko wire shape; [[hkoPayload]] and the running
-    * module (`ModuleRegistry.hkoModule`) both build from it, so the two
-    * cannot drift. */
+    * definition of the hko wire shape, which the running module
+    * (`ModuleRegistry.hkoModule`) publishes. */
   def hkoPayloadCol(df: DataFrame): org.apache.spark.sql.Column =
     to_json(struct(df("fh_timestamp"), df("hko_timestamp"), df("temp_celsius")))
-
-  /** HKO publish payload (ref `hko.cpp:123-125`, K2). */
-  def hkoPayload(projected: DataFrame): DataFrame =
-    projected.select(hkoPayloadCol(projected).as("payload"))
 
   /** ch consumer parse: JSON payload → event ts + raw int16 tenths, with
     * `parsed` flagging rows the module may publish. The reference skips a

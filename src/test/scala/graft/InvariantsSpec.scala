@@ -357,4 +357,22 @@ class InvariantsSpec extends SparkTestBase {
     assert(both.isEmpty, both.toSeq.sorted.map(n => s"$n: ${main(n)} / ${test(n)}")
       .mkString("defined in both trees: ", "; ", ""))
   }
+
+  test("the RIFF/IFF chunk advance appears once under src/main, in ByteReads.Chunks") {
+    // `+ (size & 1L)` is the even-byte pad of a chunk advance; a second
+    // copy is a hand-rolled walk that can drift from the shared one
+    val advance = """\+\s*\(\s*\w+\s*&\s*1L?\s*\)""".r
+    val hits = {
+      import scala.jdk.CollectionConverters._
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try files.iterator.asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if advance.findFirstIn(line).isDefined =>
+            s"${f.getFileName}:${i + 1}: ${line.trim}"
+        }
+      }.toList finally files.close()
+    }
+    assert(hits.size == 1 && hits.head.startsWith("ByteReads.scala:"),
+      hits.mkString("chunk advances outside the one walker:\n", "\n", ""))
+  }
 }

@@ -165,11 +165,11 @@ class AudioMetaSpec extends SparkTestBase {
 
   test("expression + SQL registration agree with the JVM parser; nulls propagate") {
     import spark.implicits._
-    AudioMetaExpr.register(spark)
+    MetaParser.register(spark)
     val df = Seq((1L, wavMinimal), (2L, aiff), (3L, "nope".getBytes))
       .toDF("id", "payload")
     val viaCol = df.select(col("id"),
-        AudioMetaExpr.audio_meta(col("payload")).as("m"))
+        AudioHeader(col("payload")).as("m"))
       .select(col("id"), col("m.mime"), col("m.sample_rate"), col("m.n_frames"))
       .collect().map(r => (r.getLong(0),
         if (r.isNullAt(1)) null else (r.getString(1), r.getInt(2), r.getLong(3))))
@@ -188,7 +188,7 @@ class AudioMetaSpec extends SparkTestBase {
     // AudioHeader → exactly the arithmetic params the oracle states
     val docs = graft.Engine.Tables(spark, Sf0001).documents
     val parsed = graft.operators.Multimodal.syntheticAudioCorpus(docs)
-      .select(col("doc_id"), AudioMetaExpr.audio_meta(col("payload")).as("m"))
+      .select(col("doc_id"), AudioHeader(col("payload")).as("m"))
     val bad = parsed.filter(col("m").isNull ||
       col("m.mime") =!= when(col("doc_id") % 2 === 0, "audio/wav").otherwise("audio/aiff") ||
       col("m.channels") =!= (col("doc_id") % 3 + 1).cast("int") ||

@@ -15,15 +15,14 @@ class CompressedMetaSpec extends SparkTestBase {
 
   test("mpeg_audio_meta + avc_sps_dims: expression and SQL agree; nulls propagate") {
     import spark.implicits._
-    MpegAudioMetaExpr.register(spark)
-    AvcSpsDimsExpr.register(spark)
+    MetaParser.register(spark)
     val mp3 = hex("FFFB9000" + "00" * 16)
     val sps = AvcSpsHeader.buildSps(77, 31, 1280, 720)
     val df = Seq((1L, mp3), (2L, sps), (3L, "neither".getBytes))
       .toDF("id", "payload")
     val viaCol = df.select(col("id"),
-        MpegAudioMetaExpr.mpeg_audio_meta(col("payload")).as("a"),
-        AvcSpsDimsExpr.avc_sps_dims(col("payload")).as("v"))
+        MpegAudioHeader(col("payload")).as("a"),
+        AvcSpsHeader(col("payload")).as("v"))
       .collect().map { r =>
         (r.getLong(0), !r.isNullAt(1), !r.isNullAt(2))
       }.toSet
@@ -44,7 +43,7 @@ class CompressedMetaSpec extends SparkTestBase {
     val docs = graft.Engine.Tables(spark, Sf0001).documents
     val parsed = graft.operators.Multimodal.syntheticMpegAudioCorpus(docs)
       .select(col("doc_id"),
-        MpegAudioMetaExpr.mpeg_audio_meta(col("payload")).as("m"))
+        MpegAudioHeader(col("payload")).as("m"))
       .select(col("doc_id"), col("m.layer"), col("m.bitrate_kbps"),
         col("m.sample_rate"), col("m.channels"), col("m.duration_ms"))
       .collect()
@@ -77,7 +76,7 @@ class CompressedMetaSpec extends SparkTestBase {
     val docs = graft.Engine.Tables(spark, Sf0001).documents
     val parsed = graft.operators.Multimodal.syntheticVbrMpegCorpus(docs)
       .select(col("doc_id"),
-        MpegAudioMetaExpr.mpeg_audio_meta(col("payload")).as("m"))
+        MpegAudioHeader(col("payload")).as("m"))
       .select(col("doc_id"), col("m.frame_map"), col("m.n_frames"),
         col("m.sample_rate"), col("m.channels"), col("m.duration_ms"))
       .collect()
@@ -102,7 +101,7 @@ class CompressedMetaSpec extends SparkTestBase {
 
   test("adts_meta: expression and SQL agree; other families refuse") {
     import spark.implicits._
-    AdtsMetaExpr.register(spark)
+    MetaParser.register(spark)
     val aac = hex("FFF15080011FFCAA")
     val mp3 = hex("FFFB9000" + "00" * 16)
     val df = Seq((1L, aac), (2L, mp3), (3L, "neither".getBytes))
@@ -117,7 +116,7 @@ class CompressedMetaSpec extends SparkTestBase {
         if (r.isNullAt(2)) -1 else r.getInt(2))).toSeq
     assert(viaSql == Seq((1L, 44100, 1), (2L, -1, -1), (3L, -1, -1)))
     val viaCol = df.select(col("id"),
-        AdtsMetaExpr.adts_meta(col("payload")).as("m"))
+        AdtsHeader(col("payload")).as("m"))
       .select(col("id"), col("m.profile"), col("m.channels"),
         col("m.duration_ms"))
       .collect().map(r => (r.getLong(0),
@@ -174,7 +173,7 @@ class CompressedMetaSpec extends SparkTestBase {
       24000, 22050, 16000, 12000, 11025, 8000, 7350)
     val profiles = Array("Main", "LC", "SSR", "LTP")
     val parsed = graft.operators.Multimodal.syntheticAdtsCorpus(docs)
-      .select(col("doc_id"), AdtsMetaExpr.adts_meta(col("payload")).as("m"))
+      .select(col("doc_id"), AdtsHeader(col("payload")).as("m"))
       .select(col("doc_id"), col("m.profile"), col("m.sample_rate"),
         col("m.channels"), col("m.n_frames"), col("m.duration_ms"))
       .collect()
@@ -194,7 +193,7 @@ class CompressedMetaSpec extends SparkTestBase {
   }
 
   test("synthetic FLAC corpus round-trip: planted params parse back exactly") {
-    FlacMetaExpr.register(spark)
+    MetaParser.register(spark)
     val docs = graft.Engine.Tables(spark, Sf0001).documents
     val parsed = graft.operators.Multimodal.syntheticFlacCorpus(docs)
       .selectExpr("doc_id", "flac_meta(payload) AS m") // SQL form on purpose
@@ -214,7 +213,7 @@ class CompressedMetaSpec extends SparkTestBase {
   }
 
   test("synthetic Ogg/Opus corpus round-trip: planted params parse back exactly") {
-    OggOpusMetaExpr.register(spark)
+    MetaParser.register(spark)
     val docs = graft.Engine.Tables(spark, Sf0001).documents
     val parsed = graft.operators.Multimodal.syntheticOggOpusCorpus(docs)
       .selectExpr("doc_id", "ogg_opus_meta(payload) AS m") // SQL form on purpose
@@ -239,7 +238,7 @@ class CompressedMetaSpec extends SparkTestBase {
   test("synthetic AVC corpus round-trip: planted dims/profile parse back exactly") {
     val docs = graft.Engine.Tables(spark, Sf0001).documents
     val parsed = graft.operators.Multimodal.syntheticAvcCorpus(docs)
-      .select(col("doc_id"), AvcSpsDimsExpr.avc_sps_dims(col("payload")).as("m"))
+      .select(col("doc_id"), AvcSpsHeader(col("payload")).as("m"))
       .select(col("doc_id"), col("m.profile_idc"), col("m.level_idc"),
         col("m.width"), col("m.height"))
       .collect()
@@ -258,7 +257,7 @@ class CompressedMetaSpec extends SparkTestBase {
   test("synthetic ID3 corpus round-trip: planted text frames parse back exactly") {
     val docs = graft.Engine.Tables(spark, Sf0001).documents
     val parsed = graft.operators.Multimodal.syntheticId3Corpus(docs)
-      .select(col("doc_id"), Id3v2TagsExpr.id3v2_tags(col("payload")).as("m"))
+      .select(col("doc_id"), Id3v2Tags(col("payload")).as("m"))
       .select(col("doc_id"), col("m.version"), col("m.n_frames"),
         col("m.title"), col("m.artist"), col("m.album"))
       .collect()

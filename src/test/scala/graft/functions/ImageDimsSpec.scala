@@ -110,12 +110,12 @@ class ImageDimsSpec extends SparkTestBase {
 
   test("expression + SQL registration agree with the JVM parser; nulls propagate") {
     import spark.implicits._
-    ImageDimsExpr.register(spark)
+    MetaParser.register(spark)
     val df = Seq(
       (1L, png1x1), (2L, jpegBaseline), (3L, gif), (4L, "nope".getBytes))
       .toDF("id", "payload")
     val viaCol = df.select(col("id"),
-        ImageDimsExpr.image_dims(col("payload")).as("d"))
+        ImageHeader(col("payload")).as("d"))
       .select(col("id"), col("d.mime"), col("d.width"), col("d.height"))
       .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getString(1)))
       .toMap
@@ -133,7 +133,7 @@ class ImageDimsSpec extends SparkTestBase {
     // ImageHeader → exactly the arithmetic (mime, w, h) the oracle states
     val docs = graft.Engine.Tables(spark, Sf0001).documents
     val parsed = graft.operators.Multimodal.syntheticImageCorpus(docs)
-      .select(col("doc_id"), ImageDimsExpr.image_dims(col("payload")).as("d"))
+      .select(col("doc_id"), ImageHeader(col("payload")).as("d"))
     val bad = parsed.filter(col("d").isNull ||
       col("d.width") =!= (col("doc_id") % 640 + 1).cast("int") ||
       col("d.height") =!= (col("doc_id") % 480 + 1).cast("int") ||

@@ -87,10 +87,10 @@ class Utf8StatsSpec extends SparkTestBase {
 
   test("expression + SQL registration agree with the JVM scanner") {
     import spark.implicits._
-    Utf8StatsExpr.register(spark)
+    MetaParser.register(spark)
     val df = Seq((1L, "héllo".getBytes("UTF-8")), (2L, hex("FF 41")),
       (3L, null.asInstanceOf[Array[Byte]])).toDF("id", "payload")
-    val got = df.select(col("id"), Utf8StatsExpr.utf8_stats(col("payload")).as("u"))
+    val got = df.select(col("id"), Utf8Stats(col("payload")).as("u"))
       .select(col("id"), col("u.valid"), col("u.n_chars"), col("u.n_invalid"))
       .collect().map(r => (r.getLong(0),
         if (r.isNullAt(1)) null else (r.getBoolean(1), r.getInt(2), r.getInt(3))))

@@ -80,11 +80,11 @@ class VideoMetaSpec extends SparkTestBase {
 
   test("expression + SQL registration agree with the JVM parser; nulls propagate") {
     import spark.implicits._
-    VideoMetaExpr.register(spark)
+    MetaParser.register(spark)
     val df = Seq((1L, mp4V0), (2L, mp4V1), (3L, "nope".getBytes))
       .toDF("id", "payload")
     val viaCol = df.select(col("id"),
-        VideoMetaExpr.video_meta(col("payload")).as("m"))
+        VideoHeader(col("payload")).as("m"))
       .select(col("id"), col("m.timescale"), col("m.duration_ms"), col("m.n_tracks"))
       .collect().map(r => (r.getLong(0),
         if (r.isNullAt(1)) null else (r.getInt(1), r.getLong(2), r.getInt(3))))
@@ -137,7 +137,7 @@ class VideoMetaSpec extends SparkTestBase {
     val ts = when(col("doc_id") % 3 === 0, 600)
       .when(col("doc_id") % 3 === 1, 1000).otherwise(90000)
     val parsed = graft.operators.Multimodal.syntheticVideoCorpus(docs)
-      .select(col("doc_id"), VideoMetaExpr.video_meta(col("payload")).as("m"))
+      .select(col("doc_id"), VideoHeader(col("payload")).as("m"))
     val bad = parsed.filter(col("m").isNull ||
       col("m.mime") =!= "video/mp4" ||
       col("m.timescale") =!= ts.cast("int") ||

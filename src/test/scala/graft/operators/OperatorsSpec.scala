@@ -559,7 +559,7 @@ class SimilaritySpec extends SparkTestBase {
         nlist = 8, nprobe = 6)
       .select("qid", "rnk", "cid").orderBy("qid", "rnk")
       .collect().map(_.toString).toSeq
-    val cents = IvfIndex.frozenCentroids(emb, cacheKey = "spec-" + Sf0001,
+    val cents = IvfIndex.persistedCentroids(emb, Sf0001 + "/embeddings.parquet",
       "vec_id", "embedding", nlist = 8)
     val frozen = IvfIndex.topKFrozen(emb, cents, queries, "vec_id", "embedding",
         5, nprobe = 6)
@@ -567,8 +567,8 @@ class SimilaritySpec extends SparkTestBase {
       .collect().map(_.toString).toSeq
     assert(frozen == inlineFit,
       "the frozen-artifact apply path must reproduce the inline-fit results exactly")
-    // second call replays the cached artifact rows (same results, no refit)
-    val cents2 = IvfIndex.frozenCentroids(emb, cacheKey = "spec-" + Sf0001,
+    // second call reads the persisted artifact back (same results, no refit)
+    val cents2 = IvfIndex.persistedCentroids(emb, Sf0001 + "/embeddings.parquet",
       "vec_id", "embedding", nlist = 8)
     assert(cents2.collect().map(_.toString).sorted.toSeq ==
       cents.collect().map(_.toString).sorted.toSeq)
@@ -579,8 +579,7 @@ class SimilaritySpec extends SparkTestBase {
     val emb = Engine.Tables(spark, Sf0001).embeddings
     val stored = emb.filter(col("vec_id") % 5 =!= 3)
     val batch = emb.filter(col("vec_id") % 5 === 3)
-    val cents = IvfIndex.frozenCentroids(stored, cacheKey = "spec-append-" + Sf0001,
-      "vec_id", "embedding", nlist = 8)
+    val cents = IvfIndex.build(stored, "vec_id", "embedding", nlist = 8)._2
     // the append path's postings frame equals the from-scratch assignment
     // of the union corpus — assignment is pointwise at fixed centroids
     val appended = IvfIndex.assignInline(stored, cents, "embedding")

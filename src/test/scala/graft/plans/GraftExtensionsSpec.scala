@@ -163,6 +163,46 @@ class GraftExtensionsSpec extends SparkTestBase {
         |FROM emb_wired WHERE vec_id = 0""".stripMargin).head()
     assert(others.getDouble(0) > 0 && !others.isNullAt(1) &&
       others.getDouble(2) > 0 && others.getDouble(3) > 0, others.toString)
+    // every binary parser function resolves from the same wiring, with its
+    // struct schema pinned, and runs whole-stage codegen'd through the
+    // parser object's static compute
+    val parserTypes = Seq(
+      "image_dims" -> "struct<mime:string,width:int,height:int>",
+      "audio_meta" ->
+        "struct<mime:string,channels:int,sample_rate:int,bits:int,n_frames:bigint>",
+      "video_meta" -> ("struct<mime:string,timescale:int,duration:bigint," +
+        "duration_ms:bigint,n_tracks:int>"),
+      "utf8_stats" ->
+        "struct<valid:boolean,n_bytes:int,n_chars:int,n_invalid:int,n_ascii:int>",
+      "mpeg_audio_meta" -> ("struct<mime:string,layer:int,bitrate_kbps:int," +
+        "sample_rate:int,channels:int,duration_ms:bigint,frame_map:string,n_frames:bigint>"),
+      "avc_sps_dims" -> "struct<profile_idc:int,level_idc:int,width:int,height:int>",
+      "adts_meta" -> ("struct<mime:string,profile:string,sample_rate:int,channels:int," +
+        "n_frames:int,duration_ms:bigint>"),
+      "flac_meta" -> ("struct<mime:string,sample_rate:int,channels:int," +
+        "bits_per_sample:int,total_samples:bigint,duration_ms:bigint>"),
+      "ogg_opus_meta" -> ("struct<mime:string,channels:int,pre_skip:int," +
+        "input_sample_rate:bigint,mapping_family:int,n_pages:int,duration_ms:bigint>"),
+      "id3v2_tags" ->
+        "struct<version:string,n_frames:int,title:string,artist:string,album:string>",
+      "jpeg_exif" ->
+        "struct<orientation:int,byte_order:string,icc_chunks:int,icc_bytes:bigint>")
+    assert(graft.functions.MetaParser.all.map(_.name) == parserTypes.map(_._1))
+    Engine.Tables(wired, Sf0001).documents.selectExpr("encode(text, 'UTF-8') AS payload")
+      .limit(5).createOrReplaceTempView("docs_wired")
+    val parsed = wired.sql(parserTypes.map { case (f, _) => s"$f(payload) AS $f" }
+      .mkString("SELECT ", ", ", " FROM docs_wired"))
+    assert(parsed.schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq == parserTypes)
+    assert(parsed.collect().length == 5)
+    val code = org.apache.spark.sql.execution.debug.codegenString(
+      parsed.queryExecution.executedPlan)
+    graft.functions.MetaParser.all.foreach { p =>
+      val call = p.getClass.getName.stripSuffix("$") + ".compute("
+      assert(code.contains(call), s"${p.name}: no `$call` in the generated code")
+    }
+    // an unaliased parser column is named after the SQL function
+    assert(wired.sql("SELECT audio_meta(payload) FROM docs_wired").columns.toSeq ==
+      Seq("audio_meta(payload)"))
     // the optimizer rule rides the same wiring
     val hof = wired.table("emb_wired").limit(3)
       .select(VectorOps.cosine(col("embedding"), col("embedding")).as("c"))

@@ -860,7 +860,7 @@ class StreamingDedupSpec extends SparkTestBase {
     assert(want.nonEmpty, "testdata must contain contaminated docs")
 
     val input = MemoryStream[(Long, String)](spark)
-    val stream = graft.operators.Decontaminate.contaminationStream(
+    val stream = graft.operators.Decontaminate.contamination(
       input.toDF().toDF("doc_id", "text"), bench, 5)
     val q = stream.writeStream.format("memory").queryName("t_contam")
       .outputMode(OutputMode.Update()).start()
