@@ -45,29 +45,15 @@ object Engine {
       // defaults (1000 jobs/stages, 100k tasks, 1000 SQL executions) —
       // sized for a human debugging an interactive cluster, not for a
       // driver that runs hundreds of queries back-to-back and never reads
-      // them. A full bench sweep (176 queries × 3 reps + checkpoints)
-      // retains every execution's plan graph + metric maps until the cap,
-      // and the measured live heap grows ~78 → 195 MB across the r17
-      // baseline sweep with exactly this retention as the growth that
-      // survives System.gc() (measured in the r17 session-recipe commit,
-      // d7a0a1f; the cited OPTIMIZATION_r17.md was never committed —
-      // ADVICE r17 #4) — old-gen pressure of
-      // the "slot-local GC premium" class the r14–r16 driver sweeps
-      // flagged on qe62. Keep enough history for post-hoc debugging of
-      // the LAST few queries, drop the rest. Host-shape-independent (a
-      // retention cap, not a parallelism/size knob). Overridable via JVM
-      // system properties (-Dspark.ui.retainedJobs=...) — the values
-      // below are DEFAULTS, not pins (ADVICE r17: a builder .config
-      // always wins over sysprop-sourced conf, so the old "pre-set
-      // spark.conf in the caller's builder" override path did not exist).
-      .config("spark.ui.retainedJobs",
-        sys.props.getOrElse("spark.ui.retainedJobs", "100"))
-      .config("spark.ui.retainedStages",
-        sys.props.getOrElse("spark.ui.retainedStages", "100"))
-      .config("spark.ui.retainedTasks",
-        sys.props.getOrElse("spark.ui.retainedTasks", "10000"))
-      .config("spark.sql.ui.retainedExecutions",
-        sys.props.getOrElse("spark.sql.ui.retainedExecutions", "24"))
+      // them. Retained plan graphs and metric maps grew the live heap
+      // (after System.gc()) from ~78 to 195 MB over a full bench sweep.
+      // These caps keep the last few queries for debugging and drop the
+      // rest; they bound retention, not parallelism, so they hold on any
+      // host shape.
+      .config("spark.ui.retainedJobs", "100")
+      .config("spark.ui.retainedStages", "100")
+      .config("spark.ui.retainedTasks", "10000")
+      .config("spark.sql.ui.retainedExecutions", "24")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

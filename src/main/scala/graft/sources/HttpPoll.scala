@@ -159,7 +159,7 @@ class HttpPollMicroBatchStream(url: String, minIntervalMs: Long, cacheDir: Path)
   private def raiseFloor(o: Offset): Offset = {
     o match {
       case s: SeqOffset =>
-        checkpointFloor.getAndAccumulate(s.root, math.max(_, _))
+        checkpointFloor.getAndAccumulate(s.count, math.max(_, _))
       case _ => ()
     }
     o
@@ -230,7 +230,7 @@ class HttpPollMicroBatchStream(url: String, minIntervalMs: Long, cacheDir: Path)
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val (s, e) = (start.asInstanceOf[SeqOffset].root, end.asInstanceOf[SeqOffset].root)
+    val (s, e) = (start.asInstanceOf[SeqOffset].count, end.asInstanceOf[SeqOffset].count)
     if (e <= s) Array.empty
     else {
       // a backlog (restart replay) reads in parallel chunks; live polls are

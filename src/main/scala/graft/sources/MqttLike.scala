@@ -40,27 +40,11 @@ class MqttLikeProvider extends TableProvider with DataSourceRegister {
 }
 
 object MqttLike {
-  /** `writer` is the publishing lane: "" for the classic single-session
-    * topic, `w-<partition>` for partitioned high-rate sinks. `msg_seq` is
-    * dense per (topic, writer). */
+  /** `msg_seq` is dense per topic, from 0. */
   val Schema: StructType = StructType(Seq(
     StructField("topic", StringType, nullable = false),
     StructField("payload", StringType, nullable = false),
-    StructField("msg_seq", LongType, nullable = false),
-    StructField("writer", StringType, nullable = false)))
-
-  /** Per-writer lanes present under a topic dir: always the root lane "",
-    * plus any `w-<id>` subdirectories a partitioned sink created. */
-  def listSubstreams(topicDir: Path): Seq[String] =
-    if (!Files.isDirectory(topicDir)) Seq("")
-    else {
-      val s = Files.list(topicDir)
-      val subs = try s.iterator().asScala
-        .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("w-"))
-        .map(_.getFileName.toString).toSeq.sorted
-      finally s.close()
-      "" +: subs
-    }
+    StructField("msg_seq", LongType, nullable = false)))
 
   /** Publish one message into a spool dir (the bridge/producer side).
     * Single-writer per topic is the normal contract (one broker session —
@@ -83,23 +67,14 @@ object MqttLike {
     * on its first claim collision) completes step 3 idempotently, so a dead
     * publisher can never wedge the topic's dense prefix. */
   def publish(spoolDir: String, topic: String, payload: String): Long =
-    publish(spoolDir, topic, payload, substream = "")
-
-  /** `substream` names a per-writer lane under the topic (`w-<partition>`,
-    * see [[Sinks.MqttLikePublishWriter]] partitioned mode): each lane has
-    * its own dense seq space and its own claims, so N parallel sink tasks
-    * publish with zero contention — the high-rate alternative to the
-    * single-broker-session `coalesce(1)` model. The reader merges lanes
-    * with a per-lane offset vector. */
-  def publish(spoolDir: String, topic: String, payload: String, substream: String): Long =
-    publishFrom(spoolDir, topic, payload, substream,
-      nextSeq(laneDirOf(spoolDir, topic, substream)))
+    publishFrom(spoolDir, topic, payload, "", nextSeq(laneDirOf(spoolDir, topic, "")))
 
   /** Publish starting the claim walk at a caller-cached seq hint, skipping
     * the per-message directory listing `publish` pays — the sink hot path:
     * a ForeachWriter lists once in open() ([[nextSeqIn]]) and feeds each
     * publish's returned seq + 1 back in. A stale hint only costs claim
-    * collisions, which the resync path below already absorbs. */
+    * collisions, which the resync path below already absorbs. `substream`
+    * must be "" ([[laneDirOf]]). */
   def publishFrom(spoolDir: String, topic: String, payload: String,
                   substream: String, startSeq: Long): Long = {
     val dir = laneDirOf(spoolDir, topic, substream)
@@ -121,7 +96,7 @@ object MqttLike {
     var claimed = false
     // repair lazily: an eager repair() here is a full directory listing per
     // message (O(n), O(n²) over a topic's life). The reader already repairs
-    // every lane on each offset poll; a publisher only needs it when a claim
+    // the topic on each offset poll; a publisher only needs it when a claim
     // collision hints at a dead writer's un-promoted claim wedging the seq.
     var repaired = false
     while (!claimed) {
@@ -197,8 +172,8 @@ object MqttLike {
     msgs ++ promoted
   }
 
-  /** The reader's per-trigger lane poll: repair wedges AND compute the
-    * dense prefix from the SAME listing (two full listings per lane per
+  /** The reader's per-trigger topic poll: repair wedges AND compute the
+    * dense prefix from the SAME listing (two full listings per
     * trigger otherwise — O(spool) driver work doubled for nothing). */
   def repairAndDensePrefix(dir: Path): Long = {
     val visible = repairFrom(dir, listNames(dir))
@@ -253,29 +228,19 @@ object MqttLike {
 
   private def nextSeq(dir: Path): Long = listSeqs(dir).lastOption.fold(0L)(_ + 1)
 
+  /** A topic's one lane: its spool directory. `substream` stays in the
+    * public signatures only as "", the topic itself; any other value is
+    * refused, so nothing is written where no reader looks. */
   private def laneDirOf(spoolDir: String, topic: String, substream: String): Path = {
-    val base = Paths.get(spoolDir, sanitize(topic))
-    if (substream.isEmpty) base else base.resolve(sanitize(substream))
+    require(substream.isEmpty,
+      s"graft-mqtt: a topic has one lane; substream must be \"\", got \"$substream\"")
+    Paths.get(spoolDir, sanitize(topic))
   }
 
-  /** The next free seq in a lane — the one listing a cached-seq publisher
+  /** The next free seq in a topic — the one listing a cached-seq publisher
     * ([[publishFrom]]) pays, at open() instead of per message. */
   def nextSeqIn(spoolDir: String, topic: String, substream: String): Long =
     nextSeq(laneDirOf(spoolDir, topic, substream))
-
-  /** Record the publisher's QoS as lane metadata (`.qos`, dot-hidden so
-    * readers ignore it) — K1/K2's QoS-1-vs-2 distinction made observable.
-    * First writer wins; the transport substitute delivers exactly-once
-    * either way (dense offsets + checkpoints). */
-  def recordQos(spoolDir: String, topic: String, substream: String, qos: Int): Unit = {
-    val dir = laneDirOf(spoolDir, topic, substream)
-    Files.createDirectories(dir)
-    val f = dir.resolve(".qos")
-    if (!Files.exists(f)) {
-      try Files.writeString(f, qos.toString, java.nio.file.StandardOpenOption.CREATE_NEW)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    }
-  }
 }
 
 class MqttLikeTable(rawProps: Map[String, String]) extends Table with SupportsRead {
@@ -299,114 +264,52 @@ class MqttLikeTable(rawProps: Map[String, String]) extends Table with SupportsRe
     }
 }
 
-/** Offset = per-lane consumed counts (each lane's seq is dense from 0).
-  * JSON is a sorted `{"lane":count}` object; a bare integer (the pre-lane
-  * single-writer format) deserializes as the root lane, so existing
-  * checkpoints keep resuming. */
-case class SeqOffset(counts: Map[String, Long]) extends Offset {
-  /** Root-lane count — the whole offset for single-lane sources
-    * (graft-http, classic single-writer topics). */
-  def root: Long = counts.getOrElse("", 0L)
-  override def json(): String =
-    counts.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + SeqOffset.enc(k) + "\":" + v }
-      .mkString("{", ",", "}")
+/** Offset = how many seqs of the one lane have been consumed (seqs are
+  * dense from 0), shared by graft-mqtt and graft-http. The JSON is the
+  * root-lane form `{"":n}` that checkpoints of both sources have always
+  * carried, so existing checkpoints resume and older code reads new ones. */
+case class SeqOffset(count: Long) extends Offset {
+  override def json(): String = s"""{"":$count}"""
 }
 
 object SeqOffset {
-  def apply(n: Long): SeqOffset = SeqOffset(Map("" -> n))
+  private val RootLane = """\{\s*(?:""\s*:\s*(-?\d+)\s*)?\}""".r
 
-  /** Lane names are DIRECTORY names an external bridge may create, and
-    * the offset serializer splits naively on `,` and `:` — so delimiter,
-    * quote, and whitespace characters are percent-encoded in the JSON
-    * key. A lane like `w-host:3` then round-trips through the checkpoint
-    * instead of corrupting it; the library's own `w-<n>` lanes (and any
-    * [[MqttLike.sanitize]]d name) contain no such characters, so existing
-    * checkpoints parse unchanged. */
-  private[sources] def enc(k: String): String =
-    k.flatMap { c =>
-      if (c == '%' || c == '"' || c == '\\' || c == ':' || c == ',' ||
-          c == '{' || c == '}' || c.isWhitespace)
-        // encode the char's UTF-8 BYTES, each as exactly two hex digits:
-        // a code point above 0xFF (e.g. U+2028, which isWhitespace
-        // matches) formatted as "%%${c.toInt}%02X" would emit MORE than
-        // two digits while dec consumes exactly two — corrupting the lane
-        // name on checkpoint round trip
-        String.valueOf(c).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          .map(b => f"%%${b & 0xFF}%02X").mkString
-      else c.toString
-    }
-
-  private[sources] def dec(k: String): String = {
-    val sb = new StringBuilder
-    // consecutive %XX escapes are a UTF-8 byte run (one multi-byte char
-    // encodes as several escapes) — collect and decode the run as a unit
-    val run = new java.io.ByteArrayOutputStream
-    def flush(): Unit = if (run.size > 0) {
-      sb.append(new String(run.toByteArray, java.nio.charset.StandardCharsets.UTF_8))
-      run.reset()
-    }
-    var i = 0
-    def hex(c: Char) = Character.digit(c, 16) >= 0
-    while (i < k.length) {
-      // a '%' not followed by two hex digits stays literal: legacy
-      // checkpoints written before encoding existed must parse unchanged
-      if (k(i) == '%' && i + 3 <= k.length && hex(k(i + 1)) && hex(k(i + 2))) {
-        run.write(Integer.parseInt(k.substring(i + 1, i + 3), 16))
-        i += 3
-      } else { flush(); sb += k(i); i += 1 }
-    }
-    flush()
-    sb.toString
-  }
-
-  def parse(json: String): SeqOffset = {
-    val t = json.trim
-    if (!t.startsWith("{")) SeqOffset(t.toLong)
-    else {
-      val body = t.stripPrefix("{").stripSuffix("}").trim
-      if (body.isEmpty) SeqOffset(Map.empty[String, Long])
-      else SeqOffset(body.split(",").map { kv =>
-        val Array(k, v) = kv.split(":", 2)
-        dec(k.trim.stripPrefix("\"").stripSuffix("\"")) -> v.trim.toLong
-      }.toMap)
-    }
+  /** Accepts `{"":n}`, `{}` (nothing consumed) and a bare integer. A
+    * per-writer lane key (`{"w-0":5,"":3}`) is refused: those lanes are no
+    * longer read, and resuming from the root count alone would silently
+    * drop them. */
+  def parse(json: String): SeqOffset = json.trim match {
+    case RootLane(n) => SeqOffset(if (n == null) 0L else n.toLong)
+    case t if !t.startsWith("{") => SeqOffset(t.toLong)
+    case t => throw new IllegalArgumentException(
+      s"graft SeqOffset: only the one-lane form {\"\":n} is read; lane offsets are not, got $t")
   }
 }
 
 class MqttLikeMicroBatchStream(spoolDir: String, topic: String) extends MicroBatchStream {
   private val dir = Paths.get(spoolDir, MqttLike.sanitize(topic))
-  private def laneDir(lane: String): Path = if (lane.isEmpty) dir else dir.resolve(lane)
 
-  override def initialOffset(): Offset = SeqOffset(Map.empty[String, Long])
+  override def initialOffset(): Offset = SeqOffset(0L)
   override def deserializeOffset(json: String): Offset = SeqOffset.parse(json)
-  // repair first: a publisher that died mid-publish must not wedge a lane's
+  // repair first: a publisher that died mid-publish must not wedge the
   // dense prefix forever — the claim protocol makes completion safe from
   // the reader side (see MqttLike.publish docs)
-  override def latestOffset(): Offset = {
-    SeqOffset(MqttLike.listSubstreams(dir).map { lane =>
-      lane -> MqttLike.repairAndDensePrefix(laneDir(lane))
-    }.filter(_._2 > 0).toMap)
-  }
+  override def latestOffset(): Offset = SeqOffset(MqttLike.repairAndDensePrefix(dir))
   override def commit(end: Offset): Unit = () // spool retained for replay
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[SeqOffset].counts
-    val e = end.asInstanceOf[SeqOffset].counts
-    e.toSeq.sortBy(_._1).flatMap { case (lane, hi) =>
-      val base = s.getOrElse(lane, 0L)
-      if (hi <= base) Seq.empty
-      else {
-        // split each lane's contiguous seq range so a backlog reads in
-        // parallel
-        val targetPerPartition = 1000L
-        val nParts = math.min(32L, math.max(1L, (hi - base + targetPerPartition - 1) / targetPerPartition))
-        val step = (hi - base + nParts - 1) / nParts
-        (base until hi by step).map(lo =>
-          MqttRangePartition(laneDir(lane).toString, topic, lane, lo,
-            math.min(hi, lo + step)): InputPartition)
-      }
-    }.toArray
+    val base = start.asInstanceOf[SeqOffset].count
+    val hi = end.asInstanceOf[SeqOffset].count
+    if (hi <= base) Array.empty
+    else {
+      // split the contiguous seq range so a backlog reads in parallel
+      val targetPerPartition = 1000L
+      val nParts = math.min(32L, math.max(1L, (hi - base + targetPerPartition - 1) / targetPerPartition))
+      val step = (hi - base + nParts - 1) / nParts
+      (base until hi by step).map(lo =>
+        MqttRangePartition(dir.toString, topic, lo, math.min(hi, lo + step)): InputPartition).toArray
+    }
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new PartitionReaderFactory {
@@ -417,8 +320,7 @@ class MqttLikeMicroBatchStream(spoolDir: String, topic: String) extends MicroBat
         override def next(): Boolean = { seq += 1; seq < p.untilSeq }
         override def get(): InternalRow = {
           val payload = Files.readString(Paths.get(p.dir, s"$seq.msg"))
-          InternalRow(UTF8String.fromString(p.topic),
-            UTF8String.fromString(payload), seq, UTF8String.fromString(p.lane))
+          InternalRow(UTF8String.fromString(p.topic), UTF8String.fromString(payload), seq)
         }
         override def close(): Unit = ()
       }
@@ -428,6 +330,5 @@ class MqttLikeMicroBatchStream(spoolDir: String, topic: String) extends MicroBat
   override def stop(): Unit = ()
 }
 
-case class MqttRangePartition(dir: String, topic: String, lane: String,
-                              fromSeq: Long, untilSeq: Long)
+case class MqttRangePartition(dir: String, topic: String, fromSeq: Long, untilSeq: Long)
   extends InputPartition

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * [[MqttLikePublishWriter]] is the K1/K2 MQTT publish as a ForeachWriter:
   * per-partition connection lifecycle (open/process/close) exactly where a
   * real client would connect/publish/disconnect; transport substituted by
-  * the spool directory, QoS recorded as metadata. [[dashboardSink]] is the
-  * K3 7-segment/latest-value display as a foreachBatch upsert.
+  * the spool directory. [[dashboardSink]] is the K3 7-segment/latest-value
+  * display as a foreachBatch upsert.
   */
 object Sinks {
 
@@ -31,20 +31,13 @@ object Sinks {
     *    The engine's end-to-end effective exactly-once remains the
     *    spool's dense offsets + checkpoints.
     *
-    * Spool-mode write parallelism:
-    *  - default (`partitioned = false`): all tasks publish into the topic's
-    *    root lane — the reference's one-broker-session model. Correct under
-    *    concurrency (atomic claims) but contended: callers throttle it to
-    *    one task (`coalesce(1)`) for throughput.
-    *  - `partitioned = true`: each sink task publishes into its own
-    *    `w-<partitionId>` lane with a private dense seq space — zero
-    *    cross-task contention, so the sink runs at any parallelism. The
-    *    graft-mqtt reader merges lanes via its per-lane offset vector.
-    *    (Wire mode ignores it: broker sessions are already independent.) */
-  class MqttLikePublishWriter(target: String, topic: String, qos: Int,
-                              partitioned: Boolean = false)
+    * Spool mode publishes every task into the topic's one lane — the
+    * reference's one-broker-session model. Correct under concurrency
+    * (atomic claims) but contended, so callers run it as one task
+    * (`coalesce(1)`). It records no QoS: delivery is exactly-once either
+    * way (dense offsets + checkpoints). */
+  class MqttLikePublishWriter(target: String, topic: String, qos: Int)
       extends ForeachWriter[Row] {
-    private var lane: String = ""
     private var nextSeq = 0L
     @transient private var wire: MqttWireClient = _
     private def overWire: Boolean = target.startsWith("mqtt://")
@@ -68,12 +61,10 @@ object Sinks {
         wire = new MqttWireClient(host, port, s"gs-$nonce", creds)
         wire.connect()
       } else {
-        lane = if (partitioned) s"w-$partitionId" else ""
-        MqttLike.recordQos(target, topic, lane, qos)
-        // list the lane ONCE per task, then walk the cached seq forward:
-        // per-message nextSeq listings are O(spool) each, O(spool²) per lane
-        // lifetime — the same cost class the lazy-repair change removed
-        nextSeq = MqttLike.nextSeqIn(target, topic, lane)
+        // list the topic ONCE per task, then walk the cached seq forward:
+        // per-message nextSeq listings are O(spool) each, O(spool²) over the
+        // topic's lifetime — the same cost class the lazy-repair change removed
+        nextSeq = MqttLike.nextSeqIn(target, topic, "")
       }
       true
     }
@@ -89,7 +80,7 @@ object Sinks {
         if (overWire)
           wire.publish(topic, payload.getBytes(java.nio.charset.StandardCharsets.UTF_8), qos)
         else
-          nextSeq = MqttLike.publishFrom(target, topic, payload, lane, nextSeq) + 1
+          nextSeq = MqttLike.publishFrom(target, topic, payload, "", nextSeq) + 1
       }
     }
     override def close(errorOrNull: Throwable): Unit = // disconnect here

@@ -44,8 +44,8 @@ object ModuleRegistry {
       triggerMs: Long = 1000L, // reference default cadence, global_vars.c:10
       broker: Option[String] = None,
       // publish QoS: dd/ch publish at 1 (producer.c:152-153, ch.c:146-147),
-      // hko at 2 (hko.cpp:69-72) — wire mode runs the real four-way
-      // handshake; spool mode records it as lane metadata (K2)
+      // hko at 2 (hko.cpp:69-72). QoS applies to wire mode, which runs
+      // the real four-way handshake at 2; spool mode records none (K2)
       qos: Int = 1)
 
   /** The reference's live HKO endpoint (`hko.cpp:98-100`); tests substitute

@@ -143,6 +143,20 @@ class InvariantsSpec extends SparkTestBase {
       s"SURVEY.md claims ${claims.last} registered queries; registry has ${SparkEntry.queries.size}")
   }
 
+  test("registry pin: query-name set and name -> oracle SQL map hash to their literals") {
+    // a refactor of the registry must keep the same behaviour: the same
+    // query names and the same oracle SQL per name. Registering a query or
+    // editing an oracle on purpose updates these literals in the same change.
+    def sha256(lines: Seq[String]): String =
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        .map(b => f"${b & 0xFF}%02x").mkString
+    val names = sha256(SparkEntry.queries.keySet.toSeq.sorted)
+    val oracles = sha256(SparkEntry.oracleSql.toSeq.sorted.map { case (n, q) => s"$n\t$q" })
+    assert(names == "957e526af15672e4f9b0f505619db6404ea0377c2db38998079eb537bef853e4", s"query-name set hash moved: $names")
+    assert(oracles == "5f82071fcbd6d64e39a10a63c544f261e67400baf4df486ae5e0b2ffaf7eafaf", s"oracle SQL map hash moved: $oracles")
+  }
+
   test("every exact anchor's scale twin is registered (no weak-at-100x plan without its path)") {
     val qs = SparkEntry.queries.keySet
     SparkEntry.scaleTwins.foreach { case (anchor, twin) =>

@@ -27,6 +27,35 @@ class CurationOpsSpec extends SparkTestBase {
     val got = DupClusters.connectedComponents(edges).collect()
     assert(got.length == 64 && got.forall(_.getLong(1) == 0L),
       "every node of the path must resolve to the min id 0")
+
+    // more shapes, each checked against a driver-side union-find with
+    // min-id labels: a 200-leaf star whose min id is a leaf (two hops from
+    // every other leaf), a complete binary tree of depth 8 whose min id is
+    // a deepest leaf (16 hops from the far side), and the disjoint union of
+    // both with the path
+    val path = (0L until 63L).map(i => (i, i + 1))
+    val star = (1000L until 1200L).map(leaf => (1200L, leaf))
+    def treeId(i: Long): Long = 2000L + (510L - i) // heap order, 511 nodes
+    val tree = (1L to 510L).map(i => (treeId((i - 1) / 2), treeId(i)))
+    def unionFind(es: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      es.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        parent(math.max(ra, rb)) = math.min(ra, rb) // the root stays the min id
+      }
+      parent.keys.map(k => k -> find(k)).toMap
+    }
+    Seq("star" -> star, "binary tree" -> tree, "path + star + tree" -> (path ++ star ++ tree))
+      .foreach { case (shape, es) =>
+        val labels = DupClusters.connectedComponents(es.toDF("da", "db"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(labels == unionFind(es), s"$shape: labels differ from union-find")
+      }
+    assert(unionFind(star)(1199L) == 1000L && unionFind(tree)(treeId(0L)) == treeId(510L))
   }
 
   test("clusters() yields the canonical min-id survivor per component") {

@@ -197,7 +197,7 @@ class HttpPollSpec extends SparkTestBase {
     // bodies under seqs downstream already consumed
     val st2 = new HttpPollMicroBatchStream(doc.toUri.toString, 0L, cache)
     st2.deserializeOffset(SeqOffset(3L).json())
-    val off = st2.latestOffset().asInstanceOf[SeqOffset].root
+    val off = st2.latestOffset().asInstanceOf[SeqOffset].count
     assert(off == 4L, s"restart after prune must resume numbering at the floor, got $off")
     assert(HttpPoll.listPolls(cache) == Seq(3L),
       s"new poll must land at the floored seq, cache has ${HttpPoll.listPolls(cache)}")
@@ -214,7 +214,7 @@ class HttpPollSpec extends SparkTestBase {
     val doc = java.nio.file.Files.createTempFile("foreignbody", ".json")
     java.nio.file.Files.writeString(doc, "x")
     val st = new HttpPollMicroBatchStream(doc.toUri.toString, 0L, cache)
-    assert(st.latestOffset().asInstanceOf[SeqOffset].root == 1L)
+    assert(st.latestOffset().asInstanceOf[SeqOffset].count == 1L)
     assert(HttpPoll.listPolls(cache) == Seq(0L))
 
     val spool = java.nio.file.Files.createTempDirectory("spoolforeign").toString

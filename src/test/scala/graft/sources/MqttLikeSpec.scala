@@ -134,45 +134,6 @@ class MqttLikeSpec extends SparkTestBase {
       s"restart must resume exactly once after the checkpointed offset, got ${seqs.toSeq}")
   }
 
-  test("partitioned sink at parallelism > 1: per-writer lanes, reader merges exactly-once") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    val spool = java.nio.file.Files.createTempDirectory("mqtt_lanes").toString
-    val n = 64
-    val input = MemoryStream[Int](spark)
-    val q = input.toDS().repartition(4)
-      .select(concat(lit("payload-"), col("value")).as("payload"))
-      .writeStream
-      .foreach(new Sinks.MqttLikePublishWriter(spool, "t/hi", qos = 1, partitioned = true))
-      .outputMode(OutputMode.Append()).start()
-    try {
-      input.addData(0 until n)
-      q.processAllAvailable()
-    } finally q.stop()
-    val topicDir = java.nio.file.Paths.get(spool, "t_hi")
-    val lanes = MqttLike.listSubstreams(topicDir).filter(_.nonEmpty)
-    assert(lanes.size > 1, s"expected several writer lanes, got $lanes")
-    lanes.foreach { lane => // each lane keeps its own dense seq space
-      val seqs = MqttLike.listSeqs(topicDir.resolve(lane))
-      assert(seqs == (0L until seqs.size.toLong), s"$lane seqs not dense: $seqs")
-    }
-    // the reader merges all lanes, no loss, no duplication
-    val q2 = spark.readStream.format("graft-mqtt")
-      .option("spoolDir", spool).option("topic", "t/hi").load()
-      .writeStream.format("memory").queryName("mq_lanes")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      q2.processAllAvailable()
-      val rows = spark.table("mq_lanes").collect()
-      assert(rows.length == n, s"expected $n rows, got ${rows.length}")
-      assert(rows.map(_.getAs[String]("payload")).toSet ==
-        (0 until n).map(i => s"payload-$i").toSet)
-      assert(rows.map(_.getAs[String]("writer")).toSet == lanes.toSet)
-      // (writer, msg_seq) identifies a message uniquely across lanes
-      assert(rows.map(r => (r.getAs[String]("writer"), r.getAs[Long]("msg_seq"))).toSet.size == n)
-    } finally q2.stop()
-  }
-
   test("full dd pipeline: mqtt source -> parse -> publish sink (K1), dashboard (K3)") {
     val spool = java.nio.file.Files.createTempDirectory("mqtt2").toString
     (0 until 4).foreach(i => MqttLike.publish(spool, "sensors/dd", payload(i)))
@@ -239,27 +200,26 @@ class MqttLikeSpec extends SparkTestBase {
     // fresh lane: an ahead hint lands at 0, not at the hint
     val s0 = MqttLike.publishFrom(spool, "t/ahead2", "first", "", startSeq = 7L)
     assert(s0 == 0L, s"fresh-lane ahead hint must land at 0, got $s0")
+    // a topic has one lane: a named substream is refused, never written
+    // into a directory no reader reads
+    intercept[IllegalArgumentException](
+      MqttLike.publishFrom(spool, "t/ahead", "lost", "w-0", startSeq = 0L))
+    intercept[IllegalArgumentException](MqttLike.nextSeqIn(spool, "t/ahead", "w-0"))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(spool, "t_ahead", "w-0")))
   }
 
-  test("SeqOffset: hostile lane names round-trip; legacy formats parse unchanged") {
-    // lanes are DIRECTORY names an external bridge may create — delimiter
-    // and quote characters must survive the checkpoint round trip
-    val hostile = SeqOffset(Map("w-host:3" -> 5L, "w-a,b" -> 2L,
-      "w-50%" -> 1L, "w-q\"x" -> 7L, "" -> 9L))
-    assert(SeqOffset.parse(hostile.json()) == hostile,
-      s"round trip corrupted: ${hostile.json()}")
-    // legacy (pre-encoding) checkpoint shapes keep resuming
-    assert(SeqOffset.parse("""{"w-0":5,"":3}""") ==
-      SeqOffset(Map("w-0" -> 5L, "" -> 3L)))
+  test("SeqOffset: one count; parent checkpoint shapes parse; lane offsets refused") {
+    // the JSON stays the root-lane form checkpoints have always carried
+    assert(SeqOffset(5L).json() == """{"":5}""")
+    assert(SeqOffset.parse(SeqOffset(5L).json()) == SeqOffset(5L))
+    // every one-lane shape a checkpoint may hold keeps resuming
+    assert(SeqOffset.parse("""{"":5}""") == SeqOffset(5L))
+    assert(SeqOffset.parse("{}") == SeqOffset(0L))
     assert(SeqOffset.parse("7") == SeqOffset(7L))
-    // a literal '%' not followed by two hex digits stays literal
-    assert(SeqOffset.parse("""{"a%zb":1}""") == SeqOffset(Map("a%zb" -> 1L)))
-    // non-Latin-1 whitespace (U+2028 LINE SEPARATOR, which isWhitespace
-    // matches) encodes as its UTF-8 bytes — a single "%2028" escape would
-    // decode as ' ' + "28" and corrupt the lane on checkpoint round trip
-    val wide = SeqOffset(Map(s"w x" -> 3L, "w y" -> 1L, "läne:ü" -> 2L))
-    assert(SeqOffset.parse(wide.json()) == wide,
-      s"wide-char round trip corrupted: ${wide.json()}")
+    // a per-writer lane offset is refused, naming the lane, instead of
+    // resuming from the root count and silently dropping the lane
+    val e = intercept[IllegalArgumentException](SeqOffset.parse("""{"w-0":5,"":3}"""))
+    assert(e.getMessage.contains("w-0"), e.getMessage)
   }
 
   test("dashboard upsert accepts a corrected reading at the SAME timestamp") {
