@@ -70,11 +70,6 @@ object ScalarOps {
   def jsonDoubleOrDefault(js: Column, path: String, dflt: Double): Column =
     coalesce(get_json_object(js, path).cast("double"), lit(dflt))
 
-  /** X4 — elapsed seconds between two event times
-    * (ref `src/modules/dd/consumer.cpp:253-257`). */
-  def elapsedSec(newer: Column, older: Column): Column =
-    unix_timestamp(newer) - unix_timestamp(older)
-
   /** Microsecond-precision epoch — parity queries do all epoch arithmetic in
     * microseconds because the test timestamps carry sub-second precision.
     * Casts through TIMESTAMP first so a TIMESTAMP_NTZ column (parquet

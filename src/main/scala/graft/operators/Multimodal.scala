@@ -732,9 +732,6 @@ object Multimodal {
     * statistics), not just the header parse. */
   def syntheticToneCorpus(docs: DataFrame): DataFrame = {
     val id = col("doc_id")
-    def l16 = (v: Column) => concat(
-      lpad(hex(v.bitwiseAND(255)), 2, "0"),
-      lpad(hex(shiftright(v, 8).bitwiseAND(255)), 2, "0"))
     def l32 = (v: Column) => concat(
       lpad(hex(v.bitwiseAND(255)), 2, "0"),
       lpad(hex(shiftright(v, 8).bitwiseAND(255)), 2, "0"),

@@ -15,9 +15,9 @@
   *  - [[graft.streaming]] re-expresses the reference's pipelines as
   *    batch==stream transforms: windowed aggs share one plan builder with
   *    the batch parity queries; stateful ops (latest-value, change
-  *    detection + rate, staleness watchdog) exist in both
-  *    flatMapGroupsWithState and transformWithState forms with proven
-  *    batch/stream equivalence and checkpoint-restart continuity.
+  *    detection + rate, staleness watchdog) run on flatMapGroupsWithState
+  *    with proven batch/stream equivalence and checkpoint-restart
+  *    continuity; the streaming dedup and packers use transformWithState.
   *  - [[graft.sources.MqttLikeProvider]] is a full DataSourceV2 micro-batch
   *    source (seq-dense offsets → exactly-once ranges) with the transport
   *    stubbed by a spool directory; sinks cover publish (ForeachWriter) and

@@ -16,10 +16,11 @@ import org.apache.spark.sql.Row
 object ModuleRegistry {
 
   /** Where a module's samples come from: an MQTT-shaped topic subscription
-    * (S6) or a periodic HTTP poll (S5, the hko fetch loop). */
+    * (S6) or a periodic HTTP poll (S5, the hko fetch loop), fetched at
+    * most once per the module's `triggerMs`. */
   sealed trait ModuleSource
   final case class MqttTopic(topic: String) extends ModuleSource
-  final case class HttpEndpoint(url: String, minIntervalMs: Long = 1000L) extends ModuleSource
+  final case class HttpEndpoint(url: String) extends ModuleSource
 
   /** A module: where samples come from, how each micro-batch is transformed,
     * where results go (collection/post_collection, declaratively).
@@ -73,7 +74,7 @@ object ModuleRegistry {
     * publish, with `fetch_ts` (the actual poll time) as the reference's
     * fetch timestamp rather than an approximated now(). */
   private def hkoModule(url: String, place: String, sink: String, triggerMs: Long) =
-    Module("hko", HttpEndpoint(url, triggerMs),
+    Module("hko", HttpEndpoint(url),
       df => Pipelines.hkoPerDoc(df.withColumnRenamed("body", "doc"), place),
       sink,
       Pipelines.hkoPayloadCol, // the one wire-shape definition
@@ -226,9 +227,9 @@ object ModuleRegistry {
         }
         spark.readStream.format("graft-mqtt")
           .option("spoolDir", spoolDir).option("topic", topic).load()
-      case HttpEndpoint(url, minIntervalMs) =>
+      case HttpEndpoint(url) =>
         val r = spark.readStream.format("graft-http")
-          .option("url", url).option("minIntervalMs", minIntervalMs.toString)
+          .option("url", url).option("minIntervalMs", m.triggerMs.toString)
         // without a checkpoint the poll cache still needs a stable home —
         // ONE per (module, url) per JVM, not one per start(): repeated
         // restarts in a long-lived driver would otherwise leak a fresh

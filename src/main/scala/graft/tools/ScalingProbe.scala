@@ -1,17 +1,19 @@
 package graft.tools
 
-import graft.PlanCapture.CheckpointOps
-import graft.Engine
-import graft.operators.Dedup
-import org.apache.spark.sql.DataFrame
+import graft.{Engine, SparkEntry}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale-growth evidence harness: measures the registered exact ANCHORS
-  * against their production TWINS (SparkEntry.scaleTwins) on corpora m×
-  * the driver-generated sf0.1 tables, and prints per-doubling growth
-  * ratios. A linear operator doubles when the corpus doubles (ratio ≈ 2,
-  * less fixed overhead); an all-pairs anchor quadruples (ratio ≈ 4). The
-  * BASELINE.md "scaling evidence" table is produced by this tool.
+/** Scale-growth evidence harness: runs the registered exact ANCHORS and
+  * their production TWINS (SparkEntry.scaleTwins) on input directories m×
+  * the given sf directory, and prints one row per query per rung. A linear
+  * operator doubles when the corpus doubles (ratio ≈ 2, less fixed
+  * overhead); an all-pairs anchor quadruples (ratio ≈ 4). The BASELINE.md
+  * "scaling evidence" tables are produced by this tool.
+  *
+  * Every row is the registered query itself, `SparkEntry.queries(name)`,
+  * pointed at the rung directory: the ladder measures exactly the
+  * registered plans, with their registered knobs.
   *
   * The m× corpora are DERIVED from the driver tables, not synthesized
   * fresh: copy i of `documents` Caesar-shifts the text by i letters
@@ -20,57 +22,81 @@ import org.apache.spark.sql.functions._
   * ~zero, the "new content is genuinely new" shape a growing crawl has),
   * and copy i of `embeddings` rotates each vector's dimensions by i
   * (within-copy cosines unchanged; cross-copy cosines ~0 for generic
-  * vectors). Doc ids offset per copy so the union is a valid corpus.
+  * vectors). Copy i offsets its ids by i × (base max id + 1), so the union
+  * is a valid corpus with dense ids, and the planted media corpora keyed
+  * off `doc_id` stay inside their 21-bit group encoding. Every other table
+  * is linked in unchanged.
   *
   * `runMain graft.tools.ScalingProbe [sfDir] [maxM] [anchorMaxM] [onlyPrefixes]`
-  * — the 4th arg comma-filters pair labels by prefix (e.g. "qe13c,qe11d"
-  * extends just those ladders to m=32/64 without re-running the rest). */
+  * — without the 4th arg the rows are the scaleTwins anchors, each with
+  * its twin; with it, the rows are every registered name matching one of
+  * the comma-separated prefixes. Only a prefix's query id counts (the text
+  * before its first `_`, kept with the `_`): "qe13c,qe11d" picks the qe13c*
+  * and qe11d* queries, "qe3f_append" picks qe3f_cert_ivf_append. Anchors
+  * run only while m ≤ anchorMaxM; a missing time prints as -1.00, and a
+  * query that throws prints NaN with its error on stderr. */
 object ScalingProbe {
 
-  // one 62-character rotation cycle (a-z, 0-9, A-Z): the original
-  // 26-letter Caesar had period 26, so ladder copies i and i+26 were
-  // byte-IDENTICAL — beyond m=26 every rung raised the corpus's true
-  // duplication density (3x at m=64) and the qe13c ladder read as
-  // superlinear when the operator was fine. A 62-cycle keeps every copy
+  // one 62-character rotation cycle (a-z, 0-9, A-Z): a 26-letter Caesar
+  // has period 26, so copies i and i+26 would be byte-IDENTICAL and every
+  // rung past m=26 would raise the corpus's true duplication density (3x
+  // at m=64), reading as superlinear growth. A 62-cycle keeps every copy
   // pair distinct through m=62 (and only 2 of 64 collide at the top rung).
   private val alpha =
     (('a' to 'z') ++ ('0' to '9') ++ ('A' to 'Z')).mkString
 
-  private def caesar(c: org.apache.spark.sql.Column, i: Int): org.apache.spark.sql.Column =
+  private def caesar(c: Column, i: Int): Column =
     if (i % 62 == 0) c
     else {
       val k = i % 62
       translate(c, alpha, alpha.drop(k) + alpha.take(k))
     }
 
+  /** Writes the m× rung of `sfDir` into the directory `out`: `documents`
+    * and `embeddings` as m shifted copies (same schemas), every other
+    * table of `sfDir` as a symbolic link. */
+  def writeRung(spark: SparkSession, sfDir: String, m: Int, out: String): Unit = {
+    val base = Engine.Tables(spark, sfDir)
+    def copies(df: DataFrame, id: String)(shift: (DataFrame, Int) => DataFrame): DataFrame = {
+      val step = df.agg(max(col(id))).head().getLong(0) + 1
+      (0 until m).map(i => shift(df.withColumn(id, col(id) + lit(i * step)), i))
+        .reduce(_ unionByName _)
+    }
+    copies(base.documents, "doc_id")((d, i) => d.withColumn("text", caesar(col("text"), i)))
+      .write.parquet(s"$out/documents.parquet")
+    val emb = base.embeddings
+    val dim = emb.select(size(col("embedding"))).head().getInt(0)
+    copies(emb, "vec_id") { (e, i) =>
+      if (i % dim == 0) e
+      else e.withColumn("embedding", transform(sequence(lit(0), lit(dim - 1)),
+        j => element_at(col("embedding"), ((j + lit(i)) % dim) + 1)))
+    }.write.parquet(s"$out/embeddings.parquet")
+    val src = java.nio.file.Paths.get(sfDir).toAbsolutePath
+    val others = java.nio.file.Files.list(src)
+    try others.forEach { f =>
+      val name = f.getFileName.toString
+      if (name != "documents.parquet" && name != "embeddings.parquet")
+        java.nio.file.Files.createSymbolicLink(java.nio.file.Paths.get(out, name), f)
+    } finally others.close()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val maxM = if (args.length > 1) args(1).toInt else 8
     val anchorMaxM = if (args.length > 2) args(2).toInt else maxM
-    val only: Option[Seq[String]] =
-      if (args.length > 3) Some(args(3).split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-      else None
-    def wanted(label: String): Boolean = only.forall(_.exists(label.startsWith))
+    val registered = SparkEntry.queries.keySet
+    val rows: Seq[String] =
+      if (args.length <= 3) SparkEntry.scaleTwins.keys.toSeq.sorted
+      else {
+        val prefixes = args(3).split(",").toSeq.map(_.trim).filter(_.nonEmpty)
+          .map(p => p.indexOf('_') match { case -1 => p; case u => p.take(u + 1) })
+        prefixes.foreach(p => require(registered.exists(_.startsWith(p)),
+          s"no registered query matches the prefix $p"))
+        registered.filter(n => prefixes.exists(n.startsWith)).toSeq.sorted
+      }
     val spark = Engine.session("local[32]")
-    val docs0 = Engine.Tables(spark, sfDir).documents
-    val emb0 = Engine.Tables(spark, sfDir).embeddings
-    val dim = emb0.select(size(col("embedding"))).head().getInt(0)
-
-    def docsAt(m: Int): DataFrame =
-      (0 until m).map { i =>
-        docs0.select((col("doc_id") + lit(i.toLong * 1000000L)).as("doc_id"),
-          caesar(col("text"), i).as("text"), col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionByName _).auditedCheckpoint()
-
-    def embAt(m: Int): DataFrame =
-      (0 until m).map { i =>
-        val rot =
-          if (i % dim == 0) col("embedding")
-          else transform(sequence(lit(0), lit(dim - 1)),
-            j => element_at(col("embedding"), ((j + lit(i)) % dim) + 1))
-        emb0.select((col("vec_id") + lit(i.toLong * 1000000L)).as("vec_id"),
-          rot.as("embedding"), col("label"))
-      }.reduce(_ unionByName _).auditedCheckpoint()
+    val nd = Engine.parquetRowCount(spark, s"$sfDir/documents.parquet")
+    val ne = Engine.parquetRowCount(spark, s"$sfDir/embeddings.parquet")
 
     // construction INSIDE the timed section (Bench's own shape): eager
     // localCheckpoint fit/assign stages run at DataFrame construction,
@@ -85,411 +111,38 @@ object ScalingProbe {
     }
 
     val ms = Iterator.iterate(1)(_ * 2).takeWhile(_ <= maxM).toSeq
-    println(f"${"pair"}%-34s ${"m"}%3s ${"rows"}%8s ${"anchor_s"}%9s ${"twin_s"}%8s")
+    println(f"${"anchor"}%-28s ${"twin"}%-28s ${"m"}%3s ${"docs"}%8s ${"vecs"}%8s " +
+      f"${"anchor_s"}%9s ${"twin_s"}%8s")
     for (m <- ms) {
-      val docs = docsAt(m); val emb = embAt(m)
-      val nd = m * 5000L; val ne = m * 2000L
-      spark.sparkContext.setJobDescription(s"scaling m=$m")
-
-      // threshold 0.8 (the realistic near-dup band) with the PRODUCTION
-      // auto-sizing schedule (nbits ~ log2(n/32), tables from the 0.95
-      // recall target): a first probe run with knobs PINNED at the sf0.1
-      // derivation (6 bits / 39 tables) measured the twin GROWING FASTER
-      // than the exact anchor (4.4/9.7/22.7/47.6 s at m=2/4/8/16) because
-      // fixed 64 buckets make within-bucket pair counts quadratic — the
-      // knob schedule is load-bearing, not a tuning detail (recorded in
-      // BASELINE.md scaling evidence)
-      if (wanted("qe7_embed")) {
-        val embAnchor = if (m <= anchorMaxM)
-          time(Dedup.embeddingNearDups(emb, "vec_id", "embedding", 0.8)) else -1.0
-        val embTwin = time(Dedup.embeddingNearDupsBlocked(
-          emb, "vec_id", "embedding", 0.8, dim = dim, nHint = ne))
-        println(f"${"qe7_embed exact-vs-srp"}%-34s $m%3d $ne%8d $embAnchor%9.2f $embTwin%8.2f")
-      }
-
-      // the sound scale path at WIDE angles (threshold 0.45, where the
-      // SRP auto-sizer refuses): k-means cells, nlist scaled to hold
-      // ~250 vectors/cell so within-cell verify stays constant-quadratic
-      if (wanted("qe7c_semantic")) {
-        val semTwin = time(Dedup.semanticDedup(
-          emb, "vec_id", "embedding", 0.45,
-          nlist = math.max(8, (ne / 250).toInt), nHint = ne))
-        println(f"${"qe7c_semantic kmeans-cells@0.45"}%-34s $m%3d $ne%8d ${-1.0}%9.2f $semTwin%8.2f")
-      }
-
-      if (wanted("qe2_jaccard")) {
-        val jacAnchor = if (m <= anchorMaxM)
-          time(Dedup.jaccardPairs(docs, 3, 0.5)) else -1.0
-        val jacTwin = time(Dedup.jaccardVerify(
-          docs, Dedup.minhashCandidatesCapped(docs, cap = 8), 3, 0.5))
-        println(f"${"qe2_jaccard exact-vs-lsh"}%-34s $m%3d $nd%8d $jacAnchor%9.2f $jacTwin%8.2f")
-      }
-
-      if (wanted("qe58_containment")) {
-        val conAnchor = if (m <= anchorMaxM)
-          time(Dedup.containmentPairs(docs, 3, 0.5)) else -1.0
-        val conTwin = time(Dedup.containmentCandidates(docs, 3, 64, 0.5))
-        println(f"${"qe58_containment exact-vs-sketch"}%-34s $m%3d $nd%8d $conAnchor%9.2f $conTwin%8.2f")
-      }
-
-      // the qe13c production twin END-TO-END (capped LSH candidates →
-      // exact-Jaccard verify → connected components → survivor anti-join):
-      // the newest production path, ladder-extended to m=32/64 (r10
-      // verdict item #7). No anchor column — its declared anchor chain
-      // (qe13 → qe13b) is covered by the qe2 pair above.
-      if (wanted("qe13c_fuzzy")) {
-        val t = time {
-          val pairs = Dedup.jaccardVerify(docs,
-            Dedup.minhashCandidatesCapped(docs, cap = 8), 3, 0.5)
-          val drops = graft.operators.DupClusters.clusters(pairs)
-            .filter(col("doc_id") =!= col("cluster")).select("doc_id")
-          docs.join(drops, Seq("doc_id"), "left_anti").select("doc_id", "n_chars")
-        }
-        println(f"${"qe13c_fuzzy dedup-capped-e2e"}%-34s $m%3d $nd%8d ${-1.0}%9.2f $t%8.2f")
-      }
-
-      // r14 media/crawl dedup legs, end-to-end (synthesize → decode →
-      // dedup): all are expected LINEAR — the only joins are hash-key
-      // equi-joins — and the per-row real decode (ImageIO / javax.sound)
-      // is the dominant constant. The image rungs stop at m=8: the
-      // planted corpus's 21-bit group encoding refuses past that with
-      // the ladder's 1e6-per-copy id offsets (operator itself unbounded).
-      if (wanted("qe69_image") && m <= 8) {
-        val t = time {
-          graft.operators.ImageDedup.dedupByPixels(
-            graft.operators.ImageDedup.syntheticDupImageCorpus(docs.select("doc_id")))
-            .select("doc_id", "is_kept")
-        }
-        println(f"${"qe69_image dedup-pixels-e2e"}%-34s $m%3d $nd%8d ${-1.0}%9.2f $t%8.2f")
-      }
-      if (wanted("qe70_image") && m <= 8) {
-        val t = time {
-          graft.operators.ImageDedup.nearDupPairs(
-            graft.operators.ImageDedup.syntheticNearDupImageCorpus(docs.select("doc_id")),
-            maxHamming = 2)
-        }
-        println(f"${"qe70_image neardup-dhash-e2e"}%-34s $m%3d $nd%8d ${-1.0}%9.2f $t%8.2f")
-      }
-      if (wanted("qe71_audio")) {
-        val t = time {
-          graft.operators.AudioDedup.dedupBySamples(
-            graft.operators.AudioDedup.syntheticDupAudioCorpus(docs.select("doc_id")))
-            .select("doc_id", "is_kept")
-        }
-        println(f"${"qe71_audio dedup-samples-e2e"}%-34s $m%3d $nd%8d ${-1.0}%9.2f $t%8.2f")
-      }
-      // the r16 predictive-codec leg: same decode-dominated linear shape
-      // expected as qe71, with the from-scratch IMA decoder in place of
-      // javax.sound (the ADPCM corpus's 48-bit id blocks carry no
-      // encoding bound, so the offset-union docs frame ladders directly)
-      if (wanted("qe71c_audio")) {
-        val t = time {
-          graft.operators.AudioDedup.dedupBySamples(
-            graft.operators.AudioDedup.syntheticDupAudioCorpusAdpcm(docs.select("doc_id")))
-            .select("doc_id", "is_kept")
-        }
-        println(f"${"qe71c_audio dedup-adpcm-e2e"}%-34s $m%3d $nd%8d ${-1.0}%9.2f $t%8.2f")
-      }
-      // the r17 2nd-order predictive leg: same decode-dominated linear
-      // shape, with the from-scratch MS decoder (the MS corpus's
-      // 64-bit id blocks carry no encoding bound either)
-      if (wanted("qe71d_audio")) {
-        val t = time {
-          graft.operators.AudioDedup.dedupBySamples(
-            graft.operators.AudioDedup.syntheticDupAudioCorpusMsAdpcm(docs.select("doc_id")))
-            .select("doc_id", "is_kept")
-        }
-        println(f"${"qe71d_audio dedup-msadpcm-e2e"}%-34s $m%3d $nd%8d ${-1.0}%9.2f $t%8.2f")
-      }
-      // the r17 cross-container IMA leg (AIFF-C ima4 packets; 54-bit id
-      // predictors, no encoding bound)
-      if (wanted("qe71e_audio")) {
-        val t = time {
-          graft.operators.AudioDedup.dedupBySamples(
-            graft.operators.AudioDedup.syntheticDupAudioCorpusIma4(docs.select("doc_id")))
-            .select("doc_id", "is_kept")
-        }
-        println(f"${"qe71e_audio dedup-ima4-e2e"}%-34s $m%3d $nd%8d ${-1.0}%9.2f $t%8.2f")
-      }
-      // the r17 extensible leg (0xFFFE PCM at 16/24-bit vs tag-1 twins)
-      if (wanted("qe71h_audio")) {
-        val t = time {
-          graft.operators.AudioDedup.dedupBySamples(
-            graft.operators.AudioDedup.syntheticDupAudioCorpusWavX(docs.select("doc_id")))
-            .select("doc_id", "is_kept")
-        }
-        println(f"${"qe71h_audio dedup-wavx-e2e"}%-34s $m%3d $nd%8d ${-1.0}%9.2f $t%8.2f")
-      }
-      // the r17 lossless leg (FLAC Rice/fixed/LPC frames vs WAV twins)
-      if (wanted("qe71g_audio")) {
-        val t = time {
-          graft.operators.AudioDedup.dedupBySamples(
-            graft.operators.AudioDedup.syntheticDupAudioCorpusFlac(docs.select("doc_id")))
-            .select("doc_id", "is_kept")
-        }
-        println(f"${"qe71g_audio dedup-flac-e2e"}%-34s $m%3d $nd%8d ${-1.0}%9.2f $t%8.2f")
-      }
-      // the r17 AU container leg (Sun .snd µ-law + BE s16 vs WAV twins)
-      if (wanted("qe71f_audio")) {
-        val t = time {
-          graft.operators.AudioDedup.dedupBySamples(
-            graft.operators.AudioDedup.syntheticDupAudioCorpusAu(docs.select("doc_id")))
-            .select("doc_id", "is_kept")
-        }
-        println(f"${"qe71f_audio dedup-au-e2e"}%-34s $m%3d $nd%8d ${-1.0}%9.2f $t%8.2f")
-      }
-      // the video/audio-perceptual rungs (r14 closing) synthesize from a
-      // DENSE id range instead of the offset-union docs frame: the video
-      // corpus's (group, frame) keys live in 21 bits of dHash encoding
-      // (g*5+4 < 2^21), which the ladder's 1e6-per-copy offsets blow past
-      // m=2 — with dense ids the same row counts ladder cleanly. The
-      // operators themselves are id-unbounded; only the planted corpora
-      // carry the encoding bound.
-      def denseDocs: DataFrame = spark.range(nd).toDF("doc_id")
-      if (wanted("qe72_video")) {
-        val t = time {
-          graft.operators.VideoDedup.dedupByFrames(
-            graft.operators.VideoDedup.syntheticDupVideoCorpus(denseDocs))
-            .select("doc_id", "is_kept")
-        }
-        println(f"${"qe72_video dedup-frames-e2e"}%-34s $m%3d $nd%8d ${-1.0}%9.2f $t%8.2f")
-      }
-      if (wanted("qe73_video")) {
-        val t = time {
-          graft.operators.VideoDedup.containmentPairs(
-            graft.operators.VideoDedup.syntheticNearDupVideoCorpus(denseDocs),
-            maxHamming = 2, maxFrames = 12) // the registered qe73 budget
-        }
-        println(f"${"qe73_video containment-e2e"}%-34s $m%3d $nd%8d ${-1.0}%9.2f $t%8.2f")
-      }
-      if (wanted("qe74_audio")) {
-        val t = time {
-          graft.operators.AudioDedup.nearDupPairs(
-            graft.operators.AudioDedup.syntheticNearDupAudioCorpus(denseDocs),
-            maxHamming = 2)
-        }
-        println(f"${"qe74_audio neardup-ehash-e2e"}%-34s $m%3d $nd%8d ${-1.0}%9.2f $t%8.2f")
-      }
-      if (wanted("qe75_crawl")) {
-        val t = time {
-          graft.queries.Capstones.crawlMediaDedup(
-            graft.operators.Multimodal.mixedDupMediaCorpus(denseDocs))
-        }
-        println(f"${"qe75_crawl media-dedup-e2e"}%-34s $m%3d $nd%8d ${-1.0}%9.2f $t%8.2f")
-      }
-      if (wanted("qe68_url")) {
-        val t = time {
-          graft.operators.UrlOps.dedupByCanonical(
-            graft.operators.UrlOps.syntheticUrlCorpus(docs.select("doc_id")),
-            "doc_id", "url").select("doc_id", "is_kept")
-        }
-        println(f"${"qe68_url dedup-canonical-e2e"}%-34s $m%3d $nd%8d ${-1.0}%9.2f $t%8.2f")
-      }
-
-      // certificate economics (r11 verdict #2): the whole-corpus per-pair
-      // certificate (anchor column) embeds a quadratic exact anchor; the
-      // 100x mode (twin column, qe65) keeps the PRODUCTION candidate path
-      // at corpus scale but computes anchor + per-pair compare on a
-      // fixed-SIZE hash-mod sample — mod 4m holds the sample at ~1250
-      // docs per 5k-doc copy, so anchor work is CONSTANT per rung and
-      // the certificate's growth is the candidate path's own (linear),
-      // not the anchor's (quadratic)
-      if (wanted("qe65_cert")) {
-        val full = if (m <= anchorMaxM) time {
-          graft.operators.Certificates.pairsFound(
-            Dedup.jaccardPairs(docs, 3, 0.5), Dedup.minhashCandidates(docs), "j")
-        } else -1.0
-        val k = 4 * m
-        val sampled = time {
-          def inSample(c: org.apache.spark.sql.Column) =
-            graft.operators.Sampling.modSample(c, k)
-          val exact = Dedup.jaccardPairs(docs.filter(inSample(col("doc_id"))), 3, 0.5)
-          val cand = Dedup.minhashCandidates(docs)
-            .filter(inSample(col("da")) && inSample(col("db")))
-          graft.operators.Certificates.pairsFound(exact, cand, "j")
-        }
-        println(f"${"qe65_cert full-vs-sampled"}%-34s $m%3d $nd%8d $full%9.2f $sampled%8.2f")
-      }
-
-      // the embedding family's certificate economics (qe66): same shape
-      // as the qe65 row — full form embeds the quadratic all-pairs cosine
-      // anchor, sampled mode holds the sample constant via mod 4m while
-      // the production SRP-blocked path scans the whole corpus. The
-      // blocked knobs are pinned EXPLICITLY (occupancy-derived nbits,
-      // tables capped at 64): past m=2 the 0.45-threshold auto-sizer
-      // refuses (>64 tables, the documented wide-angle SRP economics),
-      // and this row measures COST growth — the recall floor lives in
-      // the registered qe66 at the driver SFs, not here
-      if (wanted("qe66_cert")) {
-        // nbits derives in the CALLEE from nHint (the production
-        // occupancy schedule — never a re-implemented copy that could
-        // drift); only tables is pinned at the 64 cap, which past m=2
-        // the 0.45-threshold recall target would refuse
-        def blockedAll = Dedup.embeddingNearDupsBlocked(emb, "vec_id",
-          "embedding", 0.45, tables = 64, dim = dim, nHint = ne)
-        val full = if (m <= anchorMaxM) time {
-          graft.operators.Certificates.pairRecall("blocked",
-            Dedup.embeddingNearDups(emb, "vec_id", "embedding", 0.45)
-              .select("da", "db"),
-            blockedAll.select("da", "db"), 0.7)
-        } else -1.0
-        val k = 4 * m
-        val sampled = time {
-          def inSample(c: org.apache.spark.sql.Column) =
-            graft.operators.Sampling.modSample(c, k)
-          graft.operators.Certificates.pairRecall("blocked_sampled",
-            Dedup.embeddingNearDups(emb.filter(inSample(col("vec_id"))),
-              "vec_id", "embedding", 0.45).select("da", "db"),
-            blockedAll.filter(inSample(col("da")) && inSample(col("db")))
-              .select("da", "db"), 0.7)
-        }
-        println(f"${"qe66_cert full-vs-sampled"}%-34s $m%3d $ne%8d $full%9.2f $sampled%8.2f")
-      }
-
-      // the CAPSTONES a 100 TB user actually runs (r12 verdict #6): the
-      // full composed pipelines qe33 (hash split -> exact dedup -> 5-gram
-      // decontamination -> token-budget mix -> sharded pack manifest) and
-      // qe40 (split -> dedup -> per-source z-score gate -> mix -> pack),
-      // via the ONE shared definition the registered queries run
-      // (queries/Capstones.scala — never a re-implemented copy that could
-      // drift). No anchor column — every stage is already a bounded
-      // production path; these rows certify the COMPOSITION stays linear
-      // (no intermediate explodes when all stages run in one plan). The
-      // mix token budget scales with m so the later stages keep constant
-      // per-source selectivity instead of degenerating to a fixed-size
-      // tail of the pipeline.
-      if (wanted("qe33_pipeline")) {
-        val t = time(graft.queries.Capstones.deconPipeline(docs, 1000L * m))
-        println(f"${"qe33_pipeline capstone-decon"}%-34s $m%3d $nd%8d ${-1.0}%9.2f $t%8.2f")
-      }
-
-      if (wanted("qe40_pipeline")) {
-        val t = time(graft.queries.Capstones.gatedPipeline(docs, 1000L * m))
-        println(f"${"qe40_pipeline capstone-zgate"}%-34s $m%3d $nd%8d ${-1.0}%9.2f $t%8.2f")
-      }
-
-      // the APPEND paths (r15 verdict #7): at 100 TB the append IS the
-      // steady state, and these rows price it against the from-scratch
-      // anchor. qe3f: at FROZEN centroids, appending a fixed 2000-vector
-      // batch costs one batch assignment (twin — expected FLAT vs m),
-      // while re-assigning the whole m× union costs a full corpus map
-      // (anchor — expected linear); the postings base is a no-touch
-      // partition concat in production, and the registered qe3f
-      // certificate proves searching appended postings is row-identical
-      // to the scratch re-assign, so pricing assignment alone is the
-      // honest append cost.
-      if (wanted("qe3f_append")) {
-        import graft.operators.IvfIndex
-        val batch = {
-          val i = m // one more rotated copy beyond the m in the corpus
-          val rot =
-            if (i % dim == 0) col("embedding")
-            else transform(sequence(lit(0), lit(dim - 1)),
-              j => element_at(col("embedding"), ((j + lit(i)) % dim) + 1))
-          emb0.select((col("vec_id") + lit(i.toLong * 1000000L)).as("vec_id"),
-            rot.as("embedding"), col("label"))
-        }.auditedCheckpoint()
-        // frozen quantizer fitted on the stored corpus, OUTSIDE the
-        // clocks (production state, not append work); production
-        // occupancy schedule like the qe7c row
-        val cents = IvfIndex.build(emb, "vec_id", "embedding",
-          math.max(8, (ne / 250).toInt), 42L, nHint = ne)._2.auditedCheckpoint()
-        val anchor = if (m <= anchorMaxM)
-          time(IvfIndex.assignInline(emb.unionByName(batch), cents, "embedding"))
-        else -1.0
-        val twin = time(IvfIndex.assignInline(batch, cents, "embedding"))
-        println(f"${"qe3f_append scratch-vs-batch"}%-34s $m%3d $ne%8d $anchor%9.2f $twin%8.2f")
-      }
-
-      // qe76b: evolving the frozen media key set by a fixed 5000-doc
-      // batch costs one batch decode + a key-set-sized distinct (twin —
-      // expected flat-with-a-whisper: the distinct's input grows with m
-      // but is keys-only, while the decode dominates), vs re-decoding
-      // the whole stored∪batch corpus from scratch (anchor — linear in
-      // m, decode-heavy). Dense ids (the media corpora's 21-bit group
-      // encoding; see the qe72 note); prior keys checkpointed outside
-      // the clock — they are the stored state, never re-decoded.
-      if (wanted("qe76b_append")) {
-        val priorKeys = graft.queries.Capstones.mediaKeySet(
-          graft.operators.Multimodal.mixedDupMediaCorpus(denseDocs))
-          .auditedCheckpoint()
-        def batchCorpus = graft.operators.Multimodal.mixedDupMediaCorpus(
-          spark.range(nd, nd + 5000L).toDF("doc_id"))
-        val anchor = if (m <= anchorMaxM) time {
-          graft.queries.Capstones.mediaKeySet(
-            graft.operators.Multimodal.mixedDupMediaCorpus(
-              spark.range(0L, nd + 5000L).toDF("doc_id")))
-        } else -1.0
-        val twin = time(
-          graft.queries.Capstones.appendKeySet(priorKeys, batchCorpus))
-        println(f"${"qe76b_append scratch-vs-batch"}%-34s $m%3d $nd%8d $anchor%9.2f $twin%8.2f")
-      }
-
-      // the r16 MIN-ID streaming survivor priced at scale (r16 verdict
-      // #5): state grows to one long per distinct content key of the m×
-      // stored corpus — fed through the STREAM in 20k-doc chunks, the
-      // crawl-arrival shape — then the MEASURED row is a FIXED 5000-doc
-      // batch processed against that state. Expected FLAT vs m: a
-      // micro-batch pays decode + state point-lookups for ITS OWN keys
-      // only (RocksDB get/put, never a state scan), so stored-corpus
-      // size must not price the batch. Dense ids (the media corpora's
-      // 21-bit group encoding); collects happen OUTSIDE the clock and
-      // are chunk-bounded (media payloads are KB-scale).
-      if (wanted("qe76s_stream")) {
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import spark.implicits._
-        val input = MemoryStream[(Long, Array[Byte])](spark)
-        // noop sink, NOT memory: a memory sink would accumulate ~nd
-        // survivor rows of state-build output on the driver, adding heap/
-        // GC pressure proportional to m to the very batch measurement
-        // expected to be flat vs m (review r17); nothing reads the sink
-        val ckpt = java.nio.file.Files
-          .createTempDirectory(s"minid_ladder_$m").toString
-        val q = graft.queries.Capstones.crawlMediaDedupStreamMinId(
-            input.toDF().toDF("doc_id", "payload"))
-          .writeStream.format("noop").queryName(s"ladder_minid_$m")
-          .option("checkpointLocation", ckpt)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
-        try {
-          def feed(lo: Long, hi: Long): Double = {
-            var a = lo
-            var sec = 0.0
-            while (a < hi) {
-              val b = math.min(hi, a + 20000L)
-              val rows = graft.operators.Multimodal.mixedDupMediaCorpus(
-                spark.range(a, b).toDF("doc_id"))
-                .select("doc_id", "payload").collect()
-                .map(r => (r.getLong(0), r.getAs[Array[Byte]]("payload"))).toSeq
-              input.addData(rows)
-              val t0 = System.nanoTime()
-              q.processAllAvailable()
-              sec += (System.nanoTime() - t0) / 1e9
-              a = b
-            }
-            sec
+      val dir = java.nio.file.Files.createTempDirectory(s"scaling_m$m").toString
+      try {
+        writeRung(spark, sfDir, m, dir)
+        // rung fits must not evict live keys from the default store,
+        // whose prune keeps a bounded number per kind
+        spark.conf.set("spark.graft.artifacts.dir", s"$dir/artifacts")
+        spark.sparkContext.setJobDescription(s"scaling m=$m")
+        // the anchor chains (qe13 → qe13b → qe13c, qe3 → qe3c → qe3d →
+        // qe3e) share names: each name runs at most once per rung
+        val timed = scala.collection.mutable.Map.empty[String, Double]
+        def run(name: String): Double = timed.getOrElseUpdate(name,
+          try time(SparkEntry.queries(name)(spark, dir))
+          catch { case e: Exception =>
+            System.err.println(s"[scaling] $name at m=$m failed: $e"); Double.NaN
+          })
+        for (q <- rows) {
+          val (anchor, twin) = SparkEntry.scaleTwins.get(q) match {
+            case Some(tw) => (q, tw)
+            case None => ("-", q)
           }
-          feed(0L, nd) // state build: not the measured row
-          val twin = feed(nd, nd + 5000L) // the fixed batch at full state
-          println(f"${"qe76s_stream minid-batch@state"}%-34s $m%3d $nd%8d ${-1.0}%9.2f $twin%8.2f")
-        } finally q.stop()
-      }
-
-      // the qe11d split-packer (window cumsum + sequence explode) at the
-      // registered 8-shard key: per-shard local sorts, no global order
-      if (wanted("qe11d_pack")) {
-        val t = time {
-          val withTok = docs.select(col("doc_id"),
-              graft.operators.TextAnalysis.tokenCount(col("text")).as("n_tok"))
-            .withColumn("shard", col("doc_id") % 8)
-          graft.operators.SeqPack.packSplitSharded(
-            withTok, "shard", "doc_id", "n_tok", 2048L)
+          val anchorS = if (anchor != "-" && m <= anchorMaxM) run(anchor) else -1.0
+          val twinS = run(twin)
+          println(f"$anchor%-28s $twin%-28s $m%3d ${m * nd}%8d ${m * ne}%8d $anchorS%9.2f $twinS%8.2f")
         }
-        println(f"${"qe11d_pack split-sharded"}%-34s $m%3d $nd%8d ${-1.0}%9.2f $t%8.2f")
+      } finally {
+        spark.conf.unset("spark.graft.artifacts.dir")
+        val p = new org.apache.hadoop.fs.Path(dir)
+        p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
       }
-
-      docs.unpersist(); emb.unpersist()
     }
     spark.stop()
   }

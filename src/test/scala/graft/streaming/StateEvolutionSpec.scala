@@ -17,7 +17,8 @@ import scala.jdk.CollectionConverters._
   * state variable in its own RocksDB column family, so v2 of a processor
   * can ADD a variable and resume from a v1 checkpoint: old state reads
   * back, the new variable starts empty, timers fire across the boundary.
-  * Both registered TWS paths are covered: split-packing and the watchdog. */
+  * Covered: the registered split-packer, and a processing-time watchdog
+  * whose v1 and v2 processors are defined in the test. */
 /** v2 of [[StreamingSeqPack.PackSplitProcessor]]: same "cum" variable
   * (same name/encoder — reads v1 state), plus an ADDED per-shard doc
   * counter that did not exist when the v1 checkpoint was written. The
@@ -284,6 +285,29 @@ class StateEvolutionSpec extends SparkTestBase {
   }
 
   test("watchdog timer armed by v1 fires after a restart under a v2 processor with added state") {
+    /** v1 watchdog: per-key processing-time timer that slides on every
+      * update and emits the 888.8 sentinel when it fires. */
+    class WatchdogProcessorV1(toleranceMs: Long)
+        extends StatefulProcessor[String, Reading, WatchOut] {
+      @transient private var timerSet: ValueState[Long] = _
+      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+        timerSet = getHandle.getValueState[Long]("timer", Encoders.scalaLong, TTLConfig.NONE)
+      }
+      override def handleInputRows(key: String, rows: Iterator[Reading],
+                                   timerValues: TimerValues): Iterator[WatchOut] = {
+        val latest = rows.maxBy(r => (r.ts.getTime, r.value))
+        if (timerSet.exists()) getHandle.deleteTimer(timerSet.get())
+        val fireAt = timerValues.getCurrentProcessingTimeInMs() + toleranceMs
+        getHandle.registerTimer(fireAt)
+        timerSet.update(fireAt)
+        Iterator.single(WatchOut(key, latest.value, stale = false))
+      }
+      override def handleExpiredTimer(key: String, timerValues: TimerValues,
+                                      expiredTimerInfo: ExpiredTimerInfo): Iterator[WatchOut] = {
+        timerSet.clear()
+        Iterator.single(WatchOut(key, 888.8, stale = true))
+      }
+    }
     /** v2 watchdog: same "timer" variable plus an added last-value cache. */
     class WatchdogProcessorV2(toleranceMs: Long)
         extends StatefulProcessor[String, Reading, WatchOut] {
@@ -321,9 +345,11 @@ class StateEvolutionSpec extends SparkTestBase {
           seen.add(WatchOut(r.getString(0), r.getDouble(1), r.getBoolean(2))))
         ()
       }
-      // phase 1: SHIPPED v1 watchdog sees d0, arms its tolerance timer,
-      // and stops before it can fire
-      val q1 = WatchdogTws.stalenessWatchdogTws(input.toDS(), toleranceMs = 3000)
+      // phase 1: the v1 watchdog sees d0, arms its tolerance timer, and
+      // stops before it can fire
+      val q1 = input.toDS().groupByKey(_.key)
+        .transformWithState(new WatchdogProcessorV1(3000),
+          TimeMode.ProcessingTime(), OutputMode.Append(), Encoders.product[WatchOut])
         .toDF().writeStream
         .option("checkpointLocation", ckpt)
         .outputMode(OutputMode.Append())

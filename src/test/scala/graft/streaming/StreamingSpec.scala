@@ -131,7 +131,7 @@ class ModuleRegistrySpec extends SparkTestBase {
         |  {"place": "Happy Valley", "value": 19.0, "unit": "C"},
         |  {"place": "Happy Valley", "value": 19.5, "unit": "C"}]}}""".stripMargin)
     val m = ModuleRegistry.modules("hko").copy(
-      source = ModuleRegistry.HttpEndpoint(doc.toUri.toString, minIntervalMs = 200L),
+      source = ModuleRegistry.HttpEndpoint(doc.toUri.toString),
       triggerMs = 100L)
     val q = ModuleRegistry.start(spark, m, spool, None)
     try {
@@ -702,37 +702,6 @@ class StatefulOpsSpec extends SparkTestBase {
     // spot-check the reference formula at t=10: rate=(90-80)/(10+1)
     val atT10 = got(1)
     assert(math.abs(atT10.batt_use_per_sec.get - 10.0 / 11.0) < 1e-9)
-  }
-
-  test("X3 watchdog (transformWithState form) emits sentinel via timer") {
-    // transformWithState needs column families -> RocksDB state store
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[Reading](spark)
-    val q = WatchdogTws.stalenessWatchdogTws(input.toDS(), toleranceMs = 500)
-      .writeStream.format("memory").queryName("t_x3tws").outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("200 milliseconds"))
-      .start()
-    def pollUntil(deadlineMs: Long)(p: Seq[WatchOut] => Boolean): Seq[WatchOut] = {
-      val end = System.currentTimeMillis() + deadlineMs
-      var rows = Seq.empty[WatchOut]
-      while (System.currentTimeMillis() < end && !p(rows)) {
-        Thread.sleep(100)
-        rows = spark.table("t_x3tws").as[WatchOut].collect().toSeq
-      }
-      rows
-    }
-    try {
-      input.addData(Reading("d0", new Timestamp(1700000000000L), 19.5))
-      val fresh = pollUntil(10000)(_.contains(WatchOut("d0", 19.5, stale = false)))
-      assert(fresh.contains(WatchOut("d0", 19.5, stale = false)), s"got $fresh")
-      val stale = pollUntil(15000)(_.contains(WatchOut("d0", 888.8, stale = true)))
-      assert(stale.contains(WatchOut("d0", 888.8, stale = true)),
-        s"expected timer-driven sentinel, got $stale")
-    } finally {
-      q.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
   }
 
   test("X3 watchdog emits sentinel 888.8 after processing-time timeout") {
