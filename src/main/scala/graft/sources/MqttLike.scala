@@ -62,10 +62,11 @@ object MqttLike {
     *     permanent tombstone that stops any later writer re-claiming a slot
     *     whose msg already landed.
     *
-    * A crash between 2 and 3 leaves a contentful claim with no msg —
-    * [[repair]] (run by the reader's every offset poll, and by a publisher
-    * on its first claim collision) completes step 3 idempotently, so a dead
-    * publisher can never wedge the topic's dense prefix. */
+    * A crash between 2 and 3 leaves a contentful claim with no msg — the
+    * reader promotes it (a full [[repair]] on a stream's first offset
+    * poll, then [[denseFrom]] at the frontier), and so does a publisher
+    * on its first claim collision. Completing step 3 is idempotent, so a
+    * dead publisher can never wedge the topic's dense prefix. */
   def publish(spoolDir: String, topic: String, payload: String): Long =
     publishFrom(spoolDir, topic, payload, "", nextSeq(laneDirOf(spoolDir, topic, "")))
 
@@ -95,9 +96,10 @@ object MqttLike {
     }
     var claimed = false
     // repair lazily: an eager repair() here is a full directory listing per
-    // message (O(n), O(n²) over a topic's life). The reader already repairs
-    // the topic on each offset poll; a publisher only needs it when a claim
-    // collision hints at a dead writer's un-promoted claim wedging the seq.
+    // message (O(n), O(n²) over a topic's life). The reader already
+    // promotes a dead writer's claim when its walk reaches it; a publisher
+    // only needs repair when a claim collision hints at such a claim
+    // wedging the seq.
     var repaired = false
     while (!claimed) {
       try {
@@ -114,8 +116,13 @@ object MqttLike {
     }
     promote(dir, seq)
     Files.deleteIfExists(tmp)
+    seqHints.put(dir.toAbsolutePath.normalize, seq + 1)
     seq
   }
+
+  /** The next free seq of each topic this JVM has published to, keyed by
+    * absolute lane dir. A hint only: [[nextSeqIn]] validates it before use. */
+  private val seqHints = new java.util.concurrent.ConcurrentHashMap[Path, Long]()
 
   /** Step 3: expose a claimed slot as `<seq>.msg`. Racing a repairer is
     * fine — exactly one link wins; the loser's EEXIST means "already
@@ -172,12 +179,29 @@ object MqttLike {
     msgs ++ promoted
   }
 
-  /** The reader's per-trigger topic poll: repair wedges AND compute the
-    * dense prefix from the SAME listing (two full listings per
-    * trigger otherwise — O(spool) driver work doubled for nothing). */
+  /** A full-listing topic poll (the reader's first on a stream instance,
+    * i.e. at start and restart): repair wedges, age tmp orphans AND
+    * compute the dense prefix from the SAME listing. Later polls walk on
+    * from the count with [[denseFrom]]. */
   def repairAndDensePrefix(dir: Path): Long = {
     val visible = repairFrom(dir, listNames(dir))
     Iterator.from(0).takeWhile(i => visible.contains(i.toLong)).size.toLong
+  }
+
+  /** The dense prefix, walked on from a known one: `<n>.msg` present
+    * advances; a `.<n>.claim` with no msg is a dead (or not yet finished)
+    * publisher's, promoted here as [[repair]] would. Claims are dense and
+    * never deleted, so from a dense prefix this equals
+    * [[repairAndDensePrefix]]'s answer at O(new messages) instead of
+    * O(topic): an idle topic costs two stats. */
+  private[sources] def denseFrom(dir: Path, from: Long): Long = {
+    def visible(n: Long): Boolean = Files.exists(dir.resolve(s"$n.msg")) ||
+      (Files.exists(dir.resolve(s".$n.claim")) && {
+        promote(dir, n); Files.exists(dir.resolve(s"$n.msg"))
+      })
+    var n = from
+    while (visible(n)) n += 1
+    n
   }
 
   private val TmpOrphanMs = 15L * 60 * 1000
@@ -237,10 +261,19 @@ object MqttLike {
     Paths.get(spoolDir, sanitize(topic))
   }
 
-  /** The next free seq in a topic — the one listing a cached-seq publisher
-    * ([[publishFrom]]) pays, at open() instead of per message. */
-  def nextSeqIn(spoolDir: String, topic: String, substream: String): Long =
-    nextSeq(laneDirOf(spoolDir, topic, substream))
+  /** The next free seq in a topic, for a cached-seq publisher
+    * ([[publishFrom]]) at open() instead of per message. It starts from
+    * this JVM's last publish into the topic: valid if its predecessor claim
+    * exists (the same O(1) probe publishFrom makes), then walked forward
+    * ([[denseFrom]]) over what other publishers added since. With no hint,
+    * or one the topic no longer backs (directory deleted and recreated),
+    * it lists the topic. */
+  def nextSeqIn(spoolDir: String, topic: String, substream: String): Long = {
+    val dir = laneDirOf(spoolDir, topic, substream)
+    val hint = seqHints.getOrDefault(dir.toAbsolutePath.normalize, 0L)
+    if (hint > 0 && Files.exists(dir.resolve(s".${hint - 1}.claim"))) denseFrom(dir, hint)
+    else nextSeq(dir)
+  }
 }
 
 class MqttLikeTable(rawProps: Map[String, String]) extends Table with SupportsRead {
@@ -292,10 +325,16 @@ class MqttLikeMicroBatchStream(spoolDir: String, topic: String) extends MicroBat
 
   override def initialOffset(): Offset = SeqOffset(0L)
   override def deserializeOffset(json: String): Offset = SeqOffset.parse(json)
-  // repair first: a publisher that died mid-publish must not wedge the
-  // dense prefix forever — the claim protocol makes completion safe from
-  // the reader side (see MqttLike.publish docs)
-  override def latestOffset(): Offset = SeqOffset(MqttLike.repairAndDensePrefix(dir))
+  // The dense prefix this instance has seen; -1 until the first poll.
+  private var known = -1L
+  // List once, then walk: the first poll of this instance (start or
+  // restart) lists, repairs and ages the whole topic; later polls walk on
+  // from `known`, promoting a dead publisher's claim at the frontier (see
+  // MqttLike.publish docs), so an idle trigger costs O(1), not O(spool).
+  override def latestOffset(): Offset = {
+    known = if (known < 0) MqttLike.repairAndDensePrefix(dir) else MqttLike.denseFrom(dir, known)
+    SeqOffset(known)
+  }
   override def commit(end: Offset): Unit = () // spool retained for replay
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {

@@ -61,9 +61,10 @@ object Sinks {
         wire = new MqttWireClient(host, port, s"gs-$nonce", creds)
         wire.connect()
       } else {
-        // list the topic ONCE per task, then walk the cached seq forward:
-        // per-message nextSeq listings are O(spool) each, O(spool²) over the
-        // topic's lifetime — the same cost class the lazy-repair change removed
+        // find the next seq ONCE per task (O(1) from this JVM's last
+        // publish into the topic, a listing only without one), then walk
+        // the cached seq forward: per-message listings are O(spool) each,
+        // O(spool²) over the topic's lifetime
         nextSeq = MqttLike.nextSeqIn(target, topic, "")
       }
       true

@@ -16,14 +16,19 @@ import org.apache.spark.sql.Row
 object ModuleRegistry {
 
   /** Where a module's samples come from: an MQTT-shaped topic subscription
-    * (S6) or a periodic HTTP poll (S5, the hko fetch loop), fetched at
-    * most once per the module's `triggerMs`. */
+    * (S6), handled as samples arrive, or a periodic HTTP poll (S5, the hko
+    * fetch loop), fetched once per the module's `triggerMs`. */
   sealed trait ModuleSource
   final case class MqttTopic(topic: String) extends ModuleSource
   final case class HttpEndpoint(url: String) extends ModuleSource
 
   /** A module: where samples come from, how each micro-batch is transformed,
     * where results go (collection/post_collection, declaratively).
+    *
+    * `triggerMs` is the reference's `collection_event_interval_ms`, which
+    * paces only its producers' sampling (`event_loops.c:33-52`). Here it
+    * paces only the hko poll; an MQTT-fed module runs a micro-batch as
+    * soon as samples land ([[start]]).
     *
     * `broker` (None = spool-only) is the reference's `mqtt.host` settings
     * key (`src/modules/dd/settings-sample.json`): when set to
@@ -42,7 +47,7 @@ object ModuleRegistry {
       transform: DataFrame => DataFrame,
       sinkTopic: String,
       payload: DataFrame => Column,
-      triggerMs: Long = 1000L, // reference default cadence, global_vars.c:10
+      triggerMs: Long = 1000L, // hko poll cadence; reference default, global_vars.c:10
       broker: Option[String] = None,
       // publish QoS: dd/ch publish at 1 (producer.c:152-153, ch.c:146-147),
       // hko at 2 (hko.cpp:69-72). QoS applies to wire mode, which runs
@@ -185,7 +190,14 @@ object ModuleRegistry {
     * loop equivalent. Spool transport by default; with `m.broker` set the
     * source topic is bridged in FROM the broker over the wire (spool as
     * staging, so the DataSourceV2 offset/checkpoint contract is
-    * untouched) and the sink publishes TO it. */
+    * untouched) and the sink publishes TO it.
+    *
+    * Trigger: an `MqttTopic` module runs micro-batches back to back
+    * (`ProcessingTime(0)`, Spark's default; an idle source is re-polled
+    * after Spark's polling delay), the reference's consumers handling
+    * each message as it arrives (`consumer.cpp:111-145`). An
+    * `HttpEndpoint` module polls once per `triggerMs`: the trigger is
+    * the poll's only clock, so graft-http's own throttle is off. */
   def start(spark: SparkSession, m: Module, spoolDir: String,
             checkpoint: Option[String]) = {
     val in = m.source match {
@@ -229,7 +241,7 @@ object ModuleRegistry {
           .option("spoolDir", spoolDir).option("topic", topic).load()
       case HttpEndpoint(url) =>
         val r = spark.readStream.format("graft-http")
-          .option("url", url).option("minIntervalMs", m.triggerMs.toString)
+          .option("url", url).option("minIntervalMs", "0")
         // without a checkpoint the poll cache still needs a stable home —
         // ONE per (module, url) per JVM, not one per start(): repeated
         // restarts in a long-lived driver would otherwise leak a fresh
@@ -247,7 +259,10 @@ object ModuleRegistry {
     val w: DataStreamWriter[Row] = out.writeStream
       .foreach(new graft.sources.Sinks.MqttLikePublishWriter(sinkTarget, m.sinkTopic, m.qos))
       .outputMode(OutputMode.Append())
-      .trigger(Trigger.ProcessingTime(s"${m.triggerMs} milliseconds"))
+      .trigger(m.source match {
+        case _: MqttTopic => Trigger.ProcessingTime(0L)
+        case _: HttpEndpoint => Trigger.ProcessingTime(m.triggerMs)
+      })
     checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
   }
 

@@ -208,6 +208,124 @@ class MqttLikeSpec extends SparkTestBase {
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(spool, "t_ahead", "w-0")))
   }
 
+  test("live reader walks the dense prefix: equal to the full listing after a " +
+    "frontier crash, foreign files and a checkpoint restart") {
+    import java.nio.file.{Files, Paths}
+    val spool = Files.createTempDirectory("mqtt_walk").toString
+    val dir = Paths.get(spool, "t_walk")
+    (0 until 3).foreach(i => MqttLike.publish(spool, "t/walk", s"m$i"))
+    val live = new MqttLikeMicroBatchStream(spool, "t/walk")
+    def step(want: Long): Unit = {
+      val got = live.latestOffset().asInstanceOf[SeqOffset].count
+      assert(got == want, s"walked offset $got, want $want")
+      assert(MqttLike.repairAndDensePrefix(dir) == got, "walk and full listing disagree")
+    }
+    step(3L)
+    // a publisher dies between claim and publish AFTER the first poll: the
+    // walk reaches its claim at the frontier and promotes it, no publisher
+    // ever returning
+    val tmp = dir.resolve(".pub-dead.tmp")
+    Files.writeString(tmp, "m3-crashed")
+    Files.createLink(dir.resolve(".3.claim"), tmp)
+    step(4L)
+    assert(Files.readString(dir.resolve("3.msg")) == "m3-crashed")
+    // foreign files are neither counted nor parsed
+    Files.writeString(dir.resolve("readme.msg"), "notes")
+    Files.writeString(dir.resolve("12ab.msg"), "junk")
+    step(4L)
+    MqttLike.publish(spool, "t/walk", "m4")
+    step(5L)
+    step(5L)
+
+    // a query over the topic, stopped and restarted from its checkpoint:
+    // every seq exactly once, including a frontier crash planted while the
+    // first run was live and messages published while it was down
+    val ckpt = Files.createTempDirectory("walk_ckpt").toString
+    val out = Files.createTempDirectory("walk_out").toString
+    def start() = spark.readStream.format("graft-mqtt")
+      .option("spoolDir", spool).option("topic", "t/walk").load()
+      .writeStream.format("parquet").option("path", out)
+      .option("checkpointLocation", ckpt).outputMode(OutputMode.Append()).start()
+    val q1 = start()
+    try {
+      q1.processAllAvailable()
+      val tmp6 = dir.resolve(".pub-dead6.tmp")
+      Files.writeString(tmp6, "m5-crashed")
+      Files.createLink(dir.resolve(".5.claim"), tmp6)
+      q1.processAllAvailable()
+    } finally q1.stop()
+    (6 until 8).foreach(i => MqttLike.publish(spool, "t/walk", s"m$i"))
+    val q2 = start()
+    try q2.processAllAvailable() finally q2.stop()
+    val rows = spark.read.parquet(out).select("msg_seq", "payload").collect()
+    assert(rows.map(_.getLong(0)).sorted.toSeq == (0L until 8L),
+      s"restart must resume exactly once, got ${rows.map(_.getLong(0)).sorted.toSeq}")
+    assert(rows.find(_.getLong(0) == 5L).get.getString(1) == "m5-crashed")
+  }
+
+  test("nextSeqIn: right past another publisher's appends and after the topic " +
+    "directory is deleted and recreated") {
+    import java.nio.file.{Files, Paths}
+    val spool = Files.createTempDirectory("mqtt_hint").toString
+    val dir = Paths.get(spool, "t_hint")
+    def listed(): Long = MqttLike.listSeqs(dir).lastOption.fold(0L)(_ + 1)
+    // another process's publish: claim then msg, the same links publishFrom makes
+    def foreign(seq: Long, body: String, promote: Boolean = true): Unit = {
+      val tmp = dir.resolve(s".pub-foreign-$seq.tmp")
+      Files.writeString(tmp, body)
+      Files.createLink(dir.resolve(s".$seq.claim"), tmp)
+      if (promote) Files.createLink(dir.resolve(s"$seq.msg"), tmp)
+      Files.delete(tmp)
+    }
+    assert(MqttLike.publishFrom(spool, "t/hint", "a", "", 0L) == 0L)
+    assert(MqttLike.nextSeqIn(spool, "t/hint", "") == 1L)
+    foreign(1L, "b"); foreign(2L, "c")
+    assert(MqttLike.nextSeqIn(spool, "t/hint", "") == 3L)
+    assert(listed() == 3L)
+    // an in-flight claim is taken, not offered again
+    foreign(3L, "d", promote = false)
+    assert(MqttLike.nextSeqIn(spool, "t/hint", "") == 4L)
+    assert(MqttLike.publishFrom(spool, "t/hint", "e", "",
+      MqttLike.nextSeqIn(spool, "t/hint", "")) == 4L)
+
+    // deleted: the hint (5) no longer has a predecessor claim
+    Files.list(dir).iterator().asScala.foreach(Files.delete)
+    Files.delete(dir)
+    assert(MqttLike.nextSeqIn(spool, "t/hint", "") == 0L)
+    // recreated by another process, past the hint: walked on, not reused
+    Files.createDirectories(dir)
+    (0L until 7L).foreach(i => foreign(i, s"r$i"))
+    assert(MqttLike.nextSeqIn(spool, "t/hint", "") == 7L)
+    assert(listed() == 7L)
+    // recreated with fewer messages than the hint: listed
+    Files.list(dir).iterator().asScala.foreach(Files.delete)
+    (0L until 2L).foreach(i => foreign(i, s"s$i"))
+    assert(MqttLike.nextSeqIn(spool, "t/hint", "") == 2L)
+    assert(MqttLike.publishFrom(spool, "t/hint", "t", "",
+      MqttLike.nextSeqIn(spool, "t/hint", "")) == 2L)
+    assert(MqttLike.densePrefix(dir) == 3L)
+  }
+
+  test("offset and next-seq polls after the first do not grow with the topic") {
+    val spool = java.nio.file.Files.createTempDirectory("mqtt_cost").toString
+    val dir = java.nio.file.Paths.get(spool, "t_cost")
+    val n = 20000L
+    var seq = 0L
+    while (seq < n) seq = MqttLike.publishFrom(spool, "t/cost", "x", "", seq) + 1
+    val live = new MqttLikeMicroBatchStream(spool, "t/cost")
+    assert(live.latestOffset() == SeqOffset(n)) // the one full listing
+    // a listing of this topic takes tens of ms: 20 of them would be ~1 s
+    val t0 = System.nanoTime()
+    (0 until 20).foreach(_ => assert(live.latestOffset() == SeqOffset(n)))
+    val offsetMs = (System.nanoTime() - t0) / 1e6
+    val t1 = System.nanoTime()
+    (0 until 20).foreach(_ => assert(MqttLike.nextSeqIn(spool, "t/cost", "") == n))
+    val nextMs = (System.nanoTime() - t1) / 1e6
+    assert(offsetMs < 100, f"20 offset polls took $offsetMs%.1f ms on a $n-message topic")
+    assert(nextMs < 100, f"20 next-seq polls took $nextMs%.1f ms on a $n-message topic")
+    assert(MqttLike.densePrefix(dir) == n)
+  }
+
   test("SeqOffset: one count; parent checkpoint shapes parse; lane offsets refused") {
     // the JSON stays the root-lane form checkpoints have always carried
     assert(SeqOffset(5L).json() == """{"":5}""")

@@ -149,6 +149,47 @@ class ModuleRegistrySpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  test("trigger rules: an MQTT module runs on arrival, not on triggerMs; " +
+    "the hko poll runs once per triggerMs") {
+    val sample =
+      """{"timestamp_utc": "2024-12-23T08:00:00Z", "temp_outdoor_celsius": 20.5, "temp_indoor_celsius": 22.8, "rh_outdoor": 61.0}"""
+    def awaitFiles(dir: java.nio.file.Path, n: Int, ms: Long): Boolean = {
+      val end = System.currentTimeMillis() + ms
+      while (MqttLike.listSeqs(dir).size < n && System.currentTimeMillis() < end) Thread.sleep(20)
+      MqttLike.listSeqs(dir).size >= n
+    }
+    val spool = java.nio.file.Files.createTempDirectory("modreg_trig").toString
+    val dd = ModuleRegistry.modules("dd").copy(triggerMs = 60000L)
+    MqttLike.publish(spool, "sensors/dd", sample)
+    val q = ModuleRegistry.start(spark, dd, spool, None)
+    val enriched = java.nio.file.Paths.get(spool, "sensors_dd_enriched")
+    try {
+      assert(awaitFiles(enriched, 1, 30000), "first dd batch published nothing")
+      // sent after the first batch: a 60 s trigger would hold it ~60 s
+      MqttLike.publish(spool, "sensors/dd", sample)
+      assert(awaitFiles(enriched, 2, 10000),
+        "a dd sample waited for the module's triggerMs instead of running on arrival")
+    } finally q.stop()
+
+    val doc = java.nio.file.Files.createTempFile("rhrread_trig", ".json")
+    java.nio.file.Files.writeString(doc,
+      """{"temperature": {"recordTime": "2024-12-23T08:00:00+08:00", "data": [
+        |  {"place": "Happy Valley", "value": 19.0, "unit": "C"}]}}""".stripMargin)
+    val hko = ModuleRegistry.modules("hko").copy(
+      source = ModuleRegistry.HttpEndpoint(doc.toUri.toString), triggerMs = 1000L)
+    val hq = ModuleRegistry.start(spark, hko, spool, None)
+    try {
+      val sink = java.nio.file.Paths.get(spool, "sensors_hko")
+      assert(awaitFiles(sink, 1, 30000), "hko module published nothing")
+      val before = MqttLike.listSeqs(sink).size
+      Thread.sleep(10000)
+      val polls = MqttLike.listSeqs(sink).size - before
+      // one poll per 1 s tick: the trigger is the poll's only clock
+      assert(polls >= 9, s"hko published $polls payloads in 10 s at a 1 s trigger")
+      assert(polls <= 11, s"hko published $polls payloads in 10 s at a 1 s trigger")
+    } finally hq.stop()
+  }
+
   test("fromConfig drives dd, ch and hko concurrently from a settings tree (S7)") {
     val spool = java.nio.file.Files.createTempDirectory("modreg_cfg").toString
     val doc = java.nio.file.Files.createTempFile("rhrread2", ".json")
