@@ -21,16 +21,16 @@ object PlanCapture {
   private val buf = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
   @volatile private var capturing = false
 
-  /** Begin recording pre-checkpoint plans (clears previous capture). */
-  def startCapture(): Unit = { buf.clear(); capturing = true }
-
-  /** Stop recording and return every plan captured since [[startCapture]]. */
-  def stopCapture(): Seq[SparkPlan] = {
-    capturing = false
-    val out = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+  /** Run `body` while recording: returns its result and every plan
+    * captured during it. Recording stops when `body` returns or throws. */
+  def capture[A](body: => A): (A, Seq[SparkPlan]) = {
+    buf.clear()
+    capturing = true
+    val out = try body finally capturing = false
+    val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
     var p = buf.poll()
-    while (p != null) { out += p; p = buf.poll() }
-    out.toSeq
+    while (p != null) { plans += p; p = buf.poll() }
+    (out, plans.toSeq)
   }
 
   def checkpoint(df: DataFrame): DataFrame = {

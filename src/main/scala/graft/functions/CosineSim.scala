@@ -145,13 +145,4 @@ object CosineSim {
   /** Column-level entry point. */
   def cosine_sim(a: Column, b: Column): Column =
     ColumnShim.column(CosineSim(ColumnShim.expression(a), ColumnShim.expression(b)))
-
-  /** SQL registration: `SELECT cosine_sim(a.embedding, b.embedding) ...`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => {
-        require(exprs.length == 2,
-          s"cosine_sim requires exactly 2 arguments, got ${exprs.length}")
-        CosineSim(exprs(0), exprs(1))
-      }, "built-in")
 }

@@ -34,13 +34,4 @@ object DotProduct {
   /** Column-level entry point. */
   def dot_product(a: Column, b: Column): Column =
     ColumnShim.column(DotProduct(ColumnShim.expression(a), ColumnShim.expression(b)))
-
-  /** SQL registration: `SELECT dot_product(a.embedding, b.embedding) ...`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => {
-        require(exprs.length == 2,
-          s"dot_product requires exactly 2 arguments, got ${exprs.length}")
-        DotProduct(exprs(0), exprs(1))
-      }, "built-in")
 }

@@ -88,14 +88,4 @@ object TokenEntropyExpr {
   /** Column-level entry point. */
   def token_entropy(tokens: Column): Column =
     ColumnShim.column(TokenEntropyExpr(ColumnShim.expression(tokens)))
-
-  /** SQL registration on an existing session (production wiring goes
-    * through [[graft.plans.GraftExtensions]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_entropy", exprs => {
-        require(exprs.length == 1,
-          s"token_entropy requires exactly 1 argument, got ${exprs.length}")
-        TokenEntropyExpr(exprs.head)
-      }, "built-in")
 }

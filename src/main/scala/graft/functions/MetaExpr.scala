@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -24,26 +24,14 @@ trait MetaParser extends Serializable {
   /** `name(payload)` as a Column. */
   def apply(payload: Column): Column =
     ColumnShim.column(MetaExpr(ColumnShim.expression(payload), this))
-
-  /** SQL function builder: exactly one argument. */
-  def builder: Seq[Expression] => Expression = exprs => {
-    require(exprs.length == 1,
-      s"$name requires exactly 1 argument, got ${exprs.length}")
-    MetaExpr(exprs.head, this)
-  }
 }
 
 object MetaParser {
-  /** Every parser function. [[graft.plans.GraftExtensions]] injects these
-    * into each session; [[register]] adds them to an existing one. */
+  /** Every parser function; [[graft.plans.GraftExtensions.functions]]
+    * wires each as a SQL function. */
   val all: Seq[MetaParser] = Seq(ImageHeader, AudioHeader, VideoHeader,
     Utf8Stats, MpegAudioHeader, AvcSpsHeader, AdtsHeader, FlacHeader,
     OggOpusHeader, Id3v2Tags, JpegExif)
-
-  /** Register every parser function on an existing session. */
-  def register(spark: SparkSession): Unit = all.foreach(p =>
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      p.name, p.builder, "built-in"))
 }
 
 /** `parser.name(payload)`: the parser's struct for a binary payload, null

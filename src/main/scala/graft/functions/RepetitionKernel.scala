@@ -111,14 +111,4 @@ object RepetitionStatsExpr {
   /** Column-level entry point. */
   def repetition_stats(tokens: Column): Column =
     ColumnShim.column(RepetitionStatsExpr(ColumnShim.expression(tokens)))
-
-  /** SQL registration on an existing session (production wiring goes
-    * through [[graft.plans.GraftExtensions]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "repetition_stats", exprs => {
-        require(exprs.length == 1,
-          s"repetition_stats requires exactly 1 argument, got ${exprs.length}")
-        RepetitionStatsExpr(exprs.head)
-      }, "built-in")
 }

@@ -174,10 +174,4 @@ object SrpBucketsExpr {
       litLong(exprs(1), "tables").toInt, litLong(exprs(2), "nbits").toInt,
       litLong(exprs(3), "dim").toInt, litLong(exprs(4), "seed"))
   }
-
-  /** SQL registration on an existing session (production wiring goes
-    * through [[graft.plans.GraftExtensions]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "srp_buckets", fromSql, "built-in")
 }

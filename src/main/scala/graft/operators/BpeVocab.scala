@@ -108,12 +108,10 @@ object BpeVocab {
     * and their equivalence is asserted on test corpora in CurationOpsSpec.
     *
     * Checkpoint cadence: the per-round rewrite stacks ≤ m interpreted HOF
-    * folds onto the plan, so `checkpointEvery` rounds bound the expression
-    * depth (and the lineage) at m·checkpointEvery folds. */
-  def learnMergesBatched(docs: DataFrame, k: Int, m: Int = 32,
-                         checkpointEvery: Int = 2): (Seq[Merge], DataFrame) = {
+    * folds onto the plan, so a checkpoint every 2 rounds bounds the
+    * expression depth (and the lineage) at 2·m folds. */
+  def learnMergesBatched(docs: DataFrame, k: Int, m: Int = 32): (Seq[Merge], DataFrame) = {
     require(m >= 1, s"merges per round must be >= 1, got $m")
-    require(checkpointEvery >= 1, s"checkpointEvery must be >= 1, got $checkpointEvery")
     var vocab = symbolized(docs).auditedCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var exhausted = false
@@ -145,7 +143,7 @@ object BpeVocab {
         vocab = vocab.withColumn("syms",
           picked.foldLeft(col("syms"))((c, mg) => mergePairCol(c, mg.a, mg.b)))
         round += 1
-        if (round % checkpointEvery == 0) vocab = vocab.auditedCheckpoint()
+        if (round % 2 == 0) vocab = vocab.auditedCheckpoint()
       }
     }
     (merges.toSeq, vocab.auditedCheckpoint())

@@ -32,12 +32,10 @@ object Decontaminate {
       .groupBy("doc_id").agg(count("*").as("n_hits"))
   }
 
-  /** The decontaminated corpus: drop every document sharing at least
-    * `minHits` n-grams with the benchmark set (anti-join on the evidence). */
-  def clean(corpus: DataFrame, benchmark: DataFrame, n: Int, minHits: Long = 1L): DataFrame =
-    corpus.join(
-      contamination(corpus, benchmark, n).filter(col("n_hits") >= minHits),
-      Seq("doc_id"), "left_anti")
+  /** The decontaminated corpus: drop every document sharing any n-gram
+    * with the benchmark set (anti-join on the evidence). */
+  def clean(corpus: DataFrame, benchmark: DataFrame, n: Int): DataFrame =
+    corpus.join(contamination(corpus, benchmark, n), Seq("doc_id"), "left_anti")
 
   /** Case- and punctuation-folded text: lowercase, every run of
     * characters outside [a-z0-9] collapsed to one space. The

@@ -337,11 +337,12 @@ object Dedup {
   /** The PERSISTABLE half of incremental fuzzy dedup: each doc's
     * (band, bucket) rows — an ordinary table a daily job writes once per
     * corpus snapshot (the QuantileGate/IvfIndex.assign fit/apply pattern
-    * applied to MinHash-LSH). Signatures are seeded-deterministic, so an
-    * increment banded later with the same (n, k, bands) joins consistently
-    * against an index written months earlier. */
-  def minhashIndex(docs: DataFrame, n: Int = 3, k: Int = 16, bands: Int = 4): DataFrame =
-    bandBuckets(minhashSignature(docs, n, k), k, bands)
+    * applied to MinHash-LSH). Signatures are seeded-deterministic and the
+    * index and its probes share n = 3, k = 16, bands = 4, so an increment
+    * banded later joins consistently against an index written months
+    * earlier. */
+  def minhashIndex(docs: DataFrame): DataFrame =
+    bandBuckets(minhashSignature(docs, 3, 16), 16, 4)
 
   /** Incremental fuzzy-dedup candidates: band-hash ONLY the increment and
     * equi-join it against a frozen [[minhashIndex]] — the corpus is never
@@ -350,8 +351,7 @@ object Dedup {
     * Streaming-legal: the index is the static side of a stream-static
     * equi-join and the per-pair verify is stateless row math (replay ==
     * batch asserted in StreamingSpec). */
-  def minhashCandidatesAgainst(increment: DataFrame, index: DataFrame,
-                               n: Int = 3, k: Int = 16, bands: Int = 4): DataFrame = {
+  def minhashCandidatesAgainst(increment: DataFrame, index: DataFrame): DataFrame = {
     // CONTRACT: the increment is DISJOINT from the indexed corpus (the
     // incremental-crawl shape — new docs probed against history). The
     // contract is ENFORCED below, not just documented: pair dedup keys on
@@ -364,7 +364,7 @@ object Dedup {
     // row-local signatures: the increment side must stay aggregation-free
     // (streaming) and is usually small enough that sharing a shingle
     // relation buys nothing
-    val inc = bandBuckets(minhashSignatureRowwise(increment, n, k), k, bands)
+    val inc = bandBuckets(minhashSignatureRowwise(increment, 3, 16), 16, 4)
       .select(col("band"), col("bucket"), col("doc_id").as("db"))
     index.select(col("band"), col("bucket"), col("doc_id").as("da"))
       .join(inc, Seq("band", "bucket"))
@@ -507,24 +507,22 @@ object Dedup {
     * angles, and the only sound alternatives are more bits + more tables
     * or a different family.
     *
-    * `dim = 0` (default) infers the embedding width from the first row; a
-    * row whose vector width differs from the hyperplane width then raises
-    * an error instead of silently hashing every row into bucket 0 (a null
+    * The embedding width is inferred from the first non-null row; a row
+    * whose vector width differs from the hyperplane width then raises an
+    * error instead of silently hashing every row into bucket 0 (a null
     * DotProduct would zero every sign bit and degrade the equi-join to
     * per-table all-pairs). */
   def embeddingNearDupsBlocked(vectors: DataFrame, idCol: String, vecCol: String,
                                threshold: Double, nbits: Int = 0, tables: Int = 0,
-                               dim: Int = 0, nHint: Long = 0L): DataFrame = {
-    val d = if (dim > 0) dim else {
-      // the lshTopK inference pattern: skip null vectors (size(null) is
-      // null -> Row.getInt would NPE) and fail DESCRIPTIVELY on an empty
-      // frame instead of NoSuchElementException from head()
-      val r = vectors.select(size(col(vecCol)).as("__d"))
-        .filter(col("__d").isNotNull).limit(1).collect()
-      require(r.nonEmpty, "embeddingNearDupsBlocked: no non-null vectors " +
-        "to infer the embedding dim from; pass dim explicitly")
-      r.head.getInt(0)
-    }
+                               nHint: Long = 0L): DataFrame = {
+    // the lshTopK inference pattern: skip null vectors (size(null) is
+    // null -> Row.getInt would NPE) and fail DESCRIPTIVELY on an empty
+    // frame instead of NoSuchElementException from head()
+    val r = vectors.select(size(col(vecCol)).as("__d"))
+      .filter(col("__d").isNotNull).limit(1).collect()
+    require(r.nonEmpty, "embeddingNearDupsBlocked: no non-null vectors " +
+      "to infer the embedding dim from")
+    val d = r.head.getInt(0)
     val bits = if (nbits > 0) nbits else {
       // nHint (from catalog/footer statistics, e.g. Engine.parquetRowCount)
       // spares the full-scan count(): at 100 TB an extra corpus pass just
@@ -609,9 +607,8 @@ object Dedup {
     * cost stays bounded because [[IvfIndex.build]] trains on a capped
     * deterministic sample (assignment still covers every row). */
   def semanticDedup(vectors: DataFrame, idCol: String, vecCol: String,
-                    threshold: Double, nlist: Int, seed: Long = 42L,
-                    nHint: Long = 0L): DataFrame = {
-    val (assigned, _) = IvfIndex.build(vectors, idCol, vecCol, nlist, seed, nHint = nHint)
+                    threshold: Double, nlist: Int, nHint: Long = 0L): DataFrame = {
+    val (assigned, _) = IvfIndex.build(vectors, idCol, vecCol, nlist, nHint = nHint)
     semanticDedupFromAssigned(assigned, idCol, vecCol, threshold)
   }
 
@@ -624,15 +621,14 @@ object Dedup {
     * plus the apply scan. */
   def persistedSemanticDedup(vectors: DataFrame, dataPath: String,
                              idCol: String, vecCol: String, threshold: Double,
-                             nlist: Int, seed: Long = 42L,
-                             nHint: Long = 0L): DataFrame = {
+                             nlist: Int, nHint: Long = 0L): DataFrame = {
     val spark = vectors.sparkSession
     // idCol in the key for the same reason as persistedEmbeddingNearDups:
     // the stored id/keep_id values come from it
     val key = graft.Artifacts.fitKey(spark, Seq(dataPath),
-      s"$idCol-$vecCol-t$threshold-nlist$nlist-seed$seed")
+      s"$idCol-$vecCol-t$threshold-nlist$nlist-seed42")
     graft.Artifacts.getOrFit(spark, "semdedup", key,
-      semanticDedup(vectors, idCol, vecCol, threshold, nlist, seed, nHint))
+      semanticDedup(vectors, idCol, vecCol, threshold, nlist, nHint))
   }
 
   /** SemDeDup against a FROZEN coarse quantizer — the qe3d pattern applied

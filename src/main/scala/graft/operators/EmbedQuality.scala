@@ -24,6 +24,11 @@ import org.apache.spark.sql.functions._
   * list_inner_product already compute bit-identically (qe3). */
 object EmbedQuality {
 
+  // the embeddings table's columns: the group label, the id and the vector
+  private val groupCol = "label"
+  private val idCol = "vec_id"
+  private val vecCol = "embedding"
+
   /** Input hygiene shared by fit and score: drop null/empty and ZERO-NORM
     * vectors (a zero vector has no direction — under ANSI mode its cosine
     * would throw DIVIDE_BY_ZERO mid-job), and fail FAST on a row whose
@@ -32,8 +37,7 @@ object EmbedQuality {
     * narrow vector's score — corrupt data sliding through the very screen
     * built to catch it; same raise_error-in-the-value-path guard as
     * Dedup.embeddingNearDupsBlocked). */
-  private def cleaned(emb: DataFrame, groupCol: String, vecCol: String,
-                      extraCols: Seq[String]): DataFrame = {
+  private def cleaned(emb: DataFrame, extraCols: Seq[String]): DataFrame = {
     val probe = emb.filter(col(vecCol).isNotNull && size(col(vecCol)) > 0)
       .select(size(col(vecCol)).as("__d")).limit(1).collect()
     require(probe.nonEmpty,
@@ -49,17 +53,16 @@ object EmbedQuality {
       .filter(graft.functions.DotProduct.dot_product(col("__v"), col("__v")) > 0.0)
   }
 
-  /** Per-group centroids: (groupCol, centroid: array<double>). Elements
+  /** Per-label centroids: (label, centroid: array<double>). Elements
     * are the 1e-6-quantized mean (see class doc for why). Groups whose
     * quantized centroid cancels to zero norm (perfectly opposing members)
     * are dropped — they define no direction to score against. */
-  def centroids(emb: DataFrame, groupCol: String = "label",
-                vecCol: String = "embedding"): DataFrame =
-    centroidsFromCleaned(cleaned(emb, groupCol, vecCol, Nil), groupCol)
+  def centroids(emb: DataFrame): DataFrame =
+    centroidsFromCleaned(cleaned(emb, Nil))
 
   /** [[centroids]] body over an ALREADY-cleaned frame (one `__v` column
     * per row) — shared so centroidOutliers cleans once, not twice. */
-  private def centroidsFromCleaned(e: DataFrame, groupCol: String): DataFrame = {
+  private def centroidsFromCleaned(e: DataFrame): DataFrame = {
     e.select(col(groupCol), posexplode(col("__v")))
       .select(col(groupCol), col("pos"),
         floor(col("col") * lit(1e6) + lit(0.5)).cast("long").as("__n"))
@@ -75,25 +78,23 @@ object EmbedQuality {
   }
 
   /** Score every embedding against its own group's centroid:
-    * (idCol, groupCol, cos_c = r4(cosine to centroid), is_outlier =
+    * (vec_id, label, cos_c = r4(cosine to centroid), is_outlier =
     * cos_c < threshold as 0/1). Null/empty/zero-norm vectors and groups
     * with a degenerate (zero-norm) centroid are absent — they have no
     * scorable direction; a mixed-width group raises instead of nulling. */
-  def centroidOutliers(emb: DataFrame, threshold: Double,
-                       groupCol: String = "label", idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
+  def centroidOutliers(emb: DataFrame, threshold: Double): DataFrame = {
     // cleaned() fires a driver head() to infer the width and re-runs its
     // hygiene filters per call — clean ONCE and derive the centroids from
     // the same frame instead of a second cleaned(emb) inside centroids()
-    val e = cleaned(emb, groupCol, vecCol, Seq(idCol))
+    val e = cleaned(emb, Seq(idCol))
     val cos = graft.functions.CosineSim.cosine_sim(col("__v"), col("centroid"))
     val cosR = graft.functions.ScalarOps.r4(cos)
-    e.join(broadcast(centroidsFromCleaned(e, groupCol)), groupCol)
+    e.join(broadcast(centroidsFromCleaned(e)), groupCol)
       .select(col(idCol), col(groupCol), cosR.as("cos_c"),
         (cosR < lit(threshold)).cast("int").as("is_outlier"))
   }
 
-  /** Per-group L2-norm distribution card: (groupCol, n, mean_norm,
+  /** Per-group L2-norm distribution card: (label, n, mean_norm,
     * min_norm, max_norm, n_zero) — the first screen run on a new embedding
     * drop (an un-normalized batch, a zero-vector encoder failure, or a
     * clipped export all show up here before anything downstream consumes
@@ -105,8 +106,7 @@ object EmbedQuality {
     * [[centroids]]' scaled-integer means; a double sum would be partition-
     * order-dependent). One codegen'd linear scan + one tiny hash aggregate;
     * the corpus never shuffles beyond the per-group partials. */
-  def normsCard(emb: DataFrame, groupCol: String = "label",
-                vecCol: String = "embedding"): DataFrame = {
+  def normsCard(emb: DataFrame): DataFrame = {
     val nrm = round(sqrt(graft.functions.DotProduct.dot_product(
         col(vecCol).cast("array<double>"), col(vecCol).cast("array<double>"))), 4)
       .cast(org.apache.spark.sql.types.DecimalType(20, 4))

@@ -23,14 +23,13 @@ object IvfIndex {
     * Returns (assigned frame with `cell`, centroid frame (cell, centroid)).
     *
     * The k-means FIT trains on a deterministic hash-mod sample capped at
-    * `maxTrain` rows — at 100 TB the quantizer needs ~100·nlist training
+    * [[MaxTrain]] rows — at 100 TB the quantizer needs ~100·nlist training
     * points for stable centroids, not the corpus (FAISS trains IVF
     * quantizers the same way); ASSIGNMENT still covers every vector via
     * one codegen'd transform pass. Below the cap the sample is the whole
     * input, so small-scale results are unchanged. */
   def build(vectors: DataFrame, idCol: String, vecCol: String, nlist: Int,
-            seed: Long = 42L, maxTrain: Long = 200000L,
-            nHint: Long = 0L): (DataFrame, DataFrame) = {
+            seed: Long = 42L, nHint: Long = 0L): (DataFrame, DataFrame) = {
     val spark = vectors.sparkSession
     import spark.implicits._
     val withVec = vectors.withColumn("__v",
@@ -40,14 +39,14 @@ object IvfIndex {
     // estimate, not an exact corpus pass
     val n = if (nHint > 0) nHint else withVec.count()
     val train =
-      if (n <= maxTrain) withVec
+      if (n <= MaxTrain) withVec
       // ppm granularity: a whole-percent rate floors at 1%, which at
       // n = 10^9 is 10^7 training rows — 50x the documented cap, growing
-      // linearly with the corpus. ppm holds the cap to ~maxTrain rows
+      // linearly with the corpus. ppm holds the cap to ~MaxTrain rows
       // (up to n = 2*10^11; beyond that the 1-ppm floor re-enters)
       else Sampling.deterministicSamplePpm(withVec, idCol,
-        math.min(1000000, math.max(1, math.ceil(maxTrain * 1e6 / n).toInt)), seed)
-    // training-sample-sized parallelism: the sample is <= maxTrain rows
+        math.min(1000000, math.max(1, math.ceil(MaxTrain * 1e6 / n).toInt)), seed)
+    // training-sample-sized parallelism: the sample is <= MaxTrain rows
     // but INHERITS the corpus's partitioning — at 100 TB that is tens of
     // thousands of near-empty tasks per k-means iteration (20+ jobs per
     // fit), pure scheduler burn; at toy scale it is what made the
@@ -59,13 +58,16 @@ object IvfIndex {
     // (deterministic: index-based round-robin over deterministic input).
     val model = new KMeans().setK(nlist).setSeed(seed).setMaxIter(20)
       .setFeaturesCol("__v").setPredictionCol("cell")
-      .fit(train.repartition(trainPartitions(math.min(n, maxTrain))))
+      .fit(train.repartition(trainPartitions(math.min(n, MaxTrain))))
     val assigned = model.transform(withVec).drop("__v")
     val centroids = model.clusterCenters.zipWithIndex
       .map { case (c, i) => (i, c.toArray) }.toSeq
       .toDF("cell", "centroid")
     (assigned, centroids)
   }
+
+  /** Training-sample cap of the IVF and PQ k-means fits. */
+  private[operators] val MaxTrain = 200000L
 
   /** Partition count for a k-means TRAINING frame of `rows` rows: ~50k
     * rows per task, at least 1 — shared by the IVF and PQ fits so the
@@ -122,9 +124,8 @@ object IvfIndex {
     * nprobe = nlist (probing every cell = exhaustive scan); tune nprobe
     * against a sampled exact top-k, as the spec's sweep does. */
   def topK(candidates: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-           k: Int, nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L,
-           nHint: Long = 0L): DataFrame = {
-    val (assigned, centroids) = build(candidates, idCol, vecCol, nlist, seed, nHint = nHint)
+           k: Int, nlist: Int = 16, nprobe: Int = 4, nHint: Long = 0L): DataFrame = {
+    val (assigned, centroids) = build(candidates, idCol, vecCol, nlist, nHint = nHint)
     probeTopK(assigned, centroids, queries, idCol, vecCol, k, nprobe)
   }
 
@@ -140,8 +141,7 @@ object IvfIndex {
     * projection: no shuffle, no join, no aggregation, every input column
     * rides along untouched. Use [[assign]] when the centroids are only
     * available as a distributed frame too big to collect. */
-  def assignInline(vectors: DataFrame, centroids: DataFrame, vecCol: String,
-                   outCol: String = "cell"): DataFrame = {
+  def assignInline(vectors: DataFrame, centroids: DataFrame, vecCol: String): DataFrame = {
     val cents = centroids.select(col("cell").cast("int"), col("centroid"))
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1)))
@@ -161,7 +161,7 @@ object IvfIndex {
     // itself refuses with null; the guard turns that class of input into
     // a diagnosis before the argmin ever evaluates)
     checkedVectors(vectors, vecCol, dim, "assignInline")
-      .withColumn(outCol,
+      .withColumn("cell",
         graft.functions.CellArgminExpr.cell_argmin(col(vecCol), cells, matrix))
   }
 
@@ -185,7 +185,7 @@ object IvfIndex {
           coalesce(size(col(vecCol)).cast("string"), lit("null"))))))
 
   /** PERSISTED frozen centroid table: the first call per (input fingerprint, vecCol,
-    * nlist, seed) fits the seeded k-means and writes the (cell, centroid)
+    * nlist) fits the k-means at seed 42 and writes the (cell, centroid)
     * frame as a parquet artifact ([[graft.Artifacts]]); every later call —
     * in THIS process or a fresh one — reads the artifact back, so the
     * quantizer fit survives restarts exactly as a centroid table in a real
@@ -194,13 +194,12 @@ object IvfIndex {
     * content fingerprint of `dataPath`, so a regenerated input refits
     * instead of serving stale centroids. */
   def persistedCentroids(vectors: DataFrame, dataPath: String, idCol: String,
-                         vecCol: String, nlist: Int, seed: Long = 42L,
-                         nHint: Long = 0L): DataFrame = {
+                         vecCol: String, nlist: Int, nHint: Long = 0L): DataFrame = {
     val spark = vectors.sparkSession
     val key = graft.Artifacts.fitKey(spark, Seq(dataPath),
-      s"$idCol-$vecCol-nlist$nlist-seed$seed-h$nHint")
+      s"$idCol-$vecCol-nlist$nlist-seed42-h$nHint")
     graft.Artifacts.getOrFit(spark, "ivf_centroids", key,
-      build(vectors, idCol, vecCol, nlist, seed, nHint = nHint)._2)
+      build(vectors, idCol, vecCol, nlist, nHint = nHint)._2)
   }
 
   /** Top-k by cosine from a FROZEN centroid table ([[persistedCentroids]]
@@ -208,7 +207,7 @@ object IvfIndex {
     * corpus map-only, then the shared probe/score/top-k stage runs — the
     * plan a 1000-executor cluster would ship, with the quantizer fit
     * amortized across every corpus and query batch that reuses the
-    * artifact. Result-equal to [[topK]] at the same nlist/nprobe/seed
+    * artifact. Result-equal to [[topK]] at the same nlist/nprobe
     * (asserted in OperatorsSpec). */
   def topKFrozen(candidates: DataFrame, centroids: DataFrame, queries: DataFrame,
                  idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame =

@@ -58,13 +58,12 @@ object Layout {
     * partition — every output file covers one compact, non-overlapping
     * z-range. `df.write.parquet` on the result yields the pruned layout;
     * returned unsaved so tests and callers can inspect partitioning. The
-    * z column rides along as `zCol` for audit and is the caller's to
+    * z column rides along as `__zorder` for audit and is the caller's to
     * drop. */
-  def zOrdered(df: DataFrame, xCol: String, yCol: String, partitions: Int,
-               zCol: String = "__zorder"): DataFrame = {
+  def zOrdered(df: DataFrame, xCol: String, yCol: String, partitions: Int): DataFrame = {
     require(partitions >= 1, s"zOrdered: partitions must be >= 1, got $partitions")
-    df.withColumn(zCol, zorder2(col(xCol), col(yCol)))
-      .repartitionByRange(partitions, col(zCol))
-      .sortWithinPartitions(zCol)
+    df.withColumn("__zorder", zorder2(col(xCol), col(yCol)))
+      .repartitionByRange(partitions, col("__zorder"))
+      .sortWithinPartitions("__zorder")
   }
 }

@@ -48,10 +48,10 @@ object Multimodal {
       // long arithmetic: n * 7 overflows Int negative past ~307 MB payloads
       MediaMeta("image/fake", 16 + n % 640, 16 + (n.toLong * 7 % 480).toInt, 1 + n % 30)
     }
-    def features(payload: Array[Byte], dim: Int = 8): Array[Float] = {
-      val out = new Array[Float](dim)
+    def features(payload: Array[Byte]): Array[Float] = {
+      val out = new Array[Float](8)
       var i = 0
-      while (i < payload.length) { out(i % dim) += (payload(i) & 0xFF) / 255.0f; i += 1 }
+      while (i < payload.length) { out(i % 8) += (payload(i) & 0xFF) / 255.0f; i += 1 }
       out
     }
     /** ==== STUB ==== deterministic fake resize: byte-stride subsample to a
@@ -89,18 +89,15 @@ object Multimodal {
       try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
       catch { case _: Exception => null }
 
-    /** Real feature vector from pixels: dim/4 luminance-histogram buckets
+    /** Real feature vector from pixels: 4 luminance-histogram buckets
       * + mean R, G, B, and luminance — deterministic given the pixels,
       * independent of container byte layout (the same image encoded as
       * PNG or BMP featurizes identically, which the byte-stride fake
       * cannot claim). */
-    def features(img: java.awt.image.BufferedImage, dim: Int = 8): Array[Float] = {
-      // 4 mean slots (R, G, B, luminance) follow the histogram buckets, so
-      // the smallest valid layout is 1 bucket + 4 means; dim <= 4 would
-      // write past the array
-      require(dim >= 5, s"features: dim must be >= 5 (got $dim)")
-      val hBuckets = math.max(1, dim - 4)
-      val out = new Array[Float](dim)
+    def features(img: java.awt.image.BufferedImage): Array[Float] = {
+      // 4 mean slots (R, G, B, luminance) follow the histogram buckets
+      val hBuckets = 4
+      val out = new Array[Float](hBuckets + 4)
       val w = img.getWidth; val h = img.getHeight
       var y = 0
       while (y < h) {
@@ -118,7 +115,7 @@ object Multimodal {
       }
       val n = (w.toLong * h).toFloat
       var i = 0
-      while (i < dim) { out(i) /= n; i += 1 }
+      while (i < out.length) { out(i) /= n; i += 1 }
       out
     }
 

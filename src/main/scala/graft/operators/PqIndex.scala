@@ -45,12 +45,11 @@ object PqIndex {
     * codebooks spend their 2^nbits entries on the (much tighter) residual
     * distribution. The fit trains on the same deterministic hash-mod
     * sample rule as [[IvfIndex.build]] (a quantizer needs ~100·2^nbits
-    * points per subspace, not the corpus); each subspace fits with its own
-    * derived seed so codebooks differ across subspaces but reproduce
+    * points per subspace, not the corpus); subspace j fits at seed 42 + j
+    * so codebooks differ across subspaces but reproduce
     * exactly across runs. */
   def fitCodebooks(vectors: DataFrame, centroids: DataFrame, idCol: String,
-                   vecCol: String, m: Int, nbits: Int, seed: Long = 42L,
-                   maxTrain: Long = 200000L, nHint: Long = 0L): DataFrame = {
+                   vecCol: String, m: Int, nbits: Int, nHint: Long = 0L): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
     val cents = collectCentroids(centroids)
@@ -64,11 +63,11 @@ object PqIndex {
     val k = 1 << nbits
     val n = if (nHint > 0) nHint else vectors.count()
     val train =
-      if (n <= maxTrain) vectors
+      if (n <= IvfIndex.MaxTrain) vectors
       // ppm, not whole percent: see IvfIndex.build — the 1% floor breaks
       // the training cap at corpus scale
       else Sampling.deterministicSamplePpm(vectors, idCol,
-        math.min(1000000, math.max(1, math.ceil(maxTrain * 1e6 / n).toInt)), seed)
+        math.min(1000000, math.max(1, math.ceil(IvfIndex.MaxTrain * 1e6 / n).toInt)))
     // one residual pass feeds all m subspace fits. Repartitioned to
     // training-sample-sized parallelism BEFORE the checkpoint (see
     // IvfIndex.trainPartitions): the m sequential k-means fits each run
@@ -76,7 +75,7 @@ object PqIndex {
     // multiply every one of them by near-empty tasks (repartition, not
     // coalesce — coalesce would collapse the sampling scan itself).
     val resid = withResidual(train, cents, vecCol).select(col("__resid"))
-      .repartition(IvfIndex.trainPartitions(math.min(n, maxTrain)))
+      .repartition(IvfIndex.trainPartitions(math.min(n, IvfIndex.MaxTrain)))
       .auditedCheckpoint()
     // the m subspace fits are INDEPENDENT (disjoint slices, per-subspace
     // seeds) — submit them as concurrent Spark jobs instead of a
@@ -95,7 +94,7 @@ object PqIndex {
     try pv.foreach { j =>
       val sub = resid.select(
         array_to_vector(slice(col("__resid"), j * ds + 1, ds)).as("__v"))
-      val model = new KMeans().setK(k).setSeed(seed + j).setMaxIter(20)
+      val model = new KMeans().setK(k).setSeed(42L + j).setMaxIter(20)
         .setFeaturesCol("__v").setPredictionCol("code").fit(sub)
       perSub(j) = model.clusterCenters.zipWithIndex.map { case (c, i) =>
         (j, i, c.toArray.toSeq)
@@ -110,14 +109,14 @@ object PqIndex {
     * centroids, so a refit quantizer must invalidate its codebooks. */
   def persistedCodebooks(vectors: DataFrame, dataPath: String, centroids: DataFrame,
                          idCol: String, vecCol: String, nlist: Int, m: Int,
-                         nbits: Int, seed: Long = 42L, nHint: Long = 0L): DataFrame = {
+                         nbits: Int, nHint: Long = 0L): DataFrame = {
     val spark = vectors.sparkSession
     val key = graft.Artifacts.fitKey(spark, Seq(dataPath),
-      // idCol/nHint steer the maxTrain training sample — fit-affecting,
+      // idCol/nHint steer the MaxTrain training sample — fit-affecting,
       // so they ride the key (the cosine_pairs idCol lesson)
-      s"$idCol-$vecCol-nlist$nlist-m$m-nbits$nbits-seed$seed-h$nHint")
+      s"$idCol-$vecCol-nlist$nlist-m$m-nbits$nbits-seed42-h$nHint")
     graft.Artifacts.getOrFit(spark, "pq_codebooks", key,
-      fitCodebooks(vectors, centroids, idCol, vecCol, m, nbits, seed, nHint = nHint))
+      fitCodebooks(vectors, centroids, idCol, vecCol, m, nbits, nHint = nHint))
   }
 
   /** ENCODE: map-only PQ compression — adds `cell` (coarse id, via
@@ -166,12 +165,12 @@ object PqIndex {
     * quantizer or changed codebooks must invalidate the index. */
   def persistedEncoded(vectors: DataFrame, dataPath: String, centroids: DataFrame,
                        codebooks: DataFrame, idCol: String, vecCol: String,
-                       nlist: Int, m: Int, nbits: Int, seed: Long = 42L): DataFrame = {
+                       nlist: Int, m: Int, nbits: Int): DataFrame = {
     val spark = vectors.sparkSession
     // "b128": code-bias format marker — a persisted index encoded before
     // the bias fix must not be decoded with the un-biasing reader
     val key = graft.Artifacts.fitKey(spark, Seq(dataPath),
-      s"$vecCol-nlist$nlist-m$m-nbits$nbits-seed$seed-b128")
+      s"$vecCol-nlist$nlist-m$m-nbits$nbits-seed42-b128")
     graft.Artifacts.getOrFit(spark, "pq_encoded", key,
       encode(vectors.select(col(idCol), col(vecCol)), centroids, codebooks, vecCol))
   }

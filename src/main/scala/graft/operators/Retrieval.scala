@@ -59,9 +59,9 @@ object Retrieval {
     * ln((N - df + 0.5)/(df + 0.5) + 1): with the raw Robertson idf a
     * term in >half the corpus scores negative, and a doc repeating it
     * would be PENALIZED below docs not containing it at all. */
-  def bm25TopK(docs: DataFrame, queries: DataFrame, k: Int,
-               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+  def bm25TopK(docs: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"bm25TopK: k must be >= 1, got $k")
+    val (k1, b) = (1.2, 0.75) // the standard BM25 saturation and length weights
     val post = postings(docs)
 
     // corpus stats: exact long token sum / long doc count -> one 1-row
@@ -142,7 +142,7 @@ object Retrieval {
     * (bit-identical in both engines — the qe3 contract), rounding only on
     * output. */
   def hybridTopK(docs: DataFrame, embeddings: DataFrame, queries: DataFrame,
-                 k: Int, kLex: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+                 k: Int, kLex: Int): DataFrame = {
     require(k >= 1, s"hybridTopK: k must be >= 1, got $k")
     require(kLex >= k, s"hybridTopK: kLex ($kLex) must be >= k ($k) — " +
       "stage 1 must supply at least as many candidates as stage 2 returns")
@@ -153,7 +153,7 @@ object Retrieval {
     // plan and the rerank broadcasts a tiny materialized scan — same
     // rows, one plan boundary at the natural candidate hand-off (guide
     // §3.3: materialize intermediates to truncate very wide plans).
-    val lex = bm25TopK(docs, queries, kLex, k1, b).select(col("qid"), col("doc_id"))
+    val lex = bm25TopK(docs, queries, kLex).select(col("qid"), col("doc_id"))
       .auditedCheckpoint()
     val qv = embeddings.join(broadcast(queries.select("qid").distinct()),
         col("vec_id") === col("qid"))

@@ -126,22 +126,21 @@ object Sampling {
   /** Per-group deterministic uniform sample of `k` ids (bottom-k by md5
     * priority — the distributed, reproducible "reservoir"). */
   def sampleIdsPerGroup(df: DataFrame, groupCols: Seq[String], idCol: String,
-                        k: Int, seed: Long = 42L): DataFrame = {
+                        k: Int): DataFrame = {
     require(!groupCols.contains("sample_ids"),
       "sampleIdsPerGroup: a group column named sample_ids would duplicate the output column")
     val bk = udaf(new BottomKPairs(k))
     df.groupBy(groupCols.map(col): _*)
-      .agg(bk(md5Priority(col(idCol), seed), col(idCol)).as("sample_ids"))
+      .agg(bk(md5Priority(col(idCol)), col(idCol)).as("sample_ids"))
   }
 
   /** Whole-table deterministic p-percent sample (hash-mod filter — no
     * shuffle, codegen'd systematic sampling). Samples NEST: the p% sample
     * is a subset of every q% sample with q > p. */
-  def deterministicSample(df: DataFrame, idCol: String, percent: Int,
-                          seed: Long = 42L): DataFrame = {
+  def deterministicSample(df: DataFrame, idCol: String, percent: Int): DataFrame = {
     require(percent >= 0 && percent <= 100,
       s"deterministicSample: percent must be in [0,100], got $percent")
-    df.filter(pmod(md5Priority(col(idCol), seed), lit(100)) < percent)
+    df.filter(pmod(md5Priority(col(idCol)), lit(100)) < percent)
   }
 
   /** Membership predicate of the deterministic 1-in-k hash-mod sample —
@@ -153,12 +152,12 @@ object Sampling {
     * — one definition here, so a seed/mod/pmod edit cannot desynchronize
     * a copy from the oracle or from the measurements that pinned the
     * recall floors. */
-  def modSample(idCol: Column, k: Int, seed: Long = 42L): Column = {
+  def modSample(idCol: Column, k: Int): Column = {
     // k = 0 would be pmod-by-zero → NULL predicate → every row silently
     // dropped: a misconfigured certificate probe would report an empty
     // sample as if the data were empty, instead of failing
     require(k >= 1, s"modSample: modulus k must be >= 1, got $k")
-    pmod(md5Priority(idCol, seed), lit(k)) === 0
+    pmod(md5Priority(idCol), lit(k)) === 0
   }
 
   /** [[deterministicSample]] at parts-per-million granularity — the
@@ -181,9 +180,9 @@ object Sampling {
     * (raising a group's k only ADDS documents — crucial for reproducible
     * mixture ablations over the same corpus). */
   def stratifiedTake(df: DataFrame, groupCol: String, idCol: String,
-                     kExpr: Column, seed: Long = 42L): DataFrame = {
+                     kExpr: Column): DataFrame = {
     requireFresh("stratifiedTake", df, "rn")
-    val w = Window.partitionBy(groupCol).orderBy(md5Priority(col(idCol), seed), col(idCol))
+    val w = Window.partitionBy(groupCol).orderBy(md5Priority(col(idCol)), col(idCol))
     df.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= kExpr)
       .drop("rn")
@@ -198,15 +197,14 @@ object Sampling {
     * and oracle-checkable, where ln() differs in final ulps across libms.
     * Plans as TakeOrdered (per-partition partial top-k, no global sort
     * materialization) — scales to any corpus. */
-  def ppsSample(df: DataFrame, idCol: String, weightCol: String, k: Int,
-                seed: Long = 42L): DataFrame = {
+  def ppsSample(df: DataFrame, idCol: String, weightCol: String, k: Int): DataFrame = {
     requireFresh("ppsSample", df, "__pr")
     // fail fast on w <= 0 (u/w would sort garbage first, silently): the
     // guard lives in the value path so pruning can't drop it
     val w = when(col(weightCol) > 0, col(weightCol).cast("double"))
       .otherwise(raise_error(concat(lit(s"ppsSample: non-positive weight in $weightCol: "),
         col(weightCol).cast("string"))))
-    df.withColumn("__pr", md5Priority(col(idCol), seed).cast("double") / w)
+    df.withColumn("__pr", md5Priority(col(idCol)).cast("double") / w)
       .orderBy(col("__pr"), col(idCol))
       .limit(k)
       .drop("__pr")
@@ -225,8 +223,7 @@ object Sampling {
     * group size; at 100 TB keep groups domain-sized (the mixing use case)
     * rather than corpus-sized. */
   def budgetedTakePerGroup(df: DataFrame, groupCol: String, idCol: String,
-                           weightCol: String, budget: Long,
-                           seed: Long = 42L): DataFrame = {
+                           weightCol: String, budget: Long): DataFrame = {
     require(budget >= 0, s"budget must be >= 0, got $budget")
     requireFresh("budgetedTakePerGroup", df, "cum_w")
     // fail fast on w <= 0 (the ppsSample guard): a zero/negative weight
@@ -238,7 +235,7 @@ object Sampling {
         lit(s"budgetedTakePerGroup: non-positive weight in $weightCol: "),
         col(weightCol).cast("string"))))
     val w = Window.partitionBy(col(groupCol))
-      .orderBy(md5Priority(col(idCol), seed), col(idCol))
+      .orderBy(md5Priority(col(idCol)), col(idCol))
     df.withColumn("cum_w", sum(wgt).over(w))
       .filter(col("cum_w") <= budget)
   }
@@ -282,11 +279,11 @@ object Sampling {
     * are monotone in budget, the per-group priority order is fixed), so
     * mixture ablations stay comparable across budgets. */
   def temperatureMix(df: DataFrame, groupCol: String, idCol: String,
-                     budget: Long, seed: Long = 42L): DataFrame = {
+                     budget: Long): DataFrame = {
     requireFresh("temperatureMix", df, "target")
     val t = temperatureTargets(df, groupCol, budget).select(col(groupCol), col("target"))
     stratifiedTake(df.join(broadcast(t), Seq(groupCol)), groupCol, idCol,
-      col("target"), seed).drop("target")
+      col("target")).drop("target")
   }
 
   /** Deterministic train/val/test split: hash-range assignment adds a
@@ -298,15 +295,14 @@ object Sampling {
     * md5 bucket would be NULL, so every when() clause misses and the row
     * gets split = NULL — silently breaking disjoint-and-exhaustive and
     * vanishing from every filter(split === ...). */
-  def splitByHash(df: DataFrame, idCol: String, splits: Seq[(String, Int)],
-                  seed: Long = 42L): DataFrame = {
+  def splitByHash(df: DataFrame, idCol: String, splits: Seq[(String, Int)]): DataFrame = {
     require(splits.map(_._2).sum == 100, "split weights must sum to 100")
     requireFresh("splitByHash", df, "split")
     val id = when(col(idCol).isNotNull, col(idCol))
       .otherwise(raise_error(lit(
         s"splitByHash: null id in $idCol — the split would be NULL, " +
           "breaking the disjoint-and-exhaustive contract")))
-    val bucket = pmod(md5Priority(id, seed), lit(100))
+    val bucket = pmod(md5Priority(id), lit(100))
     val expr = splits.tail.foldLeft((when(bucket < splits.head._2, splits.head._1),
       splits.head._2)) { case ((acc, cum), (name, w)) =>
       (acc.when(bucket < cum + w, name), cum + w)
@@ -325,11 +321,10 @@ object Sampling {
     * Scale shape: the rank window partitions BY SHARD, so each shard
     * sorts independently (max task = corpus/shards rows) — never a global
     * order-by; writers then emit one file per shard. */
-  def trainOrder(df: DataFrame, idCol: String, shards: Int,
-                 seed: Long = 42L): DataFrame = {
+  def trainOrder(df: DataFrame, idCol: String, shards: Int): DataFrame = {
     require(shards >= 1, s"shards must be >= 1, got $shards")
     requireFresh("trainOrder", df, "shard", "ord")
-    val pri = md5Priority(col(idCol), seed)
+    val pri = md5Priority(col(idCol))
     val w = Window.partitionBy(col("shard")).orderBy(pri, col(idCol))
     df.withColumn("shard", pmod(pri, lit(shards)).cast("int"))
       .withColumn("ord", row_number().over(w).cast("long"))
@@ -348,14 +343,14 @@ object Sampling {
     * it fits) plus the same stateless md5-bucket projection as
     * [[splitByHash]]. Output: input columns + split. */
   def splitByCluster(df: DataFrame, clusters: DataFrame, idCol: String,
-                     splits: Seq[(String, Int)], seed: Long = 42L): DataFrame = {
+                     splits: Seq[(String, Int)]): DataFrame = {
     requireFresh("splitByCluster", df, "__cid", "__rep")
     val cl = clusters.select(col("doc_id").as("__cid"), col("cluster").as("__rep"))
     splitByHash(
       df.join(cl, col(idCol) === col("__cid"), "left")
         .withColumn("__rep", coalesce(col("__rep"), col(idCol)))
         .drop("__cid"),
-      "__rep", splits, seed)
+      "__rep", splits)
       .drop("__rep")
   }
 }

@@ -102,22 +102,21 @@ object Similarity {
     * candidate pairs dedup BEFORE scoring, so each (qid, cid) is scored
     * once no matter how many tables co-bucket it.
     *
-    * `dim = 0` (default) infers the embedding width from the data — a
-    * mismatched fixed dim would null every hyperplane dot product, collapse
-    * every vector into bucket 0, and silently degenerate the equi-join into
-    * the full cross product this operator exists to avoid; a row whose
-    * width differs from the inferred one fails fast in the value path
-    * (same contract as [[Dedup.embeddingNearDupsBlocked]]). */
+    * The embedding width is inferred from the data — a mismatched fixed
+    * dim would null every hyperplane dot product, collapse every vector
+    * into bucket 0, and silently degenerate the equi-join into the full
+    * cross product this operator exists to avoid; a row whose width
+    * differs from the inferred one fails fast in the value path (same
+    * contract as [[Dedup.embeddingNearDupsBlocked]]). */
   def lshTopK(candidates: DataFrame, queries: DataFrame, k: Int,
-              nbits: Int = 8, dim: Int = 0, tables: Int = 1): DataFrame = {
+              nbits: Int = 8, tables: Int = 1): DataFrame = {
     require(tables >= 1, s"lshTopK: tables must be >= 1, got $tables")
     // infer from the first row with a non-null embedding; an empty (or
     // all-null-embedding) candidate set can never produce a match, so it
     // yields an empty result with the full output schema instead of the
     // head()-on-empty NoSuchElementException the inference would throw
-    val inferred = if (dim > 0) Some(dim)
-      else candidates.select(size(col("embedding")).as("__d"))
-        .filter(col("__d").isNotNull).head(1).headOption.map(_.getInt(0))
+    val inferred = candidates.select(size(col("embedding")).as("__d"))
+      .filter(col("__d").isNotNull).head(1).headOption.map(_.getInt(0))
     if (inferred.isEmpty) {
       // no fabricated dim, no raise_error in the plan: both sides emptied,
       // schema derived from the same rank tail as the non-empty path

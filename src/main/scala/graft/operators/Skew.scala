@@ -16,25 +16,15 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
-  /** Equi-join `big ⋈ small` on `bigKey == smallKey`, hot-key safe.
-    * `small` is replicated `buckets`× — keep it dimension-sized.
-    *
-    * Inner/left/semi/anti only: replication preserves those (every big row
-    * still meets every matching small row exactly once), but a right/full
-    * outer join would emit each UNMATCHED small-side row `buckets` times
-    * (one null-extended row per replica) — rejected rather than silently
-    * wrong. */
+  /** Inner equi-join `big ⋈ small` on `bigKey == smallKey`, hot-key safe.
+    * `small` is replicated `buckets`× — keep it dimension-sized. Every big
+    * row still meets every matching small row exactly once. */
   def saltedJoin(big: DataFrame, small: DataFrame, bigKey: String, smallKey: String,
-                 buckets: Int, joinType: String = "inner"): DataFrame = {
-    val allowed = Set("inner", "cross", "left", "leftouter", "left_outer",
-      "leftsemi", "left_semi", "semi", "leftanti", "left_anti", "anti")
-    require(allowed.contains(joinType.toLowerCase.replace(" ", "")),
-      s"saltedJoin: joinType '$joinType' would duplicate unmatched small-side rows " +
-        "(each replica null-extends); use inner/left/semi/anti")
+                 buckets: Int): DataFrame = {
     val b = big.withColumn("__salt", pmod(monotonically_increasing_id(), lit(buckets.toLong)))
     val s = small.withColumn("__salt",
       explode(sequence(lit(0L), lit(buckets.toLong - 1))))
-    b.join(s, b(bigKey) === s(smallKey) && b("__salt") === s("__salt"), joinType)
+    b.join(s, b(bigKey) === s(smallKey) && b("__salt") === s("__salt"))
       .drop("__salt")
   }
 

@@ -504,18 +504,18 @@ object TextAnalysis {
         graft.functions.ScalarOps.r4(
           col("n_terms").cast("double") / col("n_tok")).as("ttr"))
 
-  /** The 100 TB twin: HyperLogLog++ distinct terms (`rsd` relative error)
+  /** The 100 TB twin: HyperLogLog++ distinct terms (5% relative error)
     * in ONE map-side-combined shuffle on source with O(1) sketch state
     * per group — the vocabulary never shuffles. Deterministic for fixed
     * input (register merges are order-independent max), but approximate →
     * register rows-only; CurationOpsSpec pins it within tolerance of the
     * exact card. */
-  def lexicalDiversityApprox(docs: DataFrame, rsd: Double = 0.05): DataFrame =
+  def lexicalDiversityApprox(docs: DataFrame): DataFrame =
     docs.filter(hasTokens(col("text")))
       .select(col("source"), explode(tokens(col("text"))).as("term"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_tok"),
-        approx_count_distinct(col("term"), rsd).as("n_terms"))
+        approx_count_distinct(col("term"), 0.05).as("n_terms"))
       .select(col("source"), col("n_tok"), col("n_terms"),
         graft.functions.ScalarOps.r4(
           col("n_terms").cast("double") / col("n_tok")).as("ttr"))

@@ -1,7 +1,9 @@
 package graft.plans
 
-import graft.functions.CosineSim
-import org.apache.spark.sql.SparkSessionExtensions
+import graft.functions.{CosineSim, DotProduct, MetaExpr, MetaParser, RepetitionStatsExpr,
+  SrpBucketsExpr, TokenEntropyExpr}
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -105,49 +107,51 @@ object ReplaceCosineHof extends Rule[LogicalPlan] {
 }
 
 /** Production wiring: `--conf spark.sql.extensions=graft.plans.GraftExtensions`
-  * registers the engine's kernel SQL functions (cosine_sim, dot_product,
-  * repetition_stats, token_entropy, srp_buckets), every binary parser
-  * function in [[graft.functions.MetaParser.all]] (image_dims, audio_meta,
-  * …), and the HOF-cosine rewrite on every session — the full
-  * curation-function surface is usable from plain `spark.sql` without
-  * touching the Scala API. Tests inject the rule via
-  * `spark.experimental.extraOptimizations` (runtime-settable on an existing
-  * session) and functions via each kernel's `register` or
-  * [[graft.functions.MetaParser.register]]. */
+  * registers every function in [[GraftExtensions.functions]] and the
+  * HOF-cosine rewrite on every session — the full curation-function
+  * surface is usable from plain `spark.sql` without touching the Scala
+  * API. Tests inject the rule via `spark.experimental.extraOptimizations`
+  * (runtime-settable on an existing session) and the functions via
+  * [[GraftExtensions.register]]. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  private def fn(name: String, exprInfoCls: Class[_],
-                 builder: Seq[Expression] => Expression) =
-    (new org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-      new ExpressionInfo(exprInfoCls.getName, name), builder)
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => ReplaceCosineHof)
-    ext.injectFunction(fn("cosine_sim", classOf[CosineSim], exprs => {
-      require(exprs.length == 2,
-        s"cosine_sim requires exactly 2 arguments, got ${exprs.length}")
-      CosineSim(exprs(0), exprs(1))
-    }))
-    ext.injectFunction(fn("dot_product", classOf[graft.functions.DotProduct], exprs => {
-      require(exprs.length == 2,
-        s"dot_product requires exactly 2 arguments, got ${exprs.length}")
-      graft.functions.DotProduct(exprs(0), exprs(1))
-    }))
-    ext.injectFunction(fn("repetition_stats",
-      classOf[graft.functions.RepetitionStatsExpr], exprs => {
-        require(exprs.length == 1,
-          s"repetition_stats requires exactly 1 argument, got ${exprs.length}")
-        graft.functions.RepetitionStatsExpr(exprs.head)
-      }))
-    ext.injectFunction(fn("token_entropy",
-      classOf[graft.functions.TokenEntropyExpr], exprs => {
-        require(exprs.length == 1,
-          s"token_entropy requires exactly 1 argument, got ${exprs.length}")
-        graft.functions.TokenEntropyExpr(exprs.head)
-      }))
-    ext.injectFunction(fn("srp_buckets",
-      classOf[graft.functions.SrpBucketsExpr],
-      graft.functions.SrpBucketsExpr.fromSql))
-    graft.functions.MetaParser.all.foreach(p =>
-      ext.injectFunction(fn(p.name, classOf[graft.functions.MetaExpr], p.builder)))
+    GraftExtensions.functions.foreach(ext.injectFunction)
+  }
+}
+
+object GraftExtensions {
+  private type Builder = Seq[Expression] => Expression
+
+  /** A builder that refuses any argument count but `n`. */
+  private def exactly(name: String, n: Int)(mk: Builder): Builder = exprs => {
+    require(exprs.length == n,
+      s"$name requires exactly $n argument${if (n == 1) "" else "s"}, got ${exprs.length}")
+    mk(exprs)
+  }
+
+  private def fn(name: String, exprInfoCls: Class[_], builder: Builder) =
+    (FunctionIdentifier(name), new ExpressionInfo(exprInfoCls.getName, name), builder)
+
+  /** Every SQL function the engine adds, as (identifier, info, builder):
+    * the kernels (cosine_sim, dot_product, repetition_stats,
+    * token_entropy, srp_buckets) and each binary parser in
+    * [[MetaParser.all]] (image_dims, audio_meta, …). */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = Seq(
+    fn("cosine_sim", classOf[CosineSim],
+      exactly("cosine_sim", 2)(e => CosineSim(e(0), e(1)))),
+    fn("dot_product", classOf[DotProduct],
+      exactly("dot_product", 2)(e => DotProduct(e(0), e(1)))),
+    fn("repetition_stats", classOf[RepetitionStatsExpr],
+      exactly("repetition_stats", 1)(e => RepetitionStatsExpr(e.head))),
+    fn("token_entropy", classOf[TokenEntropyExpr],
+      exactly("token_entropy", 1)(e => TokenEntropyExpr(e.head))),
+    fn("srp_buckets", classOf[SrpBucketsExpr], SrpBucketsExpr.fromSql)) ++
+    MetaParser.all.map(p =>
+      fn(p.name, classOf[MetaExpr], exactly(p.name, 1)(e => MetaExpr(e.head, p))))
+
+  /** Register [[functions]] on an existing session. */
+  def register(spark: SparkSession): Unit = functions.foreach { case (id, info, builder) =>
+    spark.sessionState.functionRegistry.registerFunction(id, info, builder)
   }
 }

@@ -18,8 +18,6 @@ object Extensions {
 
   import Parity.QueryFn
 
-  /** Shared by qe52 (adaptive) and qe52b (frozen, self-fit): both forms
-    * produce the identical card, so both hash-check against one oracle. */
   /** qe28/qe28b's ONE deterministic query-set rule (every 97th doc's
     * first 4 tokens): the hybrid re-ranker is documented as "qe28's query
     * set", so the two must share the selection or silently decouple. */

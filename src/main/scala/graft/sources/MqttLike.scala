@@ -66,16 +66,22 @@ object MqttLike {
     * reader promotes it (a full [[repair]] on a stream's first offset
     * poll, then [[denseFrom]] at the frontier), and so does a publisher
     * on its first claim collision. Completing step 3 is idempotent, so a
-    * dead publisher can never wedge the topic's dense prefix. */
-  def publish(spoolDir: String, topic: String, payload: String): Long =
-    publishFrom(spoolDir, topic, payload, "", nextSeq(laneDirOf(spoolDir, topic, "")))
+    * dead publisher can never wedge the topic's dense prefix.
+    *
+    * The claim walk starts at this JVM's seq hint for the topic (the
+    * bridge's and the sink's per-message path: one predecessor probe, one
+    * tmp write, two links, one delete) and lists the topic only when the
+    * JVM has not published to it yet. */
+  def publish(spoolDir: String, topic: String, payload: String): Long = {
+    val dir = laneDirOf(spoolDir, topic, "")
+    val hint = seqHints.getOrDefault(dir.toAbsolutePath.normalize, 0L)
+    publishFrom(spoolDir, topic, payload, "", if (hint > 0) hint else nextSeq(dir))
+  }
 
-  /** Publish starting the claim walk at a caller-cached seq hint, skipping
-    * the per-message directory listing `publish` pays — the sink hot path:
-    * a ForeachWriter lists once in open() ([[nextSeqIn]]) and feeds each
-    * publish's returned seq + 1 back in. A stale hint only costs claim
-    * collisions, which the resync path below already absorbs. `substream`
-    * must be "" ([[laneDirOf]]). */
+  /** Publish starting the claim walk at `startSeq`. A hint behind the
+    * topic only costs claim collisions, which the resync path below
+    * absorbs; one ahead of it is caught by the predecessor probe.
+    * `substream` must be "" ([[laneDirOf]]). */
   def publishFrom(spoolDir: String, topic: String, payload: String,
                   substream: String, startSeq: Long): Long = {
     val dir = laneDirOf(spoolDir, topic, substream)
@@ -121,7 +127,8 @@ object MqttLike {
   }
 
   /** The next free seq of each topic this JVM has published to, keyed by
-    * absolute lane dir. A hint only: [[nextSeqIn]] validates it before use. */
+    * absolute lane dir. A hint only: [[publishFrom]] and [[nextSeqIn]]
+    * validate it before use. */
   private val seqHints = new java.util.concurrent.ConcurrentHashMap[Path, Long]()
 
   /** Step 3: expose a claimed slot as `<seq>.msg`. Racing a repairer is
@@ -261,9 +268,9 @@ object MqttLike {
     Paths.get(spoolDir, sanitize(topic))
   }
 
-  /** The next free seq in a topic, for a cached-seq publisher
-    * ([[publishFrom]]) at open() instead of per message. It starts from
-    * this JVM's last publish into the topic: valid if its predecessor claim
+  /** The next free seq in a topic, for a caller that drives
+    * [[publishFrom]] itself. It starts from this JVM's last publish into
+    * the topic: valid if its predecessor claim
     * exists (the same O(1) probe publishFrom makes), then walked forward
     * ([[denseFrom]]) over what other publishers added since. With no hint,
     * or one the topic no longer backs (directory deleted and recreated),

@@ -98,13 +98,13 @@ object MqttCodec {
   }
 
   /** Blocking read of one packet; throws EOFException on orderly close and
-    * IOException when the declared length exceeds `maxLen` (the reader
-    * must refuse BEFORE allocating — see [[MaxPacketBytes]]). */
-  def readPacket(in: DataInputStream, maxLen: Int = MaxPacketBytes): Packet = {
+    * IOException when the declared length exceeds [[MaxPacketBytes]] (the
+    * reader must refuse BEFORE allocating). */
+  def readPacket(in: DataInputStream): Packet = {
     val h = in.readUnsignedByte()
     val len = readRemainingLength(in)
-    if (len > maxLen)
-      throw new IOException(s"declared packet length $len exceeds cap $maxLen")
+    if (len > MaxPacketBytes)
+      throw new IOException(s"declared packet length $len exceeds cap $MaxPacketBytes")
     val body = new Array[Byte](len)
     in.readFully(body)
     Packet(h >>> 4, h & 0x0F, body)
@@ -518,8 +518,8 @@ class MqttWireClient(host: String, port: Int, clientId: String,
   * repair, and checkpoint resume apply unchanged to broker-fed topics.
   * The ack is sent only after the spool hard-link lands (the
   * subscribeLoop contract), so a bridge crash can duplicate but never
-  * lose — QoS 1. Spool seqs are cached per topic and walked forward
-  * ([[MqttLike.publishFrom]]) instead of re-listing the lane per message.
+  * lose — QoS 1. Each message goes through [[MqttLike.publish]], which
+  * starts from the JVM's seq hint instead of re-listing the lane.
   *
   * The bridge is the long-lived production ingress path, so a broker
   * outage must not permanently stop ingest: on any socket-level failure
@@ -549,11 +549,6 @@ class MqttSpoolBridge(host: String, port: Int, spoolDir: String,
   private val subscribed = new java.util.concurrent.CountDownLatch(1)
 
   private val thread = new Thread(() => {
-    // per-topic next-seq cache: list each lane ONCE on first sight, then
-    // walk forward — per-message nextSeq listings are O(spool) each,
-    // O(spool²) over the lane's lifetime. A stale hint after a crash only
-    // costs a claim collision, which publishFrom's resync absorbs.
-    val seqHints = scala.collection.mutable.Map.empty[String, Long]
     var attempt = 0
     while (!closed.get() && error == null) {
       val client = new MqttWireClient(host, port, clientId, credentials,
@@ -572,10 +567,7 @@ class MqttSpoolBridge(host: String, port: Int, spoolDir: String,
           subscribeCount.incrementAndGet()
           subscribed.countDown()
         }) { (topic, payload) =>
-          val hint = seqHints.getOrElse(topic,
-            MqttLike.nextSeqIn(spoolDir, topic, ""))
-          seqHints(topic) = MqttLike.publishFrom(spoolDir, topic,
-            new String(payload, StandardCharsets.UTF_8), "", hint) + 1
+          MqttLike.publish(spoolDir, topic, new String(payload, StandardCharsets.UTF_8))
           received.incrementAndGet()
         }
       } catch {
@@ -620,13 +612,13 @@ class MqttSpoolBridge(host: String, port: Int, spoolDir: String,
     * failed): the broker keeps no retained messages, so a message
     * published before this returns would be routed to nobody and silently
     * lost — every producer racing a fresh bridge must wait here first.
-    * Throws the terminal failure if the broker refused; on timeout the
+    * Throws the terminal failure if the broker refused; after 15 s the
     * most recent retryable error rides along as the cause. */
-  def awaitSubscribed(timeoutMs: Long = 15000): Unit = {
-    val ok = subscribed.await(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS)
+  def awaitSubscribed(): Unit = {
+    val ok = subscribed.await(15000, java.util.concurrent.TimeUnit.MILLISECONDS)
     failure.foreach(throw _)
     if (!ok) {
-      val e = new IllegalStateException(s"bridge did not subscribe within ${timeoutMs}ms")
+      val e = new IllegalStateException("bridge did not subscribe within 15000ms")
       Option(lastError).foreach(e.initCause)
       throw e
     }

@@ -35,10 +35,10 @@ object Sinks {
     * reference's one-broker-session model. Correct under concurrency
     * (atomic claims) but contended, so callers run it as one task
     * (`coalesce(1)`). It records no QoS: delivery is exactly-once either
-    * way (dense offsets + checkpoints). */
+    * way (dense offsets + checkpoints). Each row is one
+    * [[MqttLike.publish]], which starts from the JVM's seq hint. */
   class MqttLikePublishWriter(target: String, topic: String, qos: Int)
       extends ForeachWriter[Row] {
-    private var nextSeq = 0L
     @transient private var wire: MqttWireClient = _
     private def overWire: Boolean = target.startsWith("mqtt://")
     override def open(partitionId: Long, epochId: Long): Boolean = { // connect here
@@ -60,12 +60,6 @@ object Sinks {
         val nonce = java.util.UUID.randomUUID().toString.replace("-", "").take(20)
         wire = new MqttWireClient(host, port, s"gs-$nonce", creds)
         wire.connect()
-      } else {
-        // find the next seq ONCE per task (O(1) from this JVM's last
-        // publish into the topic, a listing only without one), then walk
-        // the cached seq forward: per-message listings are O(spool) each,
-        // O(spool²) over the topic's lifetime
-        nextSeq = MqttLike.nextSeqIn(target, topic, "")
       }
       true
     }
@@ -81,7 +75,7 @@ object Sinks {
         if (overWire)
           wire.publish(topic, payload.getBytes(java.nio.charset.StandardCharsets.UTF_8), qos)
         else
-          nextSeq = MqttLike.publishFrom(target, topic, payload, "", nextSeq) + 1
+          MqttLike.publish(target, topic, payload)
       }
     }
     override def close(errorOrNull: Throwable): Unit = // disconnect here

@@ -35,14 +35,14 @@ object Pipelines {
         StructField("value", DoubleType),
         StructField("unit", StringType))))))))))
 
-  /** dd consumer parse: JSON payload string → typed columns with the
+  /** dd consumer parse: JSON `payload` string → typed columns with the
     * reference's default-888.8-on-missing semantics; malformed JSON rows are
     * routed out by [[deadLetterSplit]] (ref `consumer.cpp:115-131`).
     * PERMISSIVE from_json yields an all-null struct (not null) on corrupt
     * input, so malformed-ness is detected via a corrupt-record column. */
-  def ddConsumer(payloads: DataFrame, payloadCol: String = "payload"): DataFrame =
+  def ddConsumer(payloads: DataFrame): DataFrame =
     payloads
-      .withColumn("j", from_json(col(payloadCol),
+      .withColumn("j", from_json(col("payload"),
         DdSchema.add("_corrupt_record", StringType),
         Map("columnNameOfCorruptRecord" -> "_corrupt_record")))
       .select(col("*"),
@@ -72,7 +72,7 @@ object Pipelines {
     (df.filter(goodPredicate), df.filter(!goodPredicate || goodPredicate.isNull))
 
   /** The HKO collection path (SURVEY §3.3, the §7 minimum slice):
-    * raw JSON document → parse → explode `temperature.data` → filter
+    * raw JSON `doc` → parse → explode `temperature.data` → filter
     * (place match, unit == "C") → project → enrich fetch timestamp →
     * `to_json` publish payload (ref `hko.cpp:94-130`).
     *
@@ -81,10 +81,9 @@ object Pipelines {
     * `fetchTs` stands in for "now" so tests are deterministic; production
     * passes `current_timestamp()`.
     */
-  def hko(raw: DataFrame, place: String, fetchTs: org.apache.spark.sql.Column,
-          docCol: String = "doc"): DataFrame =
+  def hko(raw: DataFrame, place: String, fetchTs: org.apache.spark.sql.Column): DataFrame =
     raw
-      .withColumn("j", from_json(col(docCol), HkoSchema))
+      .withColumn("j", from_json(col("doc"), HkoSchema))
       .select(col("j.temperature.recordTime").as("hko_timestamp"),
         posexplode(col("j.temperature.data")).as(Seq("pos", "d")))
       .filter(col("d.place") === place && col("d.unit") === "C")
@@ -105,8 +104,9 @@ object Pipelines {
       .select(isoFormat(fetchTs).as("fh_timestamp"), col("hko_timestamp"),
         col("temp_celsius"))
 
-  /** Streaming form of [[hko]]: stateless per-document projection — each
-    * poll body independently yields its (fetch ts, record time, reading),
+  /** Streaming form of [[hko]] over (doc, fetch_ts) rows: stateless
+    * per-document projection — each poll body independently yields its
+    * (fetch ts, record time, reading),
     * so it runs in Append mode with no aggregation state. "Last matching
     * place entry wins" is per-document in the reference (`hko.cpp:102-107`
     * scans one payload's array), which the batch form's groupBy emulates
@@ -114,14 +114,13 @@ object Pipelines {
     * `try_element_at(filter(...), -1)` is the direct expression of it.
     * Documents with no matching place/unit entry are dropped (ref logs and
     * skips publishing, `hko.cpp:108-111`). */
-  def hkoPerDoc(raw: DataFrame, place: String, docCol: String = "doc",
-                fetchTs: org.apache.spark.sql.Column = col("fetch_ts")): DataFrame =
+  def hkoPerDoc(raw: DataFrame, place: String): DataFrame =
     raw
-      .withColumn("j", from_json(col(docCol), HkoSchema))
+      .withColumn("j", from_json(col("doc"), HkoSchema))
       // materialize the parsed array behind its own projection: a HOF
       // lambda over a non-attribute child re-evaluates the parse per
       // element (interpreted, no CSE)
-      .select(fetchTs.as("_fts"), col("j.temperature.recordTime").as("hko_timestamp"),
+      .select(col("fetch_ts").as("_fts"), col("j.temperature.recordTime").as("hko_timestamp"),
         col("j.temperature.data").as("data"))
       // last-match selection via explode(slice(filter, -1, 1)): documents
       // with no matching entry explode to zero rows, so no Filter node
@@ -147,27 +146,28 @@ object Pipelines {
   def hkoPayloadCol(df: DataFrame): org.apache.spark.sql.Column =
     to_json(struct(df("fh_timestamp"), df("hko_timestamp"), df("temp_celsius")))
 
-  /** ch consumer parse: JSON payload → event ts + raw int16 tenths, with
+  /** ch consumer parse: JSON `payload` → event ts + raw int16 tenths, with
     * `parsed` flagging rows the module may publish. The reference skips a
     * sample it cannot parse (`ch.c:142-151`) rather than publishing a
     * partial object — to_json over all-null fields would otherwise emit
     * the non-null string "{}" downstream. Shared by the streaming module
     * and any batch/backfill caller, mirroring [[ddConsumer]]. */
-  def chParse(payloads: DataFrame, payloadCol: String = "payload"): DataFrame =
+  def chParse(payloads: DataFrame): DataFrame =
     payloads
-      .withColumn("j", from_json(col(payloadCol), ChSchema))
+      .withColumn("j", from_json(col("payload"), ChSchema))
       .withColumn("ts", isoParse(col("j.timestamp")))
       // round, not truncate: 21.9 parses as 21.899999..., *10 casts to
       // 218 and the module would republish 21.8 for an input of 21.9
       .withColumn("raw_tenths", round(col("j.temp_celsius") * 10).cast("int"))
       .withColumn("parsed", col("ts").isNotNull && col("raw_tenths").isNotNull)
 
-  /** ch pipeline: raw int16 tenths (sentinel 999 = read error, ref
-    * `ch.c:193-204`) → °C with 99.9 error value → publish payload. */
-  def ch(raw: DataFrame, rawCol: String = "raw_tenths", tsCol: String = "ts"): DataFrame =
+  /** ch pipeline: `raw_tenths` int16 (sentinel 999 = read error, ref
+    * `ch.c:193-204`) and `ts` → °C with 99.9 error value → publish
+    * payload. */
+  def ch(raw: DataFrame): DataFrame =
     raw.select(
-      isoFormat(col(tsCol)).as("timestamp"),
-      unitScale(col(rawCol)).as("temp_celsius"))
+      isoFormat(col("ts")).as("timestamp"),
+      unitScale(col("raw_tenths")).as("temp_celsius"))
 
   /** UPS telemetry decode (S4/T2-T4/T13): raw INA219 registers → volts/mA/W,
     * battery %, charge status (ref `module_rpi_ups_hat.c:130-262`). */

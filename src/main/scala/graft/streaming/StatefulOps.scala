@@ -155,15 +155,14 @@ object StatefulOps {
     * processing time, emits the sentinel 888.8 row exactly like the
     * reference resets its displays. The mutex-guarded shared state of the
     * reference becomes engine-managed per-key state. */
-  def stalenessWatchdog(readings: Dataset[Reading], toleranceMs: Long,
-                        sentinel: Double = 888.8): Dataset[WatchOut] = {
+  def stalenessWatchdog(readings: Dataset[Reading], toleranceMs: Long): Dataset[WatchOut] = {
     import readings.sparkSession.implicits._
     readings.groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout()) {
         (key: String, rows: Iterator[Reading], state: GroupState[WatchState]) =>
           if (state.hasTimedOut) {
             state.remove()
-            Iterator(WatchOut(key, sentinel, stale = true))
+            Iterator(WatchOut(key, 888.8, stale = true))
           } else {
             // (ts, value) tiebreak: bare maxBy on ts picks ts-tied rows in
             // shuffle-iterator order — nondeterministic across runs

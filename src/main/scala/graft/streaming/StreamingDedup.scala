@@ -65,11 +65,11 @@ object StreamingDedup {
     }
   }
 
-  /** docs(doc_id, text) stream → candidate near-dup pairs (da < db). */
-  def minhashCandidatesStream(docs: DataFrame, n: Int = 3, k: Int = 16,
-                              bands: Int = 4): Dataset[CandPair] = {
+  /** docs(doc_id, text) stream → candidate near-dup pairs (da < db),
+    * banded with n = 3, k = 16, bands = 4. */
+  def minhashCandidatesStream(docs: DataFrame): Dataset[CandPair] = {
     import docs.sparkSession.implicits._
-    val banded = Dedup.bandBuckets(Dedup.minhashSignatureRowwise(docs, n, k), k, bands)
+    val banded = Dedup.bandBuckets(Dedup.minhashSignatureRowwise(docs, 3, 16), 16, 4)
       .select(col("band").cast("int").as("band"), col("bucket").as("bucket"),
         col("doc_id")).as[BandDoc]
     banded.groupByKey(b => (b.band, b.bucket))

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Time-window aggregations shared by the batch parity queries (Q16/Q17)
   * and their Structured Streaming forms — one plan builder, two execution
-  * modes. In streaming, pass `watermark` so state is bounded (SURVEY X3's
-  * late-data rule maps to the same mechanism).
+  * modes. In streaming, pass `watermark` to [[tumbling]] or [[session]] so
+  * state is bounded (SURVEY X3's late-data rule maps to the same
+  * mechanism).
   */
 object WindowedAggs {
 
@@ -19,23 +20,20 @@ object WindowedAggs {
     watermark.fold(ev)(w => ev.withWatermark("ts", w))
   }
 
-  /** Tumbling windows per (window, event_type) — Q16. */
-  def tumbling(events: DataFrame, width: String = "10 minutes",
-               watermark: Option[String] = None): DataFrame =
+  /** 10-minute tumbling windows per (window, event_type) — Q16. */
+  def tumbling(events: DataFrame, watermark: Option[String] = None): DataFrame =
     agged(maybeWatermark(events, watermark)
-      .groupBy(window(col("ts"), width).as("w"), col("event_type")))
+      .groupBy(window(col("ts"), "10 minutes").as("w"), col("event_type")))
 
-  /** Sliding windows — Q17a. */
-  def sliding(events: DataFrame, width: String = "10 minutes",
-              slide: String = "5 minutes", watermark: Option[String] = None): DataFrame =
-    agged(maybeWatermark(events, watermark)
-      .groupBy(window(col("ts"), width, slide).as("w"), col("event_type")))
+  /** 10-minute windows sliding every 5 minutes — Q17a. */
+  def sliding(events: DataFrame): DataFrame =
+    agged(maybeWatermark(events, None)
+      .groupBy(window(col("ts"), "10 minutes", "5 minutes").as("w"), col("event_type")))
 
-  /** Session windows per user — Q17b. */
-  def session(events: DataFrame, gap: String = "30 minutes",
-              watermark: Option[String] = None): DataFrame =
+  /** Session windows per user, 30-minute gap — Q17b. */
+  def session(events: DataFrame, watermark: Option[String] = None): DataFrame =
     maybeWatermark(events, watermark)
-      .groupBy(session_window(col("ts"), gap).as("w"), col("user_id"))
+      .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
       .agg(count("*").as("cnt"))
 
   /** Render for the deterministic parity output: window start formatted

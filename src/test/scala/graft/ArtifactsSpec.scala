@@ -16,8 +16,7 @@ class ArtifactsSpec extends SparkTestBase {
 
   test("getOrFit fits exactly once and the read-back round-trips the fit frame") {
     import spark.implicits._
-    spark.conf.set("spark.graft.artifacts.dir", freshRoot())
-    try {
+    withConf("spark.graft.artifacts.dir" -> freshRoot()) {
       var fits = 0
       def fit = { fits += 1; Seq((1L, "a"), (2L, "b")).toDF("id", "v") }
       val first = Artifacts.getOrFit(spark, "spec_kind", "k1", fit)
@@ -32,14 +31,13 @@ class ArtifactsSpec extends SparkTestBase {
       val leaves = second.queryExecution.optimizedPlan.collectLeaves()
       assert(leaves.nonEmpty && leaves.forall(_.toString.toLowerCase.contains("parquet")),
         s"expected a parquet artifact scan, got: ${leaves.mkString("; ")}")
-    } finally spark.conf.unset("spark.graft.artifacts.dir")
+    }
   }
 
   test("cold start: a fresh store handle (new key map, same disk) reads, never refits") {
     import spark.implicits._
     val root = freshRoot()
-    spark.conf.set("spark.graft.artifacts.dir", root)
-    try {
+    withConf("spark.graft.artifacts.dir" -> root) {
       var fits = 0
       def fit = { fits += 1; Seq((7L, 0.5)).toDF("id", "x") }
       Artifacts.getOrFit(spark, "spec_cold", "k1", fit)
@@ -53,7 +51,7 @@ class ArtifactsSpec extends SparkTestBase {
       // and the store itself, asked again, still serves from disk
       Artifacts.getOrFit(spark, "spec_cold", "k1", fit)
       assert(fits == 1)
-    } finally spark.conf.unset("spark.graft.artifacts.dir")
+    }
   }
 
   test("fingerprint keying: touching the input moves the key; params move the key") {
@@ -72,8 +70,7 @@ class ArtifactsSpec extends SparkTestBase {
 
   test("store stays bounded: old keys prune once the per-kind cap is passed") {
     import spark.implicits._
-    spark.conf.set("spark.graft.artifacts.dir", freshRoot())
-    try {
+    withConf("spark.graft.artifacts.dir" -> freshRoot()) {
       // cap raised 8 → 16 in r15 (the media_key_set evolution chain holds
       // 3 live keys per scale factor; 8 was no longer above 3 × 3 SFs)
       (1 to 20).foreach { i =>
@@ -85,14 +82,13 @@ class ArtifactsSpec extends SparkTestBase {
         .map(_.getName).filterNot(_.startsWith(".tmp-"))
       assert(left.length <= 16, s"store grew past the cap: ${left.length} keys")
       assert(left.contains("k20"), "the freshest key must survive pruning")
-    } finally spark.conf.unset("spark.graft.artifacts.dir")
+    }
   }
 
   test("corrupt partial dest (no _SUCCESS) is replaced by the fresh fit, not a wedge") {
     import spark.implicits._
     val root = freshRoot()
-    spark.conf.set("spark.graft.artifacts.dir", root)
-    try {
+    withConf("spark.graft.artifacts.dir" -> root) {
       // simulate a prune that died mid-delete: dest exists as a directory
       // with data but no _SUCCESS marker. On (at least) local/HDFS-style
       // filesystems rename(tmp, existingDir) nests tmp INSIDE dest; the
@@ -111,14 +107,13 @@ class ArtifactsSpec extends SparkTestBase {
         "recovered artifact must carry the _SUCCESS marker")
       assert(!java.nio.file.Files.exists(dest.resolve("stale-part.parquet")),
         "stale partial content must not survive inside the recovered artifact")
-    } finally spark.conf.unset("spark.graft.artifacts.dir")
+    }
   }
 
   test("shard export round-trips: persisted payload bytes reproduce the manifest exactly") {
     import org.apache.spark.sql.functions._
     val root = freshRoot()
-    spark.conf.set("spark.graft.artifacts.dir", root)
-    try {
+    withConf("spark.graft.artifacts.dir" -> root) {
       val docs = Engine.Tables(spark, Sf0001).documents
         .filter(graft.operators.TextAnalysis.hasTokens(col("text")))
         .select(col("doc_id"), graft.operators.SeqPack.md5TokenIds(
@@ -150,7 +145,7 @@ class ArtifactsSpec extends SparkTestBase {
             s"shard $sh bin ${r.getAs[Long]("bin")}: non-final bin not exactly 2048 u16 tokens")
         }
       }
-    } finally spark.conf.unset("spark.graft.artifacts.dir")
+    }
   }
 
   test("frozen queries consume artifacts: second run of each fires zero fit-side jobs") {
@@ -161,8 +156,7 @@ class ArtifactsSpec extends SparkTestBase {
     // plan spelunking: artifact directories' mtimes don't change, and the
     // queries still hash-agree with their pre-artifact results implicitly
     // via CORRECTNESS — here we assert the store served every call.
-    spark.conf.set("spark.graft.artifacts.dir", freshRoot())
-    try {
+    withConf("spark.graft.artifacts.dir" -> freshRoot()) {
       val frozen = Seq("qe3d_knn_ivf_frozen", "qe7d_semantic_dedup_frozen",
         "qe47_ivf_occupancy", "qe52b_dup_spans_frozen", "qe54b_drift_cross_snapshot",
         "qe56c_cdc_dup_frozen", "qe58d_containment_frozen", "qe43_incremental_fuzzy",
@@ -182,6 +176,6 @@ class ArtifactsSpec extends SparkTestBase {
       assert(successMtimes == after1,
         "second run rewrote an artifact — a frozen query is still fitting")
       r1.foreach { case (q, n) => assert(n > 0, s"$q returned no rows") }
-    } finally spark.conf.unset("spark.graft.artifacts.dir")
+    }
   }
 }

@@ -165,7 +165,7 @@ class AudioMetaSpec extends SparkTestBase {
 
   test("expression + SQL registration agree with the JVM parser; nulls propagate") {
     import spark.implicits._
-    MetaParser.register(spark)
+    graft.plans.GraftExtensions.register(spark)
     val df = Seq((1L, wavMinimal), (2L, aiff), (3L, "nope".getBytes))
       .toDF("id", "payload")
     val viaCol = df.select(col("id"),

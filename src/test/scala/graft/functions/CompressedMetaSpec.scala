@@ -15,7 +15,7 @@ class CompressedMetaSpec extends SparkTestBase {
 
   test("mpeg_audio_meta + avc_sps_dims: expression and SQL agree; nulls propagate") {
     import spark.implicits._
-    MetaParser.register(spark)
+    graft.plans.GraftExtensions.register(spark)
     val mp3 = hex("FFFB9000" + "00" * 16)
     val sps = AvcSpsHeader.buildSps(77, 31, 1280, 720)
     val df = Seq((1L, mp3), (2L, sps), (3L, "neither".getBytes))
@@ -101,7 +101,7 @@ class CompressedMetaSpec extends SparkTestBase {
 
   test("adts_meta: expression and SQL agree; other families refuse") {
     import spark.implicits._
-    MetaParser.register(spark)
+    graft.plans.GraftExtensions.register(spark)
     val aac = hex("FFF15080011FFCAA")
     val mp3 = hex("FFFB9000" + "00" * 16)
     val df = Seq((1L, aac), (2L, mp3), (3L, "neither".getBytes))
@@ -193,7 +193,7 @@ class CompressedMetaSpec extends SparkTestBase {
   }
 
   test("synthetic FLAC corpus round-trip: planted params parse back exactly") {
-    MetaParser.register(spark)
+    graft.plans.GraftExtensions.register(spark)
     val docs = graft.Engine.Tables(spark, Sf0001).documents
     val parsed = graft.operators.Multimodal.syntheticFlacCorpus(docs)
       .selectExpr("doc_id", "flac_meta(payload) AS m") // SQL form on purpose
@@ -213,7 +213,7 @@ class CompressedMetaSpec extends SparkTestBase {
   }
 
   test("synthetic Ogg/Opus corpus round-trip: planted params parse back exactly") {
-    MetaParser.register(spark)
+    graft.plans.GraftExtensions.register(spark)
     val docs = graft.Engine.Tables(spark, Sf0001).documents
     val parsed = graft.operators.Multimodal.syntheticOggOpusCorpus(docs)
       .selectExpr("doc_id", "ogg_opus_meta(payload) AS m") // SQL form on purpose

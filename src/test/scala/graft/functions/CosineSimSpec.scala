@@ -20,7 +20,7 @@ class CosineSimSpec extends SparkTestBase {
   }
 
   test("SQL registration: cosine_sim usable from spark.sql") {
-    CosineSim.register(spark)
+    graft.plans.GraftExtensions.register(spark)
     Engine.Tables(spark, Sf0001).embeddings.createOrReplaceTempView("emb_cs")
     val n = spark.sql(
       """SELECT cosine_sim(a.embedding, b.embedding) AS c
@@ -34,7 +34,7 @@ class CosineSimSpec extends SparkTestBase {
     val df = Seq((Seq(1.0f, 2.0f), Seq(1.0f, 2.0f, 3.0f))).toDF("a", "b")
     val out = df.select(CosineSim.cosine_sim(col("a"), col("b"))).collect()
     assert(out.forall(_.isNullAt(0)), "mismatched lengths must yield null")
-    CosineSim.register(spark)
+    graft.plans.GraftExtensions.register(spark)
     val nullElem = spark.sql(
       "SELECT cosine_sim(array(1.0D, CAST(NULL AS DOUBLE)), array(1.0D, 2.0D)) AS c")
     assert(nullElem.head().isNullAt(0), "null element must yield null")
@@ -61,14 +61,13 @@ class CosineSimSpec extends SparkTestBase {
     // With ANSI off both forms return null. failOnError is captured at
     // expression construction (like Divide's evalMode), so build the
     // columns after the conf flips.
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try {
+    withConf("spark.sql.ansi.enabled" -> "false") {
       val rows = df.select(
         CosineSim.cosine_sim(col("a"), col("b")).as("fused"),
         VectorOps.cosine(col("a"), col("b")).as("composed")).collect()
       assert(rows.forall(r => r.isNullAt(0) && r.isNullAt(1)),
         "non-ANSI zero norm must be null in both forms")
-    } finally spark.conf.set("spark.sql.ansi.enabled", "true")
+    }
   }
 
   test("fused dot product == composable dot, bit-exact; null on mismatch") {
@@ -127,10 +126,7 @@ class CosineSimSpec extends SparkTestBase {
   }
 
   test("SQL registration: the whole kernel-function surface resolves from spark.sql") {
-    DotProduct.register(spark)
-    RepetitionStatsExpr.register(spark)
-    TokenEntropyExpr.register(spark)
-    SrpBucketsExpr.register(spark)
+    graft.plans.GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d,
         |       repetition_stats(array('a','a','b')).dup_word_frac AS rep,
@@ -146,7 +142,7 @@ class CosineSimSpec extends SparkTestBase {
   }
 
   test("srp_buckets SQL builder rejects non-literal knob arguments") {
-    SrpBucketsExpr.register(spark)
+    graft.plans.GraftExtensions.register(spark)
     val e = intercept[Exception](spark.sql(
       "SELECT srp_buckets(array(1.0D), cast(rand()*2 AS INT) + 1, 4, 1, 42)").collect())
     assert(e.getMessage.contains("integer literal"), e.getMessage)

@@ -110,7 +110,7 @@ class ImageDimsSpec extends SparkTestBase {
 
   test("expression + SQL registration agree with the JVM parser; nulls propagate") {
     import spark.implicits._
-    MetaParser.register(spark)
+    graft.plans.GraftExtensions.register(spark)
     val df = Seq(
       (1L, png1x1), (2L, jpegBaseline), (3L, gif), (4L, "nope".getBytes))
       .toDF("id", "payload")

@@ -87,7 +87,7 @@ class Utf8StatsSpec extends SparkTestBase {
 
   test("expression + SQL registration agree with the JVM scanner") {
     import spark.implicits._
-    MetaParser.register(spark)
+    graft.plans.GraftExtensions.register(spark)
     val df = Seq((1L, "héllo".getBytes("UTF-8")), (2L, hex("FF 41")),
       (3L, null.asInstanceOf[Array[Byte]])).toDF("id", "payload")
     val got = df.select(col("id"), Utf8Stats(col("payload")).as("u"))

@@ -80,7 +80,7 @@ class VideoMetaSpec extends SparkTestBase {
 
   test("expression + SQL registration agree with the JVM parser; nulls propagate") {
     import spark.implicits._
-    MetaParser.register(spark)
+    graft.plans.GraftExtensions.register(spark)
     val df = Seq((1L, mp4V0), (2L, mp4V1), (3L, "nope".getBytes))
       .toDF("id", "payload")
     val viaCol = df.select(col("id"),

@@ -441,8 +441,7 @@ class SimilaritySpec extends SparkTestBase {
     val rnd = new scala.util.Random(7)
     val bigRows = (0 until 512).toList.map(i => (i, Seq.fill(dim)(rnd.nextGaussian())))
     val bigCents = bigRows.toDF("cell", "centroid")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    withConf("spark.sql.codegen.fallback" -> "false") {
       val out = IvfIndex.assignInline(emb, bigCents, "embedding")
         .select(col("vec_id"), col("cell")).collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -457,7 +456,7 @@ class SimilaritySpec extends SparkTestBase {
         assert(out(r.getLong(0)) == want,
           s"512-cell assignment diverged for vec ${r.getLong(0)}")
       }
-    } finally spark.conf.set("spark.sql.codegen.fallback", "true")
+    }
     // kernel refuse semantics (bare expression, no checkedVectors guard):
     // dim mismatch, null element, null vector → null; equidistant tie →
     // the EARLIER cell id in the supplied order
@@ -703,8 +702,7 @@ class SimilaritySpec extends SparkTestBase {
   test("PQ codebook artifact: persistedCodebooks round-trips and serves the read-back") {
     val emb = Engine.Tables(spark, Sf0001).embeddings
     val dir = java.nio.file.Files.createTempDirectory("pq_art").toString
-    spark.conf.set("spark.graft.artifacts.dir", dir)
-    try {
+    withConf("spark.graft.artifacts.dir" -> dir) {
       val cents = IvfIndex.persistedCentroids(emb, s"$Sf0001/embeddings.parquet",
         "vec_id", "embedding", nlist = 8)
       val books = PqIndex.persistedCodebooks(emb, s"$Sf0001/embeddings.parquet",
@@ -742,7 +740,7 @@ class SimilaritySpec extends SparkTestBase {
         .collect().map(_.toString).toSeq
       assert(fromIndex == inline,
         "serving from the persisted index must equal encode-inline results")
-    } finally spark.conf.unset("spark.graft.artifacts.dir")
+    }
   }
 
 }

@@ -30,10 +30,9 @@ class SkewSpec extends SparkTestBase {
     // Force the shuffle path: broadcast would hide reducer distribution,
     // AQE's own skew splitting would rescue the control, and wider
     // reducers make the bound meaningful.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> "16") {
       val n = 20000L
       val hotCount = (n / 2).toInt // key 7 owns every even id
       val big = spark.range(n)
@@ -74,10 +73,6 @@ class SkewSpec extends SparkTestBase {
       assert(saltedMax <= hotCount / 2,
         s"salted join still concentrates the hot key: max task read $saltedMax " +
           s"of $hotCount hot rows")
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
     }
   }
 
@@ -90,17 +85,14 @@ class SkewSpec extends SparkTestBase {
     // thresholds scaled down to test size the same way the stage-metrics
     // test above scales its reducer count. forceOptimizeSkewedJoin stays
     // OFF: the point is that the DEFAULT decision logic fires.
-    val conf = Map(
+    withConf(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1", // force the shuffle join
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "100k",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "50k",
-      "spark.sql.shuffle.partitions" -> "16")
-    val saved = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.shuffle.partitions" -> "16") {
       // key 7 owns 90% of 60k rows; a ~100-byte payload makes the hot
       // map-output partition ~5 MB vs ~KB-sized siblings — far over both
       // the scaled threshold and factor x median
@@ -124,9 +116,6 @@ class SkewSpec extends SparkTestBase {
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"planted 90%-hot-key join did not trigger OptimizeSkewedJoin; executed plan:\n$plan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

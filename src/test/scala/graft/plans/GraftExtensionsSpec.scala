@@ -52,9 +52,7 @@ class GraftExtensionsSpec extends SparkTestBase {
     // rewritten kernel silently returned null where the HOF form's ANSI
     // Divide throws. The evalMode must be read out of the context.
     spark.experimental.extraOptimizations = Seq(ReplaceCosineHof)
-    val ansiWas = spark.conf.get("spark.sql.ansi.enabled")
-    try {
-      spark.conf.set("spark.sql.ansi.enabled", "true")
+    try withConf("spark.sql.ansi.enabled" -> "true") {
       def zeroNorm = Engine.Tables(spark, Sf0001).embeddings.limit(1)
         .select(transform(col("embedding"), _ => lit(0.0d)).as("a"),
           col("embedding").cast("array<double>").as("b"))
@@ -74,10 +72,7 @@ class GraftExtensionsSpec extends SparkTestBase {
       assert(code(rewritten).contains("DIVIDE_BY_ZERO") &&
         code(hof).contains("DIVIDE_BY_ZERO"),
         s"expected both forms to raise DIVIDE_BY_ZERO:\n${code(rewritten)}\n${code(hof)}")
-    } finally {
-      spark.experimental.extraOptimizations = Nil
-      spark.conf.set("spark.sql.ansi.enabled", ansiWas)
-    }
+    } finally spark.experimental.extraOptimizations = Nil
   }
 
   test("rewrite preserves HOF null semantics: mismatched lengths stay null") {

@@ -107,7 +107,9 @@ class SurfaceAuditSpec extends SparkTestBase {
     }.nonEmpty
   }
 
-  private def audit(plan: SparkPlan): (Boolean, Boolean, Boolean) = {
+  private type Hits = (Boolean, Boolean, Boolean)
+
+  private def audit(plan: SparkPlan): Hits = {
     val globalWindow = plan.collect {
       case w: WindowExec if w.partitionSpec.isEmpty => w
     }.nonEmpty
@@ -118,13 +120,23 @@ class SurfaceAuditSpec extends SparkTestBase {
     (globalWindow, cartesian, bnlj)
   }
 
+  /** Every registered query built ONCE, both tests reading the result:
+    * (name, audit of the visible pre-AQE plan, audit of each fit plan
+    * captured while the query was built). Constructing the query is what
+    * runs the fits, so capture wraps construction only; the visible plan
+    * is taken after it. Only the audit flags are kept, not the plans. */
+  private lazy val sweep: Seq[(String, Hits, Seq[Hits])] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val (df, fitPlans) = graft.PlanCapture.capture(fn(spark, Sf0001))
+      (name, audit(df.queryExecution.sparkPlan), fitPlans.map(audit))
+    }
+
   test("no registered query hides a global window / cartesian / nested-loop join " +
     "outside the justified allowlists") {
     val violations = scala.collection.mutable.ArrayBuffer.empty[String]
     val stale = scala.collection.mutable.ArrayBuffer.empty[String]
-    val hits = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val plan = fn(spark, Sf0001).queryExecution.sparkPlan
-      val (gw, cart, bnlj) = audit(plan)
+    val hits = sweep.map { case (name, visible, _) =>
+      val (gw, cart, bnlj) = visible
       if (gw && !globalWindowAllowed(name))
         violations += s"$name: empty-partition WindowExec (single-task global window)"
       if (cart && !cartesianAllowed(name))
@@ -151,17 +163,12 @@ class SurfaceAuditSpec extends SparkTestBase {
     // through graft.PlanCapture, so the PRE-truncation physical plan of
     // each eagerly-materialized fit stage is captured during query
     // construction and walked under the SAME three structural bans as the
-    // visible surface. Constructing the query is what runs the fits, so
-    // capture wraps construction only.
+    // visible surface (see [[sweep]]).
     val violations = scala.collection.mutable.ArrayBuffer.empty[String]
-    val hits = scala.collection.mutable.Map.empty[String, (Boolean, Boolean, Boolean)]
+    val hits = scala.collection.mutable.Map.empty[String, Hits]
     var captured = 0
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      graft.PlanCapture.startCapture()
-      fn(spark, Sf0001)
-      val fitPlans = graft.PlanCapture.stopCapture()
-      captured += fitPlans.size
-      val audits = fitPlans.map(audit)
+    sweep.foreach { case (name, _, audits) =>
+      captured += audits.size
       val gw = audits.exists(_._1); val cart = audits.exists(_._2)
       val bnlj = audits.exists(_._3)
       hits(name) = (gw, cart, bnlj)

@@ -64,15 +64,8 @@ class PackSplitProcessorV2(budget: Long,
 class StateEvolutionSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def withRocksDb[T](body: => T): T = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
   test("split-packing resumes from a v1 checkpoint under a v2 processor with an added state field") {
-    withRocksDb {
+    withConf(RocksDbStateStore) {
       val docs = Engine.Tables(spark, Sf0001).documents
         .select(col("doc_id"), graft.operators.TextAnalysis.tokenCount(col("text")).as("n_tok"))
         .withColumn("shard", col("doc_id") % 4)
@@ -140,7 +133,7 @@ class StateEvolutionSpec extends SparkTestBase {
     // kill/resume, so a doc arriving AFTER the restart still pairs with
     // members who arrived BEFORE it — the invariant a resumed crawl-dedup
     // pipeline actually depends on.
-    withRocksDb {
+    withConf(RocksDbStateStore) {
       val docs = Engine.Tables(spark, Sf0001).documents
       val want = graft.operators.Dedup.minhashCandidates(docs).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -189,7 +182,7 @@ class StateEvolutionSpec extends SparkTestBase {
     // spelling arriving AFTER the restart must still be dropped by a
     // content key its sibling registered BEFORE the kill — the invariant
     // a resumed crawl-ingest dedup actually depends on.
-    withRocksDb {
+    withConf(RocksDbStateStore) {
       val docs = Engine.Tables(spark, Sf0001).documents.limit(24)
       val media = graft.operators.Multimodal.mixedDupMediaCorpus(docs)
       val want = graft.queries.Capstones.crawlMediaDedup(media)
@@ -238,7 +231,7 @@ class StateEvolutionSpec extends SparkTestBase {
   }
 
   test("streaming packer: kill/resume mid-replay == uninterrupted batch pack manifest") {
-    withRocksDb {
+    withConf(RocksDbStateStore) {
       val docs = Engine.Tables(spark, Sf0001).documents
         .select(col("doc_id"), graft.operators.TextAnalysis.tokenCount(col("text")).as("n_tok"))
         .withColumn("shard", col("doc_id") % 4)
@@ -336,7 +329,7 @@ class StateEvolutionSpec extends SparkTestBase {
         Iterator.single(WatchOut(key, v, stale = true))
       }
     }
-    withRocksDb {
+    withConf(RocksDbStateStore) {
       val ckpt = java.nio.file.Files.createTempDirectory("ckpt_evo_wd").toString
       val input = MemoryStream[Reading](spark)
       val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[WatchOut]()

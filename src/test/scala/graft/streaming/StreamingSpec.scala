@@ -546,14 +546,12 @@ class WindowedAggsSpec extends SparkTestBase {
         TextAnalysis.tokenCount(col("text_clean")).as("n_tok"))
     // transformWithState requires the RocksDB provider (multiple column
     // families); scoped to this query like the other stateful-v2 tests
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDbStateStore) {
       val q = StreamingSeqPack.packSplitStream(streamed, 256L)
         .writeStream.format("memory").queryName("t_e2e")
         .outputMode(OutputMode.Append()).start()
       try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
     val got = spark.table("t_e2e")
       .orderBy("shard", "doc_id", "seg_idx").collect().map(_.toString).toSeq
     // BATCH twin: same stages, min-id exact dedup, batch split packer
@@ -790,75 +788,75 @@ class StreamingDedupSpec extends SparkTestBase {
   }
 
   test("streaming near-dup candidates over a replay == batch candidate set (E2 streaming)") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val docs = Engine.Tables(spark, Sf0001).documents
-    val want = Dedup.minhashCandidates(docs).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(want.nonEmpty, "testdata must contain candidate pairs")
+    withConf(RocksDbStateStore) {
+      val docs = Engine.Tables(spark, Sf0001).documents
+      val want = Dedup.minhashCandidates(docs).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(want.nonEmpty, "testdata must contain candidate pairs")
 
-    val input = MemoryStream[(Long, String)](spark)
-    val stream = StreamingDedup.minhashCandidatesStream(
-      input.toDF().toDF("doc_id", "text"))
-    val q = stream.writeStream.format("memory").queryName("t_sdedup")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // replay the corpus in three arrival waves: candidate pairs must not
-      // depend on which micro-batch introduced each member
-      val rows = docs.select("doc_id", "text").collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSeq
-      rows.grouped(math.max(1, rows.size / 3)).foreach { chunk =>
-        input.addData(chunk); q.processAllAvailable()
-      }
-      val got = spark.table("t_sdedup").as[StreamingDedup.CandPair].collect()
-        .map(p => (p.da, p.db)).toSet
-      assert(got == want,
-        s"stream candidates diverged: missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
-    } finally q.stop()
+      val input = MemoryStream[(Long, String)](spark)
+      val stream = StreamingDedup.minhashCandidatesStream(
+        input.toDF().toDF("doc_id", "text"))
+      val q = stream.writeStream.format("memory").queryName("t_sdedup")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        // replay the corpus in three arrival waves: candidate pairs must not
+        // depend on which micro-batch introduced each member
+        val rows = docs.select("doc_id", "text").collect()
+          .map(r => (r.getLong(0), r.getString(1))).toSeq
+        rows.grouped(math.max(1, rows.size / 3)).foreach { chunk =>
+          input.addData(chunk); q.processAllAvailable()
+        }
+        val got = spark.table("t_sdedup").as[StreamingDedup.CandPair].collect()
+          .map(p => (p.da, p.db)).toSet
+        assert(got == want,
+          s"stream candidates diverged: missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
+      } finally q.stop()
+    }
   }
 
   test("streaming MIN-ID survivor == batch under multi-partition, NON-id-ordered arrival (r16)") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // dup groups h1 {2,7,9} / h2 {5,6} / singleton h3 {11} / two refused
-    // (null-hash) rows {4,13} that must stay singletons, never merge
-    val batchDf = Seq((7L, "h1"), (2L, "h1"), (9L, "h1"), (5L, "h2"),
-      (6L, "h2"), (11L, "h3"), (13L, null.asInstanceOf[String]), (4L, null.asInstanceOf[String]))
-      .toDF("doc_id", "h")
-    val want = Dedup.minIdSurvivorByKey(batchDf, "h")
-      .filter(col("is_kept") === 1).select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(want == Set(2L, 5L, 11L, 13L, 4L))
+    withConf(RocksDbStateStore) {
+      // dup groups h1 {2,7,9} / h2 {5,6} / singleton h3 {11} / two refused
+      // (null-hash) rows {4,13} that must stay singletons, never merge
+      val batchDf = Seq((7L, "h1"), (2L, "h1"), (9L, "h1"), (5L, "h2"),
+        (6L, "h2"), (11L, "h3"), (13L, null.asInstanceOf[String]), (4L, null.asInstanceOf[String]))
+        .toDF("doc_id", "h")
+      val want = Dedup.minIdSurvivorByKey(batchDf, "h")
+        .filter(col("is_kept") === 1).select("doc_id")
+        .collect().map(_.getLong(0)).toSet
+      assert(want == Set(2L, 5L, 11L, 13L, 4L))
 
-    val input = MemoryStream[(Long, String)](spark)
-    // repartition(5) scatters every wave across partitions: within-batch
-    // encounter order is whatever the shuffle produces — the exact shape
-    // firstSeenByKey's id-ordered-single-partition contract excludes
-    val stream = StreamingDedup.minIdSurvivorStream(
-      input.toDF().toDF("doc_id", "h").repartition(5), "h")
-    val q = stream.writeStream.format("memory").queryName("t_minid")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // descending-id waves: every dup group's min arrives in the LAST
-      // wave that touches it, so first-seen would keep the WRONG row
-      input.addData(Seq((13L, null), (9L, "h1"), (7L, "h1"), (6L, "h2")))
-      q.processAllAvailable()
-      input.addData(Seq((11L, "h3"), (5L, "h2"), (4L, null)))
-      q.processAllAvailable()
-      input.addData(Seq((2L, "h1")))
-      q.processAllAvailable()
-      // append sink holds every improvement; min per key is the survivor
-      val fin = spark.table("t_minid").groupBy("key")
-        .agg(min("survivor_id").as("s"))
-      val got = fin.collect().map(_.getLong(1)).toSet
-      assert(got == want,
-        s"stream min-id survivors diverged: missing=${want -- got} extra=${got -- want}")
-      // the improvement trail must show h1's survivor being REPLACED
-      // (7 then 2) — proof the non-ordered case was actually exercised
-      val h1Trail = spark.table("t_minid").filter(col("key") === "h1")
-        .select("survivor_id").collect().map(_.getLong(0)).toSet
-      assert(h1Trail == Set(7L, 2L))
-    } finally q.stop()
+      val input = MemoryStream[(Long, String)](spark)
+      // repartition(5) scatters every wave across partitions: within-batch
+      // encounter order is whatever the shuffle produces — the exact shape
+      // firstSeenByKey's id-ordered-single-partition contract excludes
+      val stream = StreamingDedup.minIdSurvivorStream(
+        input.toDF().toDF("doc_id", "h").repartition(5), "h")
+      val q = stream.writeStream.format("memory").queryName("t_minid")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        // descending-id waves: every dup group's min arrives in the LAST
+        // wave that touches it, so first-seen would keep the WRONG row
+        input.addData(Seq((13L, null), (9L, "h1"), (7L, "h1"), (6L, "h2")))
+        q.processAllAvailable()
+        input.addData(Seq((11L, "h3"), (5L, "h2"), (4L, null)))
+        q.processAllAvailable()
+        input.addData(Seq((2L, "h1")))
+        q.processAllAvailable()
+        // append sink holds every improvement; min per key is the survivor
+        val fin = spark.table("t_minid").groupBy("key")
+          .agg(min("survivor_id").as("s"))
+        val got = fin.collect().map(_.getLong(1)).toSet
+        assert(got == want,
+          s"stream min-id survivors diverged: missing=${want -- got} extra=${got -- want}")
+        // the improvement trail must show h1's survivor being REPLACED
+        // (7 then 2) — proof the non-ordered case was actually exercised
+        val h1Trail = spark.table("t_minid").filter(col("key") === "h1")
+          .select("survivor_id").collect().map(_.getLong(0)).toSet
+        assert(h1Trail == Set(7L, 2L))
+      } finally q.stop()
+    }
   }
 
   test("streaming contamination over a replay == batch contamination (stream-static probe)") {
@@ -1067,34 +1065,34 @@ class StreamingDedupSpec extends SparkTestBase {
 
   test("streaming MIN-ID crawl dedup over a REVERSED replay == batch survivors " +
     "(arbitrary arrival: each dup group's min-id spelling arrives LAST, r16)") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val docs = graft.Engine.Tables(spark, Sf0001).documents.limit(24)
-    val media = graft.operators.Multimodal.mixedDupMediaCorpus(docs)
-    val want = graft.queries.Capstones.crawlMediaDedup(media)
-      .filter(col("is_kept") === 1).select("doc_id").collect()
-      .map(_.getLong(0)).toSet
+    withConf(RocksDbStateStore) {
+      val docs = graft.Engine.Tables(spark, Sf0001).documents.limit(24)
+      val media = graft.operators.Multimodal.mixedDupMediaCorpus(docs)
+      val want = graft.queries.Capstones.crawlMediaDedup(media)
+        .filter(col("is_kept") === 1).select("doc_id").collect()
+        .map(_.getLong(0)).toSet
 
-    val input = MemoryStream[(Long, Array[Byte])](spark)
-    val q = graft.queries.Capstones.crawlMediaDedupStreamMinId(
-        input.toDF().toDF("doc_id", "payload"))
-      .writeStream.format("memory").queryName("t_crawlminid")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // DESCENDING id replay: the batch survivor (min id) of every dup
-      // group is the last spelling to arrive — firstSeenByKey would keep
-      // the max-id row here, which is exactly the contract gap the min-id
-      // twin closes
-      val rows = media.select("doc_id", "payload").orderBy(col("doc_id").desc)
-        .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]]("payload"))).toSeq
-      rows.grouped(3).foreach { chunk =>
-        input.addData(chunk); q.processAllAvailable()
-      }
-      val got = spark.table("t_crawlminid").groupBy("key")
-        .agg(min("survivor_id").as("s")).collect().map(_.getLong(1)).toSet
-      assert(got == want,
-        s"reversed-replay min-id crawl dedup diverged: missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
-    } finally q.stop()
+      val input = MemoryStream[(Long, Array[Byte])](spark)
+      val q = graft.queries.Capstones.crawlMediaDedupStreamMinId(
+          input.toDF().toDF("doc_id", "payload"))
+        .writeStream.format("memory").queryName("t_crawlminid")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        // DESCENDING id replay: the batch survivor (min id) of every dup
+        // group is the last spelling to arrive — firstSeenByKey would keep
+        // the max-id row here, which is exactly the contract gap the min-id
+        // twin closes
+        val rows = media.select("doc_id", "payload").orderBy(col("doc_id").desc)
+          .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]]("payload"))).toSeq
+        rows.grouped(3).foreach { chunk =>
+          input.addData(chunk); q.processAllAvailable()
+        }
+        val got = spark.table("t_crawlminid").groupBy("key")
+          .agg(min("survivor_id").as("s")).collect().map(_.getLong(1)).toSet
+        assert(got == want,
+          s"reversed-replay min-id crawl dedup diverged: missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
+      } finally q.stop()
+    }
   }
 
   test("streaming PII scrub over a replay == batch (stateless projection)") {
@@ -1150,65 +1148,65 @@ class StreamingDedupSpec extends SparkTestBase {
   }
 
   test("streaming sequence packing over an ordered replay == batch packSharded") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val docs = Engine.Tables(spark, Sf0001).documents
-      .select(col("doc_id"), graft.operators.TextAnalysis.tokenCount(col("text")).as("n_tok"))
-      .withColumn("shard", col("doc_id") % 4)
-    val want = graft.operators.SeqPack.packSharded(docs, "shard", "doc_id", "n_tok", 2048L)
-      .select("shard", "doc_id", "bin").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(want.map(_._3).max > 0, "corpus must span multiple bins")
+    withConf(RocksDbStateStore) {
+      val docs = Engine.Tables(spark, Sf0001).documents
+        .select(col("doc_id"), graft.operators.TextAnalysis.tokenCount(col("text")).as("n_tok"))
+        .withColumn("shard", col("doc_id") % 4)
+      val want = graft.operators.SeqPack.packSharded(docs, "shard", "doc_id", "n_tok", 2048L)
+        .select("shard", "doc_id", "bin").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(want.map(_._3).max > 0, "corpus must span multiple bins")
 
-    val input = MemoryStream[(Long, Long, Long)](spark)
-    val stream = StreamingSeqPack.packStream(
-      input.toDF().toDF("shard", "doc_id", "n_tok"), 2048L)
-    val q = stream.toDF().writeStream.format("memory").queryName("t_spack")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // id-ordered arrival in three waves: packing is incremental, no
-      // repack of earlier waves may occur
-      val rows = docs.select("shard", "doc_id", "n_tok").orderBy("doc_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      rows.grouped(math.max(1, rows.size / 3)).foreach { chunk =>
-        input.addData(chunk); q.processAllAvailable()
-      }
-      val got = spark.table("t_spack").collect()
-        .map(r => (r.getAs[Long]("shard"), r.getAs[Long]("doc_id"), r.getAs[Long]("bin"))).toSet
-      assert(got == want,
-        s"stream packing diverged: missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
-    } finally q.stop()
+      val input = MemoryStream[(Long, Long, Long)](spark)
+      val stream = StreamingSeqPack.packStream(
+        input.toDF().toDF("shard", "doc_id", "n_tok"), 2048L)
+      val q = stream.toDF().writeStream.format("memory").queryName("t_spack")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        // id-ordered arrival in three waves: packing is incremental, no
+        // repack of earlier waves may occur
+        val rows = docs.select("shard", "doc_id", "n_tok").orderBy("doc_id").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+        rows.grouped(math.max(1, rows.size / 3)).foreach { chunk =>
+          input.addData(chunk); q.processAllAvailable()
+        }
+        val got = spark.table("t_spack").collect()
+          .map(r => (r.getAs[Long]("shard"), r.getAs[Long]("doc_id"), r.getAs[Long]("bin"))).toSet
+        assert(got == want,
+          s"stream packing diverged: missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
+      } finally q.stop()
+    }
   }
 
   test("streaming split-packing over an ordered replay == batch packSplitSharded (qe11d)") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val docs = Engine.Tables(spark, Sf0001).documents
-      .select(col("doc_id"), graft.operators.TextAnalysis.tokenCount(col("text")).as("n_tok"))
-      .withColumn("shard", col("doc_id") % 4)
-    val want = graft.operators.SeqPack
-      .packSplitSharded(docs, "shard", "doc_id", "n_tok", 2048L)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getAs[Long]("seg_idx"),
-        r.getAs[Long]("bin"), r.getAs[Long]("n_tok"))).toSet
-    assert(want.exists(_._3 > 0), "corpus must contain at least one straddling doc")
-
-    val input = MemoryStream[(Long, Long, Long)](spark)
-    val stream = StreamingSeqPack.packSplitStream(
-      input.toDF().toDF("shard", "doc_id", "n_tok"), 2048L)
-    val q = stream.toDF().writeStream.format("memory").queryName("t_spsplit")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      val rows = docs.select("shard", "doc_id", "n_tok").orderBy("doc_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      rows.grouped(math.max(1, rows.size / 3)).foreach { chunk =>
-        input.addData(chunk); q.processAllAvailable()
-      }
-      val got = spark.table("t_spsplit").collect()
-        .map(r => (r.getAs[Long]("shard"), r.getAs[Long]("doc_id"), r.getAs[Long]("seg_idx"),
+    withConf(RocksDbStateStore) {
+      val docs = Engine.Tables(spark, Sf0001).documents
+        .select(col("doc_id"), graft.operators.TextAnalysis.tokenCount(col("text")).as("n_tok"))
+        .withColumn("shard", col("doc_id") % 4)
+      val want = graft.operators.SeqPack
+        .packSplitSharded(docs, "shard", "doc_id", "n_tok", 2048L)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getAs[Long]("seg_idx"),
           r.getAs[Long]("bin"), r.getAs[Long]("n_tok"))).toSet
-      assert(got == want,
-        s"stream split-packing diverged: missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
-    } finally q.stop()
+      assert(want.exists(_._3 > 0), "corpus must contain at least one straddling doc")
+
+      val input = MemoryStream[(Long, Long, Long)](spark)
+      val stream = StreamingSeqPack.packSplitStream(
+        input.toDF().toDF("shard", "doc_id", "n_tok"), 2048L)
+      val q = stream.toDF().writeStream.format("memory").queryName("t_spsplit")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        val rows = docs.select("shard", "doc_id", "n_tok").orderBy("doc_id").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+        rows.grouped(math.max(1, rows.size / 3)).foreach { chunk =>
+          input.addData(chunk); q.processAllAvailable()
+        }
+        val got = spark.table("t_spsplit").collect()
+          .map(r => (r.getAs[Long]("shard"), r.getAs[Long]("doc_id"), r.getAs[Long]("seg_idx"),
+            r.getAs[Long]("bin"), r.getAs[Long]("n_tok"))).toSet
+        assert(got == want,
+          s"stream split-packing diverged: missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
+      } finally q.stop()
+    }
   }
 
   test("streaming leakage audit over a replay == batch overlapFraction") {
