@@ -27,9 +27,9 @@ object IvfIndex {
     * points for stable centroids, not the corpus (FAISS trains IVF
     * quantizers the same way); ASSIGNMENT still covers every vector via
     * one codegen'd transform pass. Below the cap the sample is the whole
-    * input, so small-scale results are unchanged. */
+    * input, so small-scale results are unchanged. The fit runs at seed 42. */
   def build(vectors: DataFrame, idCol: String, vecCol: String, nlist: Int,
-            seed: Long = 42L, nHint: Long = 0L): (DataFrame, DataFrame) = {
+            nHint: Long = 0L): (DataFrame, DataFrame) = {
     val spark = vectors.sparkSession
     import spark.implicits._
     val withVec = vectors.withColumn("__v",
@@ -45,7 +45,7 @@ object IvfIndex {
       // linearly with the corpus. ppm holds the cap to ~MaxTrain rows
       // (up to n = 2*10^11; beyond that the 1-ppm floor re-enters)
       else Sampling.deterministicSamplePpm(withVec, idCol,
-        math.min(1000000, math.max(1, math.ceil(MaxTrain * 1e6 / n).toInt)), seed)
+        math.min(1000000, math.max(1, math.ceil(MaxTrain * 1e6 / n).toInt)))
     // training-sample-sized parallelism: the sample is <= MaxTrain rows
     // but INHERITS the corpus's partitioning — at 100 TB that is tens of
     // thousands of near-empty tasks per k-means iteration (20+ jobs per
@@ -56,7 +56,7 @@ object IvfIndex {
     // upstream and collapse the full-corpus sampling scan itself to a
     // handful of tasks, while this shuffle moves only the sample rows
     // (deterministic: index-based round-robin over deterministic input).
-    val model = new KMeans().setK(nlist).setSeed(seed).setMaxIter(20)
+    val model = new KMeans().setK(nlist).setSeed(42L).setMaxIter(20)
       .setFeaturesCol("__v").setPredictionCol("cell")
       .fit(train.repartition(trainPartitions(math.min(n, MaxTrain))))
     val assigned = model.transform(withVec).drop("__v")

@@ -27,13 +27,13 @@ object Sampling {
         s"generated column(s) ${generated.mkString("/")}; rename the input")
   }
 
-  /** 48-bit priority: first 12 hex chars of md5("seed:id"). 48 bits keeps
-    * the value positive in a SIGNED 64-bit integer on every engine (the
-    * full low 64 bits would compare differently as Spark's signed long vs
-    * DuckDB's UBIGINT). SQL twin:
-    * `('0x' || substr(md5(seed || ':' || CAST(id AS VARCHAR)), 1, 12))::BIGINT`. */
-  def md5Priority(idCol: Column, seed: Long = 42L): Column =
-    conv(substring(md5(concat(lit(s"$seed:"), idCol.cast("string")).cast("binary")), 1, 12),
+  /** 48-bit priority: first 12 hex chars of md5("42:id"), seed 42 for
+    * every sampler. 48 bits keeps the value positive in a SIGNED 64-bit
+    * integer on every engine (the full low 64 bits would compare
+    * differently as Spark's signed long vs DuckDB's UBIGINT). SQL twin:
+    * `('0x' || substr(md5('42:' || CAST(id AS VARCHAR)), 1, 12))::BIGINT`. */
+  def md5Priority(idCol: Column): Column =
+    conv(substring(md5(concat(lit("42:"), idCol.cast("string")).cast("binary")), 1, 12),
       16, 10).cast("long")
 
   case class BKItem(priority: Long, id: Long)
@@ -165,11 +165,10 @@ object Sampling {
     * 1%, so "train on at most 200k rows" over 10^9 rows would silently
     * sample 10^7 (1%), growing linearly with the corpus instead of
     * holding the cap. */
-  def deterministicSamplePpm(df: DataFrame, idCol: String, ppm: Int,
-                             seed: Long = 42L): DataFrame = {
+  def deterministicSamplePpm(df: DataFrame, idCol: String, ppm: Int): DataFrame = {
     require(ppm >= 0 && ppm <= 1000000,
       s"deterministicSamplePpm: ppm must be in [0,1000000], got $ppm")
-    df.filter(pmod(md5Priority(col(idCol), seed), lit(1000000)) < ppm)
+    df.filter(pmod(md5Priority(col(idCol)), lit(1000000)) < ppm)
   }
 
   /** Domain-mixing stratified take: per-group deterministic bottom-k by md5

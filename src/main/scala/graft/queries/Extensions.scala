@@ -315,7 +315,7 @@ object Extensions {
       val nH = Engine.parquetRowCount(s, path)
       val cents = graft.Artifacts.getOrFit(s, "ivf_centroids",
         graft.Artifacts.fitKey(s, Seq(path), s"vec_id-embedding-nlist8-seed42-mod5ne3-h$nH"),
-        IvfIndex.build(stored, "vec_id", "embedding", 8, 42L, nHint = nH)._2)
+        IvfIndex.build(stored, "vec_id", "embedding", 8, nHint = nH)._2)
       val base = graft.Artifacts.getOrFit(s, "ivf_postings",
         graft.Artifacts.fitKey(s, Seq(path), s"mod5ne3-base-nlist8-h$nH"),
         IvfIndex.assignInline(stored, cents, "embedding"))

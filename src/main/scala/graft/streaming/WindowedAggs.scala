@@ -27,7 +27,7 @@ object WindowedAggs {
 
   /** 10-minute windows sliding every 5 minutes — Q17a. */
   def sliding(events: DataFrame): DataFrame =
-    agged(maybeWatermark(events, None)
+    agged(graft.Engine.normalizeEventTime(events)
       .groupBy(window(col("ts"), "10 minutes", "5 minutes").as("w"), col("event_type")))
 
   /** Session windows per user, 30-minute gap — Q17b. */
